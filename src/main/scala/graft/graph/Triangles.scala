@@ -88,19 +88,27 @@ object Triangles {
     * triangle contributes once to each of its three corners.
     *
     * Plan shape (r20, guide §2.4/§3.1 — was 34 Exchanges / 4 chained
-    * SMJs): `deg` and `oriented` are each multi-consumer frames (2 and
-    * 3 consumers), so both are EAGER CHECKPOINTS — the degree
-    * union-aggregate and the two attach joins run once instead of once
-    * per downstream reference. The attach joins and the closing join
-    * dispatch on MEASURED sizes (the sizedSemiJoin doctrine — the
-    * counts are scalar jobs over already-materialized checkpoint
-    * blocks): a node table ≤ `maxBroadcastNodes` broadcasts (degree
-    * rows are two longs; the 4M default is ~64 MB built), an edge
-    * table ≤ `maxBroadcastEdges` broadcasts the closing side; past
-    * either bound the merge hint pins sort-merge, the strategy that
-    * survives arbitrary growth. `oriented` is REPARTITIONED BY src
-    * before its checkpoint, so the wedge self-join consumes one
-    * baked-in exchange from both sides instead of shuffling twice.
+    * SMJs): the edge frame is ONE eager checkpoint, and ONE scalar
+    * `count()` over its blocks drives every tier decision. Nodes ≤
+    * 2·edges, so `2·nEdges ≤ maxBroadcastNodes` certifies the degree
+    * broadcast without a second count job (degree rows are two longs;
+    * the 4M default is ~64 MB built): both degree attach joins
+    * are then broadcast hash joins whose identical build subtrees
+    * dedupe via ReuseExchange, so `deg` is computed once with no
+    * checkpoint. Past that bound (the merge tier) the attach joins are
+    * merge-hinted and `deg` alone is an eager checkpoint, so the
+    * union-aggregate runs once instead of once per attach join. The
+    * closing join broadcasts the oriented edge list while `nEdges ≤
+    * maxBroadcastEdges` and is merge-hinted past it. Only the wedge
+    * self-join — the algorithm's inherent quadratic term — shuffles
+    * at every size.
+    *
+    * REJECTED (r20, measured): repartitioning `oriented` by src and
+    * eagerly checkpointing it, so the wedge self-join would consume
+    * one baked-in exchange. It measured 3.34/3.59 s vs 3.02 s at
+    * sf0.1 — the checkpoint materialization cost more than the
+    * recompute it saved, since the broadcast builds are map-side and
+    * reused (SCALE.md §14).
     */
   def triangleCounts(edges: DataFrame, srcCol: String,
                      dstCol: String,

@@ -34,7 +34,7 @@ object CrawlCurate {
     * Deliberately NO token-count kernel here: a custom-codegen kernel
     * in this chain lands in BOTH branches of the exact-dedup join plan
     * and pays the F4 compile term twice per run (measured +2 s on
-    * q226 at the r18 close — Probe q226stages); [[curate]] computes
+    * q226 at the r18 close, by a stage-split run); [[curate]] computes
     * n_tokens in the PACK plan instead (once, post-checkpoint, the
     * original q226 placement), and the tick adds it as a separate
     * batch-grain column. */
@@ -71,7 +71,7 @@ object CrawlCurate {
     // expressions from it (on the one-shot path `quality` is ~10
     // tokenize passes per row; carrying it as a projected column
     // through the checkpoint measured +2 s on q226 at the r18 close,
-    // Probe q226stages — the filter evaluates it, the projection must
+    // by a stage-split run — the filter evaluates it, the projection must
     // not re-evaluate it)
     // (r19 note: a row_number()-window form of this dedup — one pass,
     // one exchange — was tried and REJECTED by the ×10 A/B: it ships

@@ -961,8 +961,8 @@ object Similarity {
   /** [[embeddingCorpusFlags]] behind the measured-width decision (the
     * F11 lesson applied at REGISTRATION time rather than after a ×100
     * measurement): one corpus count() picks the same occupancy-adaptive
-    * width a deployed tick's persisted index carries (tools/TickSpot
-    * runs 11 bits at 200k vectors), building the corpus band rows at
+    * width a deployed tick's persisted index carries (11 bits at 200k
+    * vectors, SCALE.md §8 addendum 4), building the corpus band rows at
     * that width. At or under the 4096-row floor hold the width equals
     * the fixed registration, so results are bit-identical at every
     * oracle scale — a fixed 5-bit width would leave corpus bucket

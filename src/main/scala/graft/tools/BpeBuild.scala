@@ -36,9 +36,6 @@ import graft.text.Bpe
   *    detected replay REBUILDS the offsets from the store instead of
   *    folding (healing the crash window between the token append and
   *    the offset fold).
-  *  - `tickspot <sfDir> <workDir> [waves=3] [merges=256]` — the §12
-  *    measurement harness: build once, stage doc-id-ordered waves,
-  *    time each tokenize tick and the one-shot recompute it replaces.
   *
   * Scale shape: the per-tick cost is the batch's segment kernel chain
   * (merge-count × map-only codegen passes, checkpoint-batched) plus
@@ -174,8 +171,7 @@ object BpeBuild {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: BpeBuild build <sfDir> <indexDir> " +
       "[merges] [blockTokens] | tokenize <indexDir> <sfDir> <outDir> | " +
-      "tokenizetick <indexDir> <stagingDir> <outDir> <ckptDir> | " +
-      "tickspot <sfDir> <workDir> [waves] [merges]")
+      "tokenizetick <indexDir> <stagingDir> <outDir> <ckptDir>")
     def arg(i: Int, d: Int) = if (args.length > i) args(i).toInt else d
     val spark = ToolSession.local()
     args(0) match {
@@ -195,42 +191,6 @@ object BpeBuild {
         tokenizeTick(spark, args(1), args(2), args(3), args(4))
         println(f"[bpebuild] tick drained in " +
           f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      case "tickspot" =>
-        val sfDir = args(1); val work = args(2)
-        val waves = arg(3, 3); val nMerges = arg(4, 256)
-        val fsPath = new org.apache.hadoop.fs.Path(work)
-        val fs = fsPath.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(fsPath, true)
-        val t0 = System.nanoTime()
-        build(spark, sfDir, s"$work/index", nMerges, 256)
-        println(f"[bpetick] build ($nMerges merges): " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-        val docs = graft.core.Tables.documents(spark, sfDir)
-          .select(col("doc_id"), col("text"), col("lang").as("shard"))
-        val n = docs.count()
-        // doc-id-ordered waves (the tick numbering contract): wave w
-        // carries the w-th id range by QUANTILE — scale corpora salt
-        // ids sparsely (ScaleGen IdStride), so value-ranges would put
-        // every doc in wave 0
-        val qs = docs.stat.approxQuantile("doc_id",
-          (1 until waves).map(_.toDouble / waves).toArray, 0.001)
-        val bounds = Array(Long.MinValue) ++ qs.map(_.toLong) :+ Long.MaxValue
-        for (w <- 0 until waves) {
-          docs.filter(col("doc_id") > lit(bounds(w)) &&
-              col("doc_id") <= lit(bounds(w + 1)))
-            .write.mode("append").parquet(s"$work/staging")
-          val t1 = System.nanoTime()
-          tokenizeTick(spark, s"$work/index", s"$work/staging",
-            s"$work/out", s"$work/ckpt")
-          val rows = spark.read.parquet(s"$work/out/tokens").count()
-          println(f"[bpetick] wave $w/$waves: tick wall " +
-            f"${(System.nanoTime() - t1) / 1e9}%.1f s, token store $rows rows")
-        }
-        val t2 = System.nanoTime()
-        val os = tokenize(spark, s"$work/index", sfDir, s"$work/oneshot")
-        println(f"[bpetick] one-shot tokenize of the full corpus (the " +
-          f"per-run cost ticks avoid): $os rows in " +
-          f"${(System.nanoTime() - t2) / 1e9}%.1f s")
     }
     spark.stop()
   }

@@ -36,7 +36,8 @@ import graft.sim.Similarity
   *   runMain graft.tools.IvfPqBuild retrain <rawsDir> <outDir> [iters=2]
   *   runMain graft.tools.IvfPqBuild probe <sfDir> <outDir> [nprobe=2] [k=3] [reps=1]
   *   runMain graft.tools.IvfPqBuild serve <reqDir> <outDir> [nprobe=2] [k=3] [rerank=0] [rawsDir]
-  *   runMain graft.tools.IvfPqBuild rerankspot <rawsDir> <outDir> [nprobe=2] [k=10] [R=100] [reps=3]
+  *   runMain graft.tools.IvfPqBuild ingesttick <stagingDir> <outDir> [nprobe=2] [k=3]
+  *   runMain graft.tools.IvfPqBuild compact - <outDir> [maxFilesPerBucket=4]
   *
   * Measured at ×100 (200k vectors, C=512, m=8 — SCALE.md §10): build
   * 27.8 s one-off; fresh-session first serve 10.3 s (SparkSession +
@@ -857,89 +858,6 @@ object IvfPqBuild {
         println(f"[ivfpq] compact: $b -> $a data files in " +
           f"${(System.nanoTime() - t0) / 1e9}%.1f s" +
           (if (b == a) " (threshold not crossed)" else ""))
-      case "compactspot" =>
-        // measurement harness (VERDICT r14 #3): simulate ~N accumulated
-        // tick appends (each = one bucket-aligned encode append of a
-        // small fresh batch — the append path ticks run, without the
-        // per-tick heldout probe), measure warm-ish probe latency on
-        // the fragmented table, compact, re-measure — the number that
-        // says what compaction buys a long-lived serving index
-        val nAppends = arg(3, 100)
-        val p = loadParams(spark, outDir)
-        val cents = Similarity.loadCentroids(spark, s"$outDir/centroids.parquet")
-        val pqCb = loadPqCodebook(spark, outDir)
-        val emb = Tables.embeddings(spark, sfDir)
-        val batch = emb.filter(col("vec_id") % 200 === 0)
-          .localCheckpoint(true)
-        val table = tableName(outDir)
-        openIndex(spark, outDir)
-        val t0 = System.nanoTime()
-        for (i <- 0 until nAppends) {
-          encodeFor(p.encoding,
-              batch.select((col("vec_id") + lit(2000000000L) * (i + 1))
-                .as("vec_id"), col("embedding")),
-              p.dims, p.m, p.ksub, cents, (s, c) => pqCb((s, c)))
-            .repartition(p.buckets, col("cell"))
-            .write.format("parquet").mode("append")
-            .bucketBy(p.buckets, "cell").sortBy("cell")
-            .option("path", s"$outDir/index").saveAsTable(table)
-        }
-        println(f"[ivfpq] compactspot: $nAppends appends in " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s, " +
-          f"${indexDataFiles(spark, outDir)} data files")
-        val queries = emb.filter(col("vec_id") % 25 === 0 &&
-          col("vec_id") < graft.tools.ScaleGen.IdStride)
-        def timeProbe(tag: String): Unit = for (r <- 1 to 3) {
-          val t = System.nanoTime()
-          val n = probe(spark, outDir, queries, "vec_id", "embedding",
-            nprobe = arg(4, 2), k = arg(5, 3)).count()
-          println(f"[ivfpq] compactspot probe ($tag) $r/3: $n rows in " +
-            f"${(System.nanoTime() - t) / 1e9}%.1f s")
-        }
-        timeProbe("fragmented")
-        val tc = System.nanoTime()
-        val (b, a) = compact(spark, outDir, maxFilesPerBucket = 1)
-        println(f"[ivfpq] compactspot compact: $b -> $a files in " +
-          f"${(System.nanoTime() - tc) / 1e9}%.1f s")
-        timeProbe("compacted")
-      case "recallspot" =>
-        // measurement harness (VERDICT r15 #2, the codebook-bits
-        // sweep): recall of the artifact's own FROZEN held-out truth
-        // (exact top-10, persisted at build/retrain) through the probe
-        // path at (nprobe, k), plus per-rep serve wall — one line per
-        // rep, comparable across (m, ksub) builds because the eval set
-        // derivation is deterministic in vec_id. args: recallspot -
-        // <outDir> [nprobe=2] [k=3] [reps=3]
-        val reps = arg(5, 3)
-        val kk = arg(4, 3)
-        val queries = spark.read.parquet(s"$outDir/heldout/queries")
-        val truthAll = spark.read.parquet(s"$outDir/heldout/truth")
-        // denominator = ACTUAL truth rows at this k, not nq·k (ADVICE
-        // r16): the persisted truth is exact top-10, so k > 10 (or a
-        // query with fewer true neighbors) would silently deflate the
-        // reported recall and skew cross-build (m, ksub) comparisons —
-        // refuse loudly past the persisted depth, count what's there
-        val depth = truthAll.agg(max(col("rank"))).head().getInt(0)
-        require(kk <= depth, s"recallspot k=$kk exceeds the persisted " +
-          s"held-out truth depth $depth — lower k or re-freeze the truth " +
-          "deeper (build/retrain writes exact top-10)")
-        val truth = truthAll.filter(col("rank") <= kk)
-          .select(col("query_id"), col("vec_id")).localCheckpoint(true)
-        val possible = truth.count()
-        val p = loadParams(spark, outDir)
-        for (r <- 1 to reps) {
-          val t0 = System.nanoTime()
-          val got = probe(spark, outDir, queries, "vec_id", "embedding",
-            nprobe = arg(3, 2), k = kk)
-          val hits = got.select(col("query_id"), col("vec_id"))
-            .join(truth, Seq("query_id", "vec_id"), "left_semi").count()
-          val recall = math.floor(
-            hits.toDouble * 1e6 / possible.toDouble + 0.5).toLong / 1e4
-          println(f"[ivfpq] recallspot $r/$reps: m=${p.m} ksub=${p.ksub} " +
-            f"enc=${p.encoding} nprobe=${arg(3, 2)} k=$kk: " +
-            f"recall $recall%.2f%% ($hits/$possible) in " +
-            f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-        }
       case "probe" =>
         // reps > 1 separates the one-off session costs (DDL, codebook
         // load, kernel codegen — the F4 compile term, paid once per
@@ -968,60 +886,6 @@ object IvfPqBuild {
           rerank = arg(5, 0),
           rawsDir = if (args.length > 6) args(6) else null)
         println(s"[ivfpq] serve loop drained: $n batches answered")
-      case "rerankspot" =>
-        // measurement harness (VERDICT r16 #1): recall + wall of
-        // one-stage vs two-stage serving on the frozen held-out truth
-        // at MATCHED nprobe — the evidence row for the ADC-shortlist →
-        // exact-re-rank stage. The honest recallspot denominator
-        // (actual truth rows at k). args: rerankspot <rawsDir> <outDir>
-        // [nprobe=2] [k=10] [R=100] [reps=3] — rawsDir is the raw
-        // (vec_id, embedding) parquet, the retrain staged-raws contract
-        val nprobe = arg(3, 2); val kk = arg(4, 10); val rr = arg(5, 100)
-        val reps = arg(6, 3)
-        val queries = spark.read.parquet(s"$outDir/heldout/queries")
-        val truthAll = spark.read.parquet(s"$outDir/heldout/truth")
-        val depth = truthAll.agg(max(col("rank"))).head().getInt(0)
-        require(kk <= depth, s"rerankspot k=$kk exceeds the persisted " +
-          s"held-out truth depth $depth")
-        val truth = truthAll.filter(col("rank") <= kk)
-          .select(col("query_id"), col("vec_id")).localCheckpoint(true)
-        val possible = truth.count()
-        def run(tag: String, rerankR: Int): Unit = for (r <- 1 to reps) {
-          val t0 = System.nanoTime()
-          val got = probe(spark, outDir, queries, "vec_id", "embedding",
-            nprobe, kk, rerank = rerankR,
-            rawsDir = if (rerankR > 0) sfDir else null)
-          val hits = got.select(col("query_id"), col("vec_id"))
-            .join(truth, Seq("query_id", "vec_id"), "left_semi").count()
-          println(f"[ivfpq] rerankspot $tag $r/$reps: nprobe=$nprobe " +
-            f"k=$kk: recall ${hits * 100.0 / possible}%.2f%% " +
-            f"($hits/$possible) in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        }
-        run("one-stage", 0)
-        run(s"two-stage(R=$rr)", rr)
-      case "servespot" =>
-        // measurement harness for the warm loop (SCALE.md §10): carve
-        // [batches] disjoint 80-query request batches out of sfDir's
-        // ORIGINAL vectors (the probe-mode query rule per remainder),
-        // drop them with a stop marker, and run ONE warm serve loop —
-        // per-batch wall prints from serve(); the first batch carries
-        // the one-off codegen, the rest are the steady-state number
-        val reqDir = s"$outDir/servespot_req"
-        val nb = arg(3, 6)
-        val queries = Tables.embeddings(spark, sfDir)
-          .filter(col("vec_id") < graft.tools.ScaleGen.IdStride)
-        val fs = new org.apache.hadoop.fs.Path(reqDir)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(new org.apache.hadoop.fs.Path(reqDir), true)
-        for (i <- 0 until nb)
-          queries.filter(col("vec_id") % 25 === i)
-            .write.mode("overwrite").parquet(s"$reqDir/in/b$i")
-        fs.create(new org.apache.hadoop.fs.Path(s"$reqDir/stop")).close()
-        val t0 = System.nanoTime()
-        val n = serve(spark, outDir, reqDir, "vec_id", "embedding",
-          nprobe = arg(4, 2), k = arg(5, 3))
-        println(f"[ivfpq] servespot: $n batches, total wall " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s (first batch carries codegen)")
       case "ingesttick" =>
         // args: ingesttick <stagingDir> <outDir> [nprobe=2] [k=3] —
         // sfDir slot carries the staging dir (the serve convention)
@@ -1031,44 +895,9 @@ object IvfPqBuild {
           nprobe = arg(3, 2), k = arg(4, 3))
         println(f"[ivfpq] ingest tick drained in " +
           f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      case "tickspot" =>
-        // measurement harness (SCALE.md §10): stage [batches] disjoint
-        // ~N/50-vector waves of NEW ids (offset stride, same embedding
-        // distribution), run one ingest tick per wave against the
-        // prebuilt artifact, print per-tick wall + the measured
-        // staleness row
-        val nb = arg(3, 2)
-        val staging = s"$outDir/tickspot_staging"
-        val fs = new org.apache.hadoop.fs.Path(staging)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/tickspot_ckpt"), true)
-        val emb = Tables.embeddings(spark, sfDir)
-        for (i <- 0 until nb) {
-          // FLAT staging append — the file stream source does not
-          // recurse into subdirectories (the staging-layout rule every
-          // ingest tick shares)
-          emb.filter(col("vec_id") % 50 === i)
-            .select((col("vec_id") + lit(1000000000L) * (i + 1)).as("vec_id"),
-              col("embedding"))
-            .coalesce(1).write.mode("append").parquet(staging)
-          val t0 = System.nanoTime()
-          ingestTick(spark, outDir, stagingDir = staging,
-            checkpointDir = s"$outDir/tickspot_ckpt",
-            nprobe = arg(4, 2), k = arg(5, 3))
-          val row = spark.read.parquet(s"$outDir/_heldout_recall").head()
-          println(f"[ivfpq] tickspot wave $i: tick wall " +
-            f"${(System.nanoTime() - t0) / 1e9}%.1f s, corpus " +
-            f"${row.getAs[Long]("n_vectors")} vectors, held-out recall " +
-            f"${row.getAs[Long]("recall_micro")} µ (floor " +
-            f"${row.getAs[Long]("floor_micro")} µ, stale " +
-            f"${row.getAs[Boolean]("stale")}, needed C " +
-            f"${row.getAs[Int]("needed_centroids")})")
-        }
       case other => sys.error(
         s"unknown mode $other " +
-          "(build|retrain|probe|serve|servespot|ingesttick|tickspot|" +
-          "compact|compactspot|recallspot|rerankspot)")
+          "(build|retrain|probe|serve|ingesttick|compact)")
     }
     spark.stop()
   }

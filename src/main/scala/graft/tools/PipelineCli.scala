@@ -165,13 +165,11 @@ object EcccTick {
     // old wins (T2 doctrine): a re-staged hour cannot overwrite the
     // stored cell; localCheckpoint decouples the merged frame from the
     // gridDir files so the overwrite below cannot read its own output
-    val merged = prior.withColumn("__src", lit(0))
-      .unionByName(fresh.withColumn("__src", lit(1)))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("station", "ts", "param")
-          .orderBy(col("__src").asc)))
-      .filter(col("__rn") === 1).drop("__rn", "__src")
+    val merged = graft.ops.Dedup.dedupFirst(
+        prior.withColumn("__src", lit(0))
+          .unionByName(fresh.withColumn("__src", lit(1))),
+        Seq("station", "ts", "param"), Seq(col("__src")))
+      .drop("__src")
       .localCheckpoint(true)
     merged.write.mode("overwrite").parquet(gridDir)
     // path-based reads cache their file listing; without the refresh a

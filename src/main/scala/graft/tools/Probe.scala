@@ -1,474 +1,37 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.core.Tables
-import graft.text.{NearDup, TextOps}
-
-/** Ad-hoc perf probe: stage-by-stage timing of the minhash pipeline.
-  * Usage: sbt "runMain graft.tools.Probe"
+/** Plan views over the registered queries.
+  *
+  * Usage (the sf dir comes from SPARK_GRAFT_SF_DIR, default sf0.1):
+  *   runMain graft.tools.Probe explain <query> [<query> ...]
+  *   runMain graft.tools.Probe digests
+  *
+  *  - `explain`: the formatted physical plan of each named query.
+  *  - `digests`: one plan digest (exN/cgM/md5) per registered query —
+  *    exchange counts for the whole registry without dumping 231 full
+  *    plans (`scale-artifacts/plan_digests_r20.txt`).
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.local()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    def time(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-
-    if (args.headOption.contains("explain")) {
-      // formatted physical plan for any registered query:
-      //   sbt "runMain graft.tools.Probe explain q119_waterfill q121_shard_stitch"
-      args.drop(1).foreach { n =>
-        println(s"=== $n ===")
-        graft.SparkEntry.queries(n)(spark, d).explain("formatted")
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("stateproto")) {
-      // r18 API probe: can a stateful streaming count replace the
-      // parquet-fold line-df grid (O(batch) state updates per tick),
-      // and does the Spark 4 statestore reader hand the grid back?
-      import org.apache.spark.sql.streaming.Trigger
-      import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("stateproto").toString
-      val staging = s"$base/staging"
-      new java.io.File(staging).mkdirs()
-      Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("doc_id", "lh")
-        .write.mode("append").parquet(staging)
-      def tick(): Unit = {
-        val q = spark.readStream.schema("doc_id LONG, lh STRING")
-          .parquet(staging)
-          .groupBy("lh").count()
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", s"$base/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            println(s"[proto] batch $id updated cells: " +
-              b.collect().mkString(","))
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      tick()
-      Seq((4L, "a"), (5L, "c")).toDF("doc_id", "lh")
-        .write.mode("append").parquet(staging)
-      tick()
-      val st = spark.read.format("statestore").load(s"$base/ckpt")
-      st.printSchema()
-      st.show(10, false)
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("q226stages")) {
-      // r18 close adjudication: q226 moved 3.0 → 5.3 s after the
-      // CrawlCurate factoring; time the capstone stage by stage to
-      // find which stage absorbed the 2 s.
-      import graft.pipeline.CrawlCurate
-      val docs = Tables.documents(spark, d)
-        .withColumn("html", expr(graft.text.Html.fixtureSql))
-        .select(col("doc_id"), col("html"))
-      for (r <- 1 to 3) {
-        var t0 = System.nanoTime()
-        val cleaned = CrawlCurate.cleanedFromKept(
-          TextOps.lineFrequencyFilter(
-            graft.text.Html.mainContent(docs, "doc_id", "html")
-              .select(col("doc_id"), col("main_text")),
-            "doc_id", "main_text", maxDocFreq = 9L)).localCheckpoint(true)
-        val tClean = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val attrs = CrawlCurate.baseAttrs(cleaned)
-        val gated = attrs.filter(col("quality") >= 0.55)
-        val keepers = gated.groupBy(col("content_hash"))
-          .agg(min(col("doc_id")).as("keeper_id")).select(col("keeper_id"))
-        val exact = gated.join(keepers, col("doc_id") === col("keeper_id"),
-          "left_semi").localCheckpoint(true)
-        val tExact = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val pairs = NearDup.lshPairsFromIndex(CrawlCurate.signatures(exact))
-          .filter(col("jaccard") >= 0.5)
-        val dropNear = NearDup.dedupClusters(pairs, "id_a", "id_b")
-          .filter(col("doc_id") =!= col("keeper_id")).select(col("doc_id"))
-          .localCheckpoint(true)
-        val tPairs = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val deduped = exact.join(dropNear, Seq("doc_id"), "left_anti")
-        graft.text.Terms.packPrepared(
-          deduped.select(col("doc_id"), col("pred_lang").as("shard"),
-            TextOps.tokenCountFast(spark, col("text")).cast("long")
-              .as("n_tokens")), 256, Seq("doc_id"))
-          .write.format("noop").mode("overwrite").save()
-        val tPack = (System.nanoTime() - t0) / 1e9
-        println(f"[probe] q226stages rep $r: clean $tClean%.2f exact " +
-          f"$tExact%.2f pairs+clusters $tPairs%.2f pack $tPack%.2f")
-        // microscope the exact stage: attrs map alone, keepers agg
-        // alone, then the ORIGINAL inline shape (qualityScore filter +
-        // exactDedup, no projected columns) for comparison
-        t0 = System.nanoTime()
-        attrs.write.format("noop").mode("overwrite").save()
-        val tAttrs = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        keepers.write.format("noop").mode("overwrite").save()
-        val tKeep = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val gated0 = TextOps.withLangId(cleaned, "text", "pred_lang")
-          .filter(TextOps.qualityScore(col("text")) >= 0.55)
-        val keep0 = NearDup.exactDedup(gated0, "doc_id", "text")
-          .select(col("keeper_id"))
-        gated0.join(keep0, col("doc_id") === col("keeper_id"), "left_semi")
-          .localCheckpoint(true)
-        val tOrig = (System.nanoTime() - t0) / 1e9
-        println(f"[probe] q226stages rep $r detail: attrs $tAttrs%.2f " +
-          f"keepers $tKeep%.2f origShape $tOrig%.2f")
-        if (r == 1) {
-          def shape(df: org.apache.spark.sql.DataFrame, tag: String): Unit = {
-            val p = df.queryExecution.executedPlan.toString
-            println(s"[probe] plan $tag: lines ${p.linesIterator.size} " +
-              s"ex ${p.linesIterator.count(_.contains("Exchange"))} " +
-              s"cg ${p.linesIterator.count(_.contains("WholeStageCodegen"))}")
-            println(p.linesIterator.take(40).mkString("\n"))
-          }
-          shape(gated.join(keepers, col("doc_id") === col("keeper_id"),
-            "left_semi"), "NEW-exact")
-          val gatedX = TextOps.withLangId(cleaned, "text", "pred_lang")
-            .filter(TextOps.qualityScore(col("text")) >= 0.55)
-          val keepX = NearDup.exactDedup(gatedX, "doc_id", "text")
-            .select(col("keeper_id"))
-          shape(gatedX.join(keepX, col("doc_id") === col("keeper_id"),
-            "left_semi"), "ORIG-exact")
+    args.headOption match {
+      case Some("explain") =>
+        args.drop(1).foreach { n =>
+          println(s"=== $n ===")
+          graft.SparkEntry.queries(n)(spark, d).explain("formatted")
         }
-      }
-      spark.stop(); return
+      case Some("digests") =>
+        graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, q) =>
+          val dig = try {
+            graft.Bench.planDigest(
+              q(spark, d).queryExecution.executedPlan.toString)
+          } catch { case e: Throwable => s"failed:${e.getClass.getSimpleName}" }
+          println(s"[digest] $n $dig")
+        }
+      case other => sys.error(s"unknown mode ${other.getOrElse("")} " +
+        "(explain <query>... | digests)")
     }
-
-    if (args.headOption.contains("curface")) {
-      // r19 (VERDICT r18 #7): which stage dominates the curated READ
-      // FACE over persisted stores — the ×1000 recurate measured
-      // 59.5–114.4 s with enough variance to suspect one stage widens.
-      // Mirrors CrawlCurate.fromStores/curate stage-for-stage with a
-      // checkpoint after each so stage walls are disjoint.
-      //   runMain graft.tools.Probe curface <outDir> [reps=3]
-      val out = args(1)
-      val reps = if (args.length > 2) args(2).toInt else 3
-      import graft.pipeline.CrawlCurate
-      for (r <- 1 to reps) {
-        val t0 = System.nanoTime()
-        val docsAll = CrawlCurate.latestDocAttrs(spark, out)
-          .localCheckpoint(true)
-        val tAttrs = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val gated = docsAll.drop("bands", "sh")
-          .filter(col("quality") >= 0.55)
-        val keepers = gated.groupBy(col("content_hash"))
-          .agg(min(col("doc_id")).as("keeper_id"))
-          .select(col("keeper_id"))
-        val exact = gated.drop("quality", "content_hash")
-          .join(keepers, col("doc_id") === col("keeper_id"), "left_semi")
-          .localCheckpoint(true)
-        val tExact = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        val signer = docsAll
-          .select(col("doc_id").as("id"), col("bands"), col("sh"))
-          .join(exact.select(col("doc_id").as("id")), Seq("id"),
-            "left_semi")
-          .filter(col("bands").isNotNull)
-        val pairs = NearDup.lshPairsFromIndex(signer)
-          .filter(col("jaccard") >= 0.5)
-        val dropNear = NearDup.dedupClusters(pairs, "id_a", "id_b")
-          .filter(col("doc_id") =!= col("keeper_id"))
-          .select(col("doc_id")).localCheckpoint(true)
-        val tPairs = (System.nanoTime() - t2) / 1e9
-        val t3 = System.nanoTime()
-        val deduped = exact.join(dropNear, Seq("doc_id"), "left_anti")
-        val packed = graft.text.Terms.packPrepared(
-          deduped.select(col("doc_id"), col("pred_lang").as("shard"),
-            col("n_tokens")),
-          blockTokens = 256, orderCols = Seq("doc_id"))
-        val nOut = packed.count()
-        val tPack = (System.nanoTime() - t3) / 1e9
-        println(f"[probe] curface rep $r: attrs $tAttrs%.1f s, exact " +
-          f"$tExact%.1f s, neardup $tPairs%.1f s, pack $tPack%.1f s " +
-          f"($nOut rows)")
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("q54pairs")) {
-      // r14 drift adjudication: q54 at ×100 re-measured 41 s vs the
-      // recorded 19 s while q35/q42 reproduce exactly — split the body
-      // into its two phases and count the pair volume against the
-      // recorded 12.09M, on whatever dir args(1) names.
-      val dir = args(1)
-      val emb = Tables.embeddings(spark, dir)
-      val t0 = System.nanoTime()
-      val pairs = graft.sim.Similarity.lshNeighborPairsAuto(emb,
-        "vec_id", "embedding", dims = 64, bands = 4, floorRowsPerBand = 5,
-        minCosine = 0.2).localCheckpoint(true)
-      val nPairs = pairs.count()
-      val tPairs = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val nClusters = graft.text.NearDup.dedupClusters(pairs, "id_a", "id_b")
-        .count()
-      val tClust = (System.nanoTime() - t1) / 1e9
-      println(f"[probe] q54pairs on $dir: $nPairs pairs in $tPairs%.1f s; " +
-        f"clustering ($nClusters rows) in $tClust%.1f s")
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("hybrid")) {
-      // r10 fourth batch: where do q135/q136 spend their ~2.2 s? Time
-      // each composite's stages in isolation (twice each — the second
-      // number is the warm one that matches converged bench repeats).
-      val emb = Tables.embeddings(spark, d)
-      val docs = Tables.documents(spark, d)
-      for (round <- 1 to 2) {
-        time(s"dense-top20 #$round")(graft.sim.Similarity.bruteForceTopK(emb,
-          emb.filter(col("vec_id") % 25 === 0), "vec_id", "embedding", 20))
-        time(s"sparse-shingle-top20 #$round")(graft.text.Retrieval
-          .shingleOverlapTopK(docs, "doc_id", "text", col("doc_id") % 25 === 0, 3, 20))
-        time(s"q135-full #$round")(
-          graft.SparkEntry.queries("q135_rrf_fusion")(spark, d))
-        time(s"mmr-cand-top8 #$round")(graft.sim.Similarity.bruteForceTopK(emb,
-          emb.filter(col("vec_id") % 25 === 0), "vec_id", "embedding", 8))
-        time(s"q136-full #$round")(
-          graft.SparkEntry.queries("q136_mmr_select")(spark, d))
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("lsh")) {
-      // r10 adjudication (VERDICT r09 #2): candidate-pair volume of the
-      // q39/q49 LSH paths on the CURRENT embeddings parquet — a testdata
-      // regeneration that shifted band collision rates would show here
-      // as a candidate blow-up at the same banding parameters.
-      val emb = graft.core.Tables.embeddings(spark, d)
-      println(s"[probe] embeddings rows: ${emb.count()}")
-      val q49all = graft.sim.Similarity.lshNeighborPairs(emb,
-        "vec_id", "embedding", dims = 64, bands = 4, rowsPerBand = 5,
-        minCosine = -1.0).count() // threshold off => every candidate pair
-      val q49out = graft.sim.Similarity.lshNeighborPairs(emb,
-        "vec_id", "embedding", dims = 64, bands = 4, rowsPerBand = 5,
-        minCosine = 0.2).count()
-      println(s"[probe] q49 candidates=$q49all survivors(>=0.2)=$q49out")
-      val q39all = graft.sim.Similarity.lshTopK(emb, "vec_id", "embedding",
-        dims = 64, bands = 4, rowsPerBand = 5, k = Int.MaxValue,
-        queryPred = col("vec_id") % 10 === 0).count() // k unbounded => all candidates
-      val q39out = graft.sim.Similarity.lshTopK(emb, "vec_id", "embedding",
-        dims = 64, bands = 4, rowsPerBand = 5, k = 3,
-        queryPred = col("vec_id") % 10 === 0).count()
-      println(s"[probe] q39 candidates=$q39all topk_rows=$q39out")
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("nbstages")) {
-      // r15 follow-through probe, kept in sync with the FINAL
-      // two-exchange NB core (SCALE.md §12): per-row RLE dtc (a pure
-      // map — deliberately NOT checkpointed in the core), the
-      // term-keyed fixed-width model agg, and the registered q220.
-      // Twice — the second round is the warm number.
-      val docs = Tables.documents(spark, d)
-      val n = 3
-      for (round <- 1 to 2) {
-        val t0 = System.nanoTime()
-        val dtc = docs.select(col("doc_id"), col("lang").as("label_true"),
-            explode(graft.plans.ArrayOps.charNgramRleCounts(spark,
-              col("text"), n)).as("tc"))
-          .select(col("doc_id"), col("label_true"),
-            col("tc.term").as("term"), col("tc.c").as("c"))
-        dtc.write.format("noop").mode("overwrite").save()
-        println(f"[probe] dtc scan+kernel #$round: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        val t1 = System.nanoTime()
-        val labelSeq = docs.select(col("lang")).distinct().collect()
-          .map(_.getString(0)).sorted.toSeq
-        val termVec = dtc.groupBy(col("term"))
-          .agg(sum(when(col("label_true") === labelSeq.head, col("c"))
-              .otherwise(lit(0L))).as("c_0"),
-            labelSeq.indices.drop(1).map(i =>
-              sum(when(col("label_true") === labelSeq(i), col("c"))
-                .otherwise(lit(0L))).as(s"c_$i")): _*)
-        termVec.write.format("noop").mode("overwrite").save()
-        println(f"[probe] term-vector model agg #$round: ${(System.nanoTime() - t1) / 1e9}%.2f s")
-        val t2 = System.nanoTime()
-        val scored = graft.text.Classify.naiveBayesScoresWith(docs,
-          "doc_id", "text", "lang",
-          t => graft.plans.ArrayOps.charNgramRleCounts(spark, t, n),
-          t => TextOps.charNgramCount(t, n))
-        scored.write.format("noop").mode("overwrite").save()
-        println(f"[probe] full score frame #$round: ${(System.nanoTime() - t2) / 1e9}%.2f s")
-        val t3 = System.nanoTime()
-        graft.SparkEntry.queries("q220_langid_trained")(spark, d)
-          .write.format("noop").mode("overwrite").save()
-        println(f"[probe] q220 full #$round: ${(System.nanoTime() - t3) / 1e9}%.2f s")
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("q33")) {
-      // q33 decomposition: which term dominates langId?
-      val docs = Tables.documents(spark, d)
-      val toks = TextOps.tokens(lower(col("text")))
-      time("tokens-only")(docs.select(size(toks).as("n")))
-      time("markers-x4")(docs.select(
-        (TextOps.markerCount(toks, TextOps.EN_MARKERS) +
-         TextOps.markerCount(toks, TextOps.DE_MARKERS) +
-         TextOps.markerCount(toks, TextOps.ES_MARKERS) +
-         TextOps.markerCount(toks, TextOps.FR_MARKERS)).as("s")))
-      time("cjk-replace")(docs.select(
-        (length(regexp_replace(col("text"), "[^\\u4e00-\\u9fff]", "")) > 0).as("z")))
-      time("cjk-rlike")(docs.select(col("text").rlike("[\\u4e00-\\u9fff]").as("z")))
-      time("langid-full")(
-        TextOps.withLangId(docs, "text", "l").select(col("doc_id"), col("l")))
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("r8")) {
-      // round-8 additions: plan audit (exchange count + codegen spans)
-      val docs = Tables.documents(spark, d)
-      def audit(name: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-        val plan = df.queryExecution.executedPlan.toString
-        val ex = plan.linesIterator.count(_.contains("Exchange"))
-        val cg = plan.linesIterator.count(_.contains("WholeStageCodegen"))
-        println(s"[probe] $name: exchanges=$ex codegenSpans=$cg")
-        println(plan.linesIterator.filter(l =>
-          l.contains("Exchange") || l.contains("Scan ")).mkString("\n"))
-      }
-      audit("q97-skipgram")(graft.text.NgramLm.skipgramPmi(docs, "doc_id", "text", 3, 5L))
-      // does runtime exchange reuse collapse the 3 inlined c12 subtrees?
-      val q97 = graft.text.NgramLm.skipgramPmi(docs, "doc_id", "text", 3, 5L)
-      q97.collect() // materialize THIS queryExecution so AQE finalizes it
-      val finalPlan = q97.queryExecution.executedPlan.toString
-      println(s"[probe] q97-final: reusedExchanges=" +
-        finalPlan.linesIterator.count(_.contains("ReusedExchange")) +
-        s" scans=" + finalPlan.linesIterator.count(_.contains("FileScan")))
-      val stageIds = "ShuffleQueryStage (\\d+)".r
-        .findAllMatchIn(finalPlan).map(_.group(1)).toSeq
-      println(s"[probe] q97-final stages: total=${stageIds.size} " +
-        s"distinct=${stageIds.distinct.size} ids=${stageIds.mkString(",")}")
-      val rows8 = TextOps.wordShingleRows(docs, "doc_id", "text", 8)
-      val hashed = rows8.select(col("id"), TextOps.gramHash64(spark, col("g")).as("hg"))
-      val bench = hashed.filter(col("id") % 20 === 0).select("hg").distinct()
-      val mask = graft.text.Bloom.build(bench, "hg")
-      audit("q98-bloom-probe")(hashed.filter(col("id") % 20 =!= 0)
-        .dropDuplicates("id", "hg")
-        .withColumn("b", graft.text.Bloom.mightContain(mask, col("hg")).cast("int"))
-        .groupBy("id").agg(sum(col("b")).as("nb")))
-      time("q98-bloom-probe-run")(hashed.filter(col("id") % 20 =!= 0)
-        .dropDuplicates("id", "hg")
-        .withColumn("b", graft.text.Bloom.mightContain(mask, col("hg")).cast("int"))
-        .groupBy("id").agg(sum(col("b")).as("nb")))
-      spark.stop(); return
-    }
-
-    val rows = TextOps.wordShingleRows(Tables.documents(spark, d), "doc_id", "text", 3)
-    time("shingle-rows")(rows)
-    time("rows+md5")(rows.withColumn("h", md5(col("g"))))
-    time("full-pairs")(NearDup.minhashLshPairsFromRows(rows))
-    // tokens-only comparison: is the HOF shingle build the bottleneck?
-    time("tokens-only")(Tables.documents(spark, d)
-      .select(size(TextOps.tokens(col("text"))).as("n")))
-
-    // q37 decomposition
-    val docs37 = Tables.documents(spark, d)
-      .withColumn("sh", TextOps.charShingles(col("text"), 5))
-    val base37 = docs37
-      .select(col("lang"), col("source"), col("doc_id").as("id"), explode(col("sh")).as("g"))
-      .withColumn("hg", TextOps.gramHash64(spark, col("g")))
-      .groupBy(col("lang"), col("source"), col("id"))
-      .agg(sort_array(collect_set(col("hg"))).as("sh"))
-    time("q37-base-agg")(base37)
-    val aj = base37.as("a"); val bj = base37.as("b")
-    time("q37-join-only")(aj.join(bj,
-      col("a.lang") === col("b.lang") && col("a.source") === col("b.source") &&
-      col("a.id") < col("b.id"))
-      .select(col("a.id"), col("b.id")))
-    time("q37-full")(graft.text.NearDup.blockedJaccardPairsFromText(
-      Tables.documents(spark, d), "doc_id", "text", Seq("lang", "source"), 5, 0.5))
-
-    if (args.headOption.contains("q54")) {
-      // q54 decomposition: embedding LSH pairs vs clustering loop
-      val emb = Tables.embeddings(spark, d)
-      val mk = () => graft.sim.Similarity.lshNeighborPairs(emb,
-        "vec_id", "embedding", dims = 64, bands = 4, rowsPerBand = 5,
-        minCosine = 0.2)
-      (1 to 3).foreach { i =>
-        val t0 = System.nanoTime()
-        println(s"[probe] q54-pairs#$i: ${mk().count()} rows in " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      (1 to 3).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = NearDup.dedupClusters(mk(), "id_a", "id_b").count()
-        println(s"[probe] q54-full#$i: $n rows in " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("digests")) {
-      // plan digest (exN/cgM/md5) for EVERY registered query — the r20
-      // operator-coverage sweep: exchange counts for the checklist
-      // without dumping 231 full plans
-      graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, q) =>
-        val dig = try {
-          graft.Bench.planDigest(
-            q(spark, d).queryExecution.executedPlan.toString)
-        } catch { case e: Throwable => s"failed:${e.getClass.getSimpleName}" }
-        println(s"[digest] $n $dig")
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("triedges")) {
-      // edge-build-only leg for the coOccurrenceEdges A/B (r20): the
-      // full `tri` mode spends 10+ min on the triangle tail at x10
-      val ev = Tables.events(spark, d).select(col("user_id"),
-        col("event_type"), expr("unix_micros(ts) div 3600000000").as("hb"))
-      val edges = graft.graph.Triangles.coOccurrenceEdges(ev, "user_id",
-        Seq("event_type", "hb"), 4L)
-      time("edges-1")(edges)
-      time("edges-2")(edges)
-      val capped = graft.graph.Triangles.coOccurrenceEdges(ev, "user_id",
-        Seq("event_type", "hb"), 4L, maxOccupancy = 64L)
-      time("edges-capped-1")(capped)
-      time("edges-capped-2")(capped)
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("tri")) {
-      // q113/q114 decomposition: bucket distinct, pair join, triangles
-      val ev = Tables.events(spark, d).select(col("user_id"),
-        col("event_type"), expr("unix_micros(ts) div 3600000000").as("hb"))
-      time("ev-scan")(ev)
-      val b = ev.select(col("user_id").as("id"), col("event_type"), col("hb")).distinct()
-      time("bucket-distinct")(b)
-      val edges = graft.graph.Triangles.coOccurrenceEdges(ev, "user_id",
-        Seq("event_type", "hb"), 4L)
-      time("edges")(edges)
-      time("edges-again")(edges)
-      time("triangles")(graft.graph.Triangles.triangleCounts(edges, "a", "b"))
-      time("triangles-2")(graft.graph.Triangles.triangleCounts(edges, "a", "b"))
-      val e2 = edges.localCheckpoint(true)
-      println(s"[probe] edge-count: ${e2.count()}")
-      time("triangles-on-checkpointed")(graft.graph.Triangles.triangleCounts(e2, "a", "b"))
-      time("triangles-on-checkpointed-2")(graft.graph.Triangles.triangleCounts(e2, "a", "b"))
-      spark.stop(); return
-    }
-
-    // q42 decomposition: pair count, node count, then clustering
-    val pairs42 = NearDup.minhashLshPairsFromRows(
-      TextOps.wordShingleRows(Tables.documents(spark, d), "doc_id", "text", 3))
-    val t42 = System.nanoTime()
-    println(s"[probe] q42-pairs: ${pairs42.count()} rows in " +
-      f"${(System.nanoTime() - t42) / 1e9}%.2f s")
-    time("q42-cluster")(NearDup.dedupClusters(pairs42, "id_a", "id_b"))
     spark.stop()
   }
 }

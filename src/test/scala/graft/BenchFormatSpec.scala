@@ -218,7 +218,16 @@ class BenchFormatSpec extends AnyFunSuite {
     // best-of-3 column, not the round-1 single-run 46-query carve-out.
     val md = scala.io.Source.fromFile("BASELINE.md", "UTF-8")
     val text = try md.mkString finally md.close()
-    assert(text.contains("Gate anchor (r18+)"))
+    // the anchor round is read from the per-query table, not pinned
+    // as a literal: the newest `rNN sec` column of its header
+    val header = text.linesIterator.find(_.startsWith("| query | r"))
+    assert(header.isDefined, "per-query table header not found")
+    val rounds = "\\br(\\d+) sec\\b".r.findAllMatchIn(header.get)
+      .map(_.group(1).toInt).toSeq
+    assert(rounds.nonEmpty, s"no rNN sec column in: ${header.get}")
+    val newest = f"r${rounds.max}%02d"
+    assert(text.contains(s"Gate anchor ($newest+): the $newest closing column"),
+      s"gate paragraph does not anchor on the newest column $newest")
     assert(!text.contains("compares like-for-like totals on the shared 46"))
     assert(!text.contains("kept as the\ndriver's 2× gate anchor"))
   }

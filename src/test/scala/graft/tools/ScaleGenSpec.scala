@@ -11,7 +11,7 @@ import graft.SparkSpec
   * heavy replicas actually NOT (else the scaling ratios measure a corpus
   * that doesn't have the claimed structure), and the dup-dense anchored
   * mode must produce the super-linear cluster shape the tier-engagement
-  * harness (ScaleTiers) relies on.
+  * runs of SCALE.md §5 rely on.
   */
 class ScaleGenSpec extends AnyFunSuite with SparkSpec {
   private val sf = "/root/testdata/sf0.001"
