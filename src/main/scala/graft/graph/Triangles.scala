@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing
+
 /** Co-occurrence graph construction + degree-ordered triangle counting
   * (builder brief; no reference analog — graph structure over behavioral
   * data, the community-detection complement to PageRank's centrality).
@@ -112,8 +114,8 @@ object Triangles {
     */
   def triangleCounts(edges: DataFrame, srcCol: String,
                      dstCol: String,
-                     maxBroadcastNodes: Long = 4000000L,
-                     maxBroadcastEdges: Long = 4000000L): DataFrame = {
+                     maxBroadcastNodes: Long = Sizing.MaxBroadcastRows,
+                     maxBroadcastEdges: Long = Sizing.MaxBroadcastRows): DataFrame = {
     // Eager localCheckpoint, the PageRank doctrine: degrees, orientation
     // and the wedge join all re-reference the edge frame — truncate the
     // (typically expensive) edge-producing lineage once.
@@ -124,10 +126,6 @@ object Triangles {
     // certifies the degree broadcast without a second count job
     val nEdges = e.count()
     val degBroadcast = 2 * nEdges <= maxBroadcastNodes
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(s"[scale] triangleCounts edges=$nEdges " +
-        s"nodeBound=$maxBroadcastNodes edgeBound=$maxBroadcastEdges " +
-        s"degTier=" + (if (degBroadcast) "broadcast" else "merge"))
     val deg0 = e.select(col("a").as("u"))
       .union(e.select(col("b").as("u")))
       .groupBy("u").agg(count(lit(1)).as("d"))

@@ -94,12 +94,6 @@ object ExcelShaped {
     shapeHourly(readRaw(spark, path), year, param)
 
   /** S7 on a real workbook: decode one sheet of an .xlsx file and apply
-    * the instantaneous shape. */
-  def readInstantSheetXlsx(spark: SparkSession, path: String, sheetName: String,
-                           year: Int, param: String): DataFrame =
-    shapeInstant(sheetFromWorkbook(spark, path, sheetName), year, param)
-
-  /** S7 on a real workbook: decode one sheet of an .xlsx file and apply
     * the hourly shape (year rollover included). */
   def readHourlySheetXlsx(spark: SparkSession, path: String, sheetName: String,
                           year: Int, param: String): DataFrame =

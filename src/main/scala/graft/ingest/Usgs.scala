@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   *
   * Station IDs come from USGS_station_list.csv's `BC RFC ID` with the
   * `'U'→'00'` rewrite (:57-58); we keep the RFC ID as the canonical station
-  * key and expose the rewrite for the fetch layer.
+  * key and the fetch layer applies the rewrite (`Fetch.normalizeRfcSite`).
   */
 object Usgs {
 
@@ -27,10 +27,6 @@ object Usgs {
     StructField("datetime", StringType),
     StructField("00060", DoubleType),
     StructField("00065", DoubleType)))
-
-  /** RFC ID → USGS site id ('U' suffix encodes the trailing zeros). */
-  def toUsgsSite(rfcId: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(rfcId, "U", "00")
 
   /** Normalize the NWIS iv frame (materialized as CSV per FIXTURES.md §4)
     * to long obs. */

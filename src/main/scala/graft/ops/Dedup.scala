@@ -25,13 +25,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** D2 — order-indifferent dedup (DST duplicate timestamps,
-    * discharge_obs_pd.py:70-71). Spark's dropDuplicates = hash-aggregate,
-    * map-side partial combine makes this cheap at scale.
-    */
-  def dedupAny(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** D3 — year-rollover disambiguation (dischargeobs_write_xl.py:403-404):
     * any NON-FIRST occurrence of the same (yearless) timestamp is shifted
     * exactly +1 year — pandas `duplicated(keep='first')` flags all

@@ -54,16 +54,6 @@ object Fill {
     df.withColumn(outCol, last(col(valueCol), ignoreNulls = true).over(w))
   }
 
-  /** W3 — last valid timestamp per partition: each station's latest
-    * non-null observation time (dischargeobs_write_xl.py:347-348,384-385).
-    */
-  def lastValidTs(df: DataFrame, parts: Seq[String], tsCol: String,
-                  valueCol: String, outCol: String): DataFrame = {
-    val w = Window.partitionBy(parts.map(col): _*)
-    df.withColumn(outCol,
-      max(when(col(valueCol).isNotNull, col(tsCol))).over(w))
-  }
-
   /** W2 — blank-on-repeat display labels
     * (dischargeobs_write_xl.py:51-55,85-88,167-168,308-312): suppress a
     * label equal to the previous row's label in export order. `parts`

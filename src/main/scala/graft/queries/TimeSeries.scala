@@ -258,6 +258,11 @@ object TimeSeries extends QueryPack {
     // F11 — compiled formula estimates over the wide pivot
     // (dischargeobs_write_xl.py:196-207 + Station_Estimates.csv grammar).
     // Inputs are the ROUNDED pivot cells so both engines start bit-identical.
+    // Outputs snap to 4 places as floor(x·1e4 + 0.5) / 1e4 on the binary
+    // double in BOTH engines: Spark's round(double, 4) rounds the shortest
+    // decimal rendering half-up while DuckDB's rounds the double, so a
+    // value rendered as a 4th-place tie (10084.02005, stored just below
+    // it) came out 10084.0201 in Spark and 10084.02 in DuckDB.
     "q22_formula_estimates" -> Q(
       (s, d) => {
         val wide = Tables.events(s, d)
@@ -268,10 +273,9 @@ object TimeSeries extends QueryPack {
           ("est_quad", "(0.0006*{click}^2+0.0928*{click}-0.5642).clip(lower=0.001)", false),
           ("est_linear", "1.1907*{purchase}+1.9845*{view}+20.819", false),
           ("est_pow", "(2.0476*{signup}^0.40425)^2", false)), col)
-        est.select(col("day"),
-                   round(col("est_quad"), 4).as("est_quad"),
-                   round(col("est_linear"), 4).as("est_linear"),
-                   round(col("est_pow"), 4).as("est_pow"))
+        def snap4(c: String) = (floor(col(c) * 1e4 + 0.5) / 1e4).as(c)
+        est.select(col("day"), snap4("est_quad"), snap4("est_linear"),
+                   snap4("est_pow"))
       },
       Some("""
         WITH wide AS (
@@ -282,11 +286,11 @@ object TimeSeries extends QueryPack {
                  round(sum(value) FILTER (event_type = 'view'), 2)     AS view
           FROM events GROUP BY 1)
         SELECT day,
-               round(CASE WHEN 0.0006*power(click,2)+0.0928*click-0.5642 IS NOT NULL
+               floor(CASE WHEN 0.0006*power(click,2)+0.0928*click-0.5642 IS NOT NULL
                           THEN greatest(0.0006*power(click,2)+0.0928*click-0.5642, 0.001)
-                     END, 4) AS est_quad,
-               round(1.1907*purchase+1.9845*view+20.819, 4) AS est_linear,
-               round(power(2.0476*power(signup,0.40425), 2), 4) AS est_pow
+                     END * 1e4 + 0.5) / 1e4 AS est_quad,
+               floor((1.1907*purchase+1.9845*view+20.819) * 1e4 + 0.5) / 1e4 AS est_linear,
+               floor(power(2.0476*power(signup,0.40425), 2) * 1e4 + 0.5) / 1e4 AS est_pow
         FROM wide""")),
 
     // A3 — rising/falling recurrence (dischargeobs_write_xl.py:120-127).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing
 import graft.plans.ArrayOps
 
 /** Similarity search over an embedding column (builder brief).
@@ -578,8 +579,6 @@ object Similarity {
                          nprobe: Int, k: Int, queryPred: Column): DataFrame = {
     val n = vectors.count()
     val c = adaptiveCentroids(n, floorCentroids)
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(s"[scale] trainedIvfTopKAuto n=$n centroids=$c")
     ivfTopKWith(vectors, idCol, vecCol,
       trainCentroidsExactMatrix(vectors, idCol, vecCol, dims, c, iterations),
       nprobe, k, queryPred)
@@ -599,8 +598,6 @@ object Similarity {
                                minCosine: Double): DataFrame = {
     val n = vectors.count()
     val c = adaptiveCentroids(n, floorCentroids)
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(s"[scale] trainedSemanticDedupAuto n=$n centroids=$c")
     semanticDedupWith(vectors, idCol, vecCol,
       trainCentroidsExactMatrix(vectors, idCol, vecCol, dims, c, iterations),
       minCosine)
@@ -857,7 +854,7 @@ object Similarity {
   def ensureBandIndexFresh(corpus: DataFrame, idCol: String, vecCol: String,
                            dims: Int, bandsDir: String, metaDir: String,
                            bands: Int, floorRowsPerBand: Int,
-                           targetOccupancy: Long = 128L): Int = {
+                           targetOccupancy: Long = Sizing.TargetOccupancy): Int = {
     val spark = corpus.sparkSession
     val n = corpus.count()
     val needed = adaptiveRowsPerBand(n, floorRowsPerBand, targetOccupancy)
@@ -971,13 +968,9 @@ object Similarity {
     */
   def embeddingCorpusFlagsAuto(corpusVecs: DataFrame, batch: DataFrame,
                                idCol: String, vecCol: String, dims: Int,
-                               bands: Int, floorRowsPerBand: Int,
-                               targetOccupancy: Long = 128L): DataFrame = {
+                               bands: Int, floorRowsPerBand: Int): DataFrame = {
     val n = corpusVecs.count()
-    val r = adaptiveRowsPerBand(n, floorRowsPerBand, targetOccupancy)
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(s"[scale] embeddingCorpusFlagsAuto n=$n " +
-        s"floor=$floorRowsPerBand rowsPerBand=$r")
+    val r = adaptiveRowsPerBand(n, floorRowsPerBand)
     embeddingCorpusFlags(corpusVecs,
       lshBandRows(corpusVecs, idCol, vecCol, dims, bands, r),
       batch, idCol, vecCol, dims, bands, r)
@@ -1008,7 +1001,8 @@ object Similarity {
     * SWEEPS, which should raise `bands` (more independent probes)
     * instead of accepting quadratic candidates.
     */
-  def adaptiveRowsPerBand(n: Long, floor: Int, targetOccupancy: Long = 128L): Int = {
+  def adaptiveRowsPerBand(n: Long, floor: Int,
+                          targetOccupancy: Long = Sizing.TargetOccupancy): Int = {
     // floor ≤ 24 because the widening loop caps at 24 bits — the doc math
     // (2^bits buckets, probe flips) assumes that cap, so a wider floor
     // must be rejected, not silently passed through (ADVICE r11)
@@ -1028,23 +1022,17 @@ object Similarity {
     */
   def lshNeighborPairsAuto(vectors: DataFrame, idCol: String, vecCol: String,
                            dims: Int, bands: Int, floorRowsPerBand: Int,
-                           minCosine: Double,
-                           targetOccupancy: Long = 128L,
-                           maxBroadcastVectorBytes: Long = 1500000000L): DataFrame = {
+                           minCosine: Double): DataFrame = {
     val n = vectors.count()
-    val r = adaptiveRowsPerBand(n, floorRowsPerBand, targetOccupancy)
+    val r = adaptiveRowsPerBand(n, floorRowsPerBand)
     // vector-payload size gate for the candidate join-back (scaladoc on
     // lshNeighborPairs): broadcast while the (id, v, vn) table fits an
     // executor, shuffle above — and also shuffle BELOW 64k rows, where
     // the candidate volume is small enough that the fixed broadcast
     // build cost (~0.3 s measured at sf0.1) exceeds what it saves and
     // the registered small-scale plan shape stays put
-    val bcast = n >= 65536L && n * (dims * 8L + 32L) <= maxBroadcastVectorBytes
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(s"[scale] lshNeighborPairsAuto n=$n " +
-        s"floor=$floorRowsPerBand rowsPerBand=$r " +
-        s"(buckets/band=${1L << r}, target occupancy <= $targetOccupancy, " +
-        s"joinback=${if (bcast) "broadcast" else "shuffle"})")
+    val bcast = n >= Sizing.MinBroadcastVectorRows &&
+      n * (dims * 8L + 32L) <= Sizing.MaxBroadcastVectorBytes
     lshNeighborPairs(vectors, idCol, vecCol, dims, bands, r, minCosine,
       broadcastVectors = bcast)
   }
@@ -1194,8 +1182,8 @@ object Similarity {
   }
 
   /** Sized dispatch over the two lshTopK plans plus the occupancy-
-    * adaptive band width: ONE count() reads the corpus size; below
-    * `bnlMaxRows` the call is BIT-IDENTICAL to
+    * adaptive band width: ONE count() reads the corpus size; through
+    * [[graft.core.Sizing.AnnHoldRows]] the call is BIT-IDENTICAL to
     * `lshTopK(..., rowsPerBand = floor)` (broadcast plan AND results —
     * the registered oracle shape); above it, the banded equi-join runs
     * at [[adaptiveRowsPerBand]] width — the N·N_q nested-loop term and
@@ -1204,21 +1192,14 @@ object Similarity {
     */
   def lshTopKAuto(vectors: DataFrame, idCol: String, vecCol: String,
                   dims: Int, bands: Int, floorRowsPerBand: Int, k: Int,
-                  queryPred: Column, probeFlips: Int = 0,
-                  bnlMaxRows: Long = 4096L,
-                  targetOccupancy: Long = 128L): DataFrame = {
+                  queryPred: Column, probeFlips: Int = 0): DataFrame = {
     val n = vectors.count()
-    if (n <= bnlMaxRows)
+    if (n <= Sizing.AnnHoldRows)
       lshTopK(vectors, idCol, vecCol, dims, bands, floorRowsPerBand, k,
         queryPred, probeFlips)
-    else {
-      val r = adaptiveRowsPerBand(n, floorRowsPerBand, targetOccupancy)
-      if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-        System.err.println(s"[scale] lshTopKAuto n=$n -> banded equi-join, " +
-          s"rowsPerBand=$r (floor $floorRowsPerBand)")
-      lshTopKBanded(vectors, idCol, vecCol, dims, bands, r, k, queryPred,
-        probeFlips)
-    }
+    else
+      lshTopKBanded(vectors, idCol, vecCol, dims, bands,
+        adaptiveRowsPerBand(n, floorRowsPerBand), k, queryPred, probeFlips)
   }
 
   /** Classic IVF sizing (Jégou et al.; the FAISS √N rule, public): the
@@ -1229,22 +1210,22 @@ object Similarity {
     * assignment build pays N·K kernel dots. A FIXED K keeps per-cell
     * population ∝ N: the r11 ×100 study measured the 16-cell registered
     * shape at 154× wall for 100× data (every probe scans N/16 vectors).
-    * Through `holdRows` (default 4096 — the SAME engage point as
-    * lshTopKAuto's broadcast threshold, so every sized dispatch in the
-    * family flips at one documented corpus size) the count IS the
+    * Through [[graft.core.Sizing.AnnHoldRows]] (the SAME engage point
+    * as lshTopKAuto's broadcast threshold, so every sized dispatch in
+    * the family flips at one documented corpus size) the count IS the
     * floor: the registered fixed-K shape, bit-identical to its static
     * oracle at every testdata scale — the r11 3-SF check caught the
     * earlier 2·floor² hold diverging from the sf0.1 oracle. Above the
     * hold, the nearest power of two to √n (smallest k with 2k² ≥ n),
-    * clamped to [floor, cap].
+    * clamped to [floor, [[graft.core.Sizing.MaxCentroids]]].
     */
-  def adaptiveCentroids(n: Long, floor: Int, cap: Int = 4096,
-                        holdRows: Long = 4096L): Int = {
-    require(floor >= 1 && cap >= floor, s"bad floor/cap $floor/$cap")
-    if (n <= holdRows) floor
+  def adaptiveCentroids(n: Long, floor: Int): Int = {
+    require(floor >= 1 && floor <= Sizing.MaxCentroids,
+      s"floor $floor outside [1, ${Sizing.MaxCentroids}]")
+    if (n <= Sizing.AnnHoldRows) floor
     else {
       var k = floor
-      while (k < cap && 2L * k * k < n) k = k << 1
+      while (k < Sizing.MaxCentroids && 2L * k * k < n) k = k << 1
       k
     }
   }
@@ -1260,9 +1241,6 @@ object Similarity {
                   queryPred: Column): DataFrame = {
     val n = vectors.count()
     val c = adaptiveCentroids(n, floorCentroids)
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(s"[scale] ivfTopKAuto n=$n -> centroids=$c " +
-        s"(floor $floorCentroids)")
     ivfTopK(vectors, idCol, vecCol, dims, c, nprobe, k, queryPred)
   }
 
@@ -1300,9 +1278,6 @@ object Similarity {
                     nprobe: Int, k: Int, queryPred: Column): DataFrame = {
     val n = vectors.count()
     val c = adaptiveCentroids(n, floorCentroids)
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(s"[scale] ivfPqTopKAuto n=$n -> centroids=$c " +
-        s"(floor $floorCentroids)")
     ivfPqTopK(vectors, idCol, vecCol, dims, m, ksub, c, nprobe, k, queryPred)
   }
 
@@ -1396,16 +1371,12 @@ object Similarity {
     val q = assignCells(queries, idCol, vecCol, cents)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("ccos"))
     val qCap = probeQueryCap(dims, centroids, collectBudgetBytes)
-    val tq0 = System.nanoTime()
     val qData = q.limit(qCap + 1).collect()
     require(qData.length <= qCap,
       s"ivfPqProbe: query batch exceeds the serve-sized cap of $qCap rows " +
         s"(${collectBudgetBytes >> 20} MiB driver budget at dims=$dims, " +
         s"C=$centroids) — split the batch (the serve loop's request " +
         "granularity) or use ivfPqTopK, whose query side stays distributed")
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(f"[scale] ivfPqProbe query collect: " +
-        f"${(System.nanoTime() - tq0) / 1e9}%.2f s (${qData.length} queries)")
     val probePairs: Seq[(Any, Int, Int)] = qData.toSeq.flatMap { r =>
       if (r.isNullAt(2)) Seq.empty[(Any, Int, Int)]
       else {
@@ -2127,36 +2098,24 @@ object Similarity {
                                queryPred: Column): DataFrame = {
     require(nprobes.nonEmpty,
       "ivfPqResidualRecallCurve needs at least one sweep point")
-    val diag = sys.env.contains("SPARK_GRAFT_SCALE_DIAG")
-    var t0 = System.nanoTime()
-    def lap(name: String): Unit = if (diag) {
-      System.err.println(f"[scale] residualRecallCurve $name: " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     val queries = vectors.filter(queryPred)
     val truth = bruteForceTopK(vectors, queries, idCol, vecCol, k)
       .select(col("query_id"), col("vec_id"))
       .localCheckpoint(true)
-    lap("truth")
     val cents = trainCentroidsExactMatrix(vectors, idCol, vecCol, dims,
       centroids, coarseIters)
-    lap("coarse-train")
     val pq = trainPqResidualMatrix(vectors, idCol, vecCol, dims, m, ksub,
       cents, pqIters)
-    lap("pq-train")
     // ONE assignment + ONE encode shared across the sweep (both
     // checkpointed — they are the expensive terms; each point re-runs
     // only the probe half, the ivfPqRecallCurve discipline)
     val cells = assignCells(vectors, idCol, vecCol, cents)
       .select(col("vec_id"), col("v"), col("ccos"), col("cell"))
       .localCheckpoint(true)
-    lap("cells")
     val codes = ivfPqEncodeResidual(
         cells.select(col("vec_id"), col("v")), "vec_id", "v",
         dims, m, ksub, cents, (s, c) => pq(s)(c))
       .localCheckpoint(true)
-    lap("codes")
     val nq = queries.count()
     // r19 sweep-share: ONE candidate pass at max(nprobes) with prank
     // attached; each sweep point is a prank-slice of the checkpointed
@@ -2164,9 +2123,7 @@ object Similarity {
     // scaladoc), and all |nprobes| hit counts collect in ONE job.
     val cand = residualAdcCandidates(cells, codes, dims, m, ksub, cents,
       (s, c) => pq(s)(c), nprobes.max, queryPred)
-    lap("candidates")
     val hitsByNp = sweepHits(cand, truth, nprobes, k)
-    lap("sweep-hits")
     import vectors.sparkSession.implicits._
     nprobes.map { np =>
       val hits = hitsByNp.getOrElse(np, 0L)

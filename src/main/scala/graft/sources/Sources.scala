@@ -1,29 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Generic scan helpers (SURVEY §2.1).
   *
-  * S8 — extension-dispatch scan (discharge_obs_pd.py:157-172): the
-  * reference switches reader on .csv/.parquet; here one format switch.
-  * S10 — line-by-line CSV date filter (discharge_obs_demo.py:23-50): the
-  * demo's manual parse loop is just a csv scan + pushed-down predicate —
-  * Catalyst turns the filter into a parquet/CSV-level skip, the engine
-  * never materializes rejected rows.
   * S9 — object-store GET/LIST: reads/writes address the store directly via
   * the Hadoop FileSystem API (s3a:// URIs behave identically to file://
   * here — see ObsStore.exists); no staged copy step is needed.
   */
 object Sources {
-
-  /** S8 — read by extension: .csv (header) or .parquet. */
-  def readAuto(spark: SparkSession, path: String): DataFrame =
-    if (path.endsWith(".csv"))
-      spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-    else if (path.endsWith(".parquet"))
-      spark.read.parquet(path)
-    else
-      throw new IllegalArgumentException(s"unsupported extension: $path")
 
   /** JSONL corpus source with an EXPLICIT schema — inference on JSON
     * triggers a whole extra pass over the data (Spark samples or scans
@@ -35,9 +20,4 @@ object Sources {
   def readJsonl(spark: SparkSession, path: String,
                 schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).json(path)
-
-  /** S10 — scan + date predicate; the filter is pushed to the scan. */
-  def readAfter(spark: SparkSession, path: String, tsCol: String,
-                cutoff: Column): DataFrame =
-    readAuto(spark, path).filter(org.apache.spark.sql.functions.col(tsCol) > cutoff)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.core.Sizing
 import graft.storage.ObsStore
 
 /** Streaming face of the engine (SURVEY §2.10).
@@ -21,8 +22,8 @@ import graft.storage.ObsStore
   *    with dynamic partition overwrite. Late/revised data needs no state
   *    store: affected partitions are re-read and re-merged, which is the
   *    reference's own strategy;
-  *  - watermarked tumbling windows for the A1/A5 rollups when run
-  *    continuously (48 h watermark = the 2-day lookback, T1).
+  *  - a 48 h watermark (= the 2-day lookback, T1) bounds the
+  *    cross-batch dedup state of `dedupStream`.
   */
 object StreamingIngest {
 
@@ -173,7 +174,7 @@ object StreamingIngest {
                           dims: Int = 64, bands: Int = 4,
                           rowsPerBand: Int = 5,
                           minCosine: Double = 0.9,
-                          targetOccupancy: Long = 128L): Unit = {
+                          targetOccupancy: Long = Sizing.TargetOccupancy): Unit = {
     import graft.sim.Similarity
     val vecs = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<DOUBLE>")
@@ -290,7 +291,7 @@ object StreamingIngest {
                             corpusDir: String, checkpointDir: String,
                             bits: Int = 64, bands: Int = 8,
                             maxHamming: Int = 2,
-                            targetOccupancy: Long = 128L): Unit = {
+                            targetOccupancy: Long = Sizing.TargetOccupancy): Unit = {
     import graft.text.NearDup
     val fps = spark.readStream
       .schema("doc_id LONG, fp LONG")
@@ -367,21 +368,6 @@ object StreamingIngest {
   def dedupStream(obs: DataFrame): DataFrame =
     obs.withWatermark("ts", "48 hours")
       .dropDuplicatesWithinWatermark("station", "ts", "param")
-
-  /** Continuous hourly rollup with a 48 h watermark (the reference's
-    * lookback window): emits (station, param, window, mean/max/last) in
-    * append mode once windows close.
-    */
-  def hourlyRollupStream(obs: DataFrame): DataFrame =
-    obs.withWatermark("ts", "48 hours")
-      .groupBy(col("station"), col("param"), window(col("ts"), "1 hour"))
-      .agg(avg(col("value")).as("mean_value"),
-           max(col("value")).as("max_value"),
-           max_by(col("value"), when(col("value").isNotNull, col("ts"))).as("last_value"),
-           count(col("value")).as("n_obs"))
-      .select(col("station"), col("param"),
-        col("window.start").as("bucket"),
-        col("mean_value"), col("max_value"), col("last_value"), col("n_obs"))
 
   /** STREAMING DRIFT MONITOR: one `Trigger.AvailableNow` tick drains
     * newly staged docs, folds their log₂ length buckets into the

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, Sizing}
 import graft.plans.ArrayOps
 
 /** Byte-Pair-Encoding tokenizer TRAINING at corpus scale (Sennrich et
@@ -167,7 +167,7 @@ object Bpe {
   def tokenizePack(df: DataFrame, idCol: String, textCol: String,
                    shardCol: String, numMerges: Int, blockTokens: Int,
                    batchMerges: Int = 32,
-                   maxBroadcastVocab: Long = MaxBroadcastVocab): DataFrame = {
+                   maxBroadcastVocab: Long = Sizing.MaxBroadcastVocab): DataFrame = {
     val (merges, words) = trainBpe(df, textCol, numMerges)
     val nTrained = merges.count()
     require(nTrained == numMerges,
@@ -194,7 +194,7 @@ object Bpe {
   def tokenizePackLoose(df: DataFrame, idCol: String, textCol: String,
                         shardCol: String, numMerges: Int, blockTokens: Int,
                         batchMerges: Int = 32,
-                        maxBroadcastVocab: Long = MaxBroadcastVocab): DataFrame = {
+                        maxBroadcastVocab: Long = Sizing.MaxBroadcastVocab): DataFrame = {
     val (merges, words) = trainBpe(df, textCol, numMerges)
     packTrained(df, idCol, textCol, shardCol, merges, blockTokens,
       batchMerges, stateOpt = Some(words),
@@ -223,7 +223,12 @@ object Bpe {
     packTrained(df, idCol, textCol, shardCol, merges, blockTokens,
       batchMerges, vocabOpt = Some(vocab), baseOffsets = baseOffsets)
 
-  /** SELF-TRAINED SEGMENTATION REUSES THE TRAINING STATE (r20, guide
+  /** The shared segment → positions → vocab ids → pack tail of the two
+    * tokenizePack faces, over an already-trained merge table.
+    * `stateOpt` = trainBpe's word-grain trained state (word, wc, syms),
+    * passed ONLY when `df` is the training corpus itself.
+    *
+    * SELF-TRAINED SEGMENTATION REUSES THE TRAINING STATE (r20, guide
     * §1.2 #1 "don't compute things you throw away"): [[trainBpe]]'s
     * returned `words` frame IS the trained segmentation of every
     * distinct corpus word — the same `BpeMergePair` kernel applied in
@@ -243,27 +248,18 @@ object Bpe {
     * the shape stays the one the ×1000 run validated. BpeSpec pins
     * tier equality (maxBroadcastVocab = 0 vs default).
     */
-  private val MaxBroadcastVocab = 2000000L
-
-  /** The shared segment → positions → vocab ids → pack tail of the two
-    * tokenizePack faces, over an already-trained merge table.
-    * `stateOpt` = trainBpe's word-grain trained state (word, wc, syms),
-    * passed ONLY when `df` is the training corpus itself. */
   private def packTrained(df: DataFrame, idCol: String, textCol: String,
                           shardCol: String, merges: DataFrame,
                           blockTokens: Int, batchMerges: Int,
                           vocabOpt: Option[DataFrame] = None,
                           baseOffsets: Option[DataFrame] = None,
                           stateOpt: Option[DataFrame] = None,
-                          maxBroadcastVocab: Long = MaxBroadcastVocab): DataFrame = {
+                          maxBroadcastVocab: Long = Sizing.MaxBroadcastVocab): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // sized dispatch on the MEASURED vocab count (one scalar job over
     // trainBpe's already-materialized checkpoint blocks — the
     // sizedSemiJoin doctrine)
     val segState = stateOpt.filter(_.count() <= maxBroadcastVocab)
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG") && stateOpt.isDefined)
-      System.err.println(s"[scale] packTrained bound=$maxBroadcastVocab " +
-        s"tier=" + (if (segState.isDefined) "state-broadcast" else "kernel-chain"))
     val seg = segState match {
       case Some(st) =>
         df.select(col(idCol).as("doc_id"),
@@ -364,7 +360,7 @@ object Bpe {
   def fertility(df: DataFrame, idCol: String, textCol: String,
                 shardCol: String, numMerges: Int,
                 batchMerges: Int = 32,
-                maxBroadcastVocab: Long = MaxBroadcastVocab): DataFrame = {
+                maxBroadcastVocab: Long = Sizing.MaxBroadcastVocab): DataFrame = {
     val (merges, words) = trainBpe(df, textCol, numMerges)
     val nTrained = merges.count()
     require(nTrained == numMerges,

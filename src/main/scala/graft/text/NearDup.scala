@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing
+
 /** Document deduplication at scale: exact, MinHash+LSH, SimHash and blocked
   * n-gram Jaccard (builder brief; no reference analog — these extend the
   * engine for training-data pipelines).
@@ -163,26 +165,6 @@ object NearDup {
 
   /** MinHash modulus — fits k·P in a long with room to spare. */
   val P: Long = 2147483647L
-
-  /** MinHash signatures m0..m{k-1} per id, via the double-hashing family
-    * h_i(g) = (h1(g) + i·h2(g)) mod P with h1/h2 = two md5 halves (Broder
-    * minwise hashing; Kirsch-Mitzenmacher double hashing — public results).
-    *
-    * Design for scale: ONE md5 per shingle occurrence inside whole-stage
-    * codegen (explode → hash → 16 `min` aggregates in a single two-phase
-    * HashAggregate), instead of k interpreted higher-order-function passes
-    * per row — measured ~20× faster at sf0.1 and shuffle-light (the
-    * aggregate's map-side combine reduces to one row per doc).
-    */
-  def minhashSignatures(df: DataFrame, idCol: String, shingleCol: String,
-                        k: Int): DataFrame = {
-    val ex = df.select(col(idCol).as("id"), explode(col(shingleCol)).as("g"))
-    val hashed = ex.select(col("id"),
-      (TextOps.gramHash64(df.sparkSession, col("g")) % P).as("h1"),
-      (TextOps.gramHash64Hi(df.sparkSession, col("g")) % P).as("h2"))
-    val aggs = (0 until k).map(i => min((col("h1") + lit(i.toLong) * col("h2")) % P).as(s"m$i"))
-    hashed.groupBy("id").agg(aggs.head, aggs.tail: _*)
-  }
 
   /** Candidate pairs from band collisions, verified with exact Jaccard on
     * the (hashed) shingle sets. Returns (id_a, id_b, jaccard), id_a < id_b.
@@ -349,7 +331,7 @@ object NearDup {
                       blockCols: Seq[String], nGram: Int = 3,
                       k: Int = 16, bands: Int = 8,
                       minJaccard: Double = 0.5,
-                      maxBroadcastPairs: Long = 4000000L): DataFrame = {
+                      maxBroadcastPairs: Long = Sizing.MaxBroadcastRows): DataFrame = {
     val shingles = TextOps.wordShingleRows(docs, idCol, textCol, nGram)
     val sigsets = sigSets(shingles, k).localCheckpoint(true)
     val blocks = docs.select(col(idCol).as("id") +: blockCols.map(col): _*)
@@ -369,10 +351,6 @@ object NearDup {
       .dropDuplicates("id_a", "id_b")
       .localCheckpoint(true)
     val nCand = candIds.count()
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(s"[scale] dedupRecallEval candidates=$nCand " +
-        s"bound=$maxBroadcastPairs tier=" +
-        (if (nCand <= maxBroadcastPairs) "single-pass" else "split"))
     val labeled =
       if (nCand <= maxBroadcastPairs) {
         // single-pass tier: jaccard once per within-block pair; the
@@ -696,8 +674,8 @@ object NearDup {
     * (specs force the distributed shapes through this).
     */
   def dedupClusters(pairs: DataFrame, idACol: String, idBCol: String,
-                    maxBroadcastEdges: Long = 4000000L,
-                    maxLocalPairs: Long = 1000000L): DataFrame = {
+                    maxBroadcastEdges: Long = Sizing.MaxBroadcastRows,
+                    maxLocalPairs: Long = Sizing.MaxLocalPairs): DataFrame = {
     // CONF ISOLATION (r07 advice): the relayout and the loop need
     // session-LEVEL settings (AQE off so checkpoints keep their
     // partitioning, loop-sized shuffle width). Earlier rounds mutated
@@ -731,14 +709,6 @@ object NearDup {
         if (measured >= 0 && measured <= maxLocalPairs)
           localComponents(collectFlatPairs(pairRows))
         else None
-      // scale-study diagnostics (SCALE.md): the tier decision and the
-      // measured volume it was made on, as a stderr line — evidence that
-      // the distributed path ENGAGES past the bound, not just that it
-      // exists (VERDICT r10 #1). Off unless explicitly asked for.
-      if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-        System.err.println(s"[scale] dedupClusters pairs=$measured " +
-          s"bound=$maxLocalPairs tier=" +
-          (if (localComp.isDefined) "driver-local" else "distributed"))
       localComp match {
         case Some(comp) =>
           import session0.implicits._
@@ -827,13 +797,9 @@ object NearDup {
     def labelSum(df: DataFrame): Long =
       df.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)
     var prevSum = Long.MaxValue
-    var t0 = System.nanoTime()
     var curSum = labelSum(labels)
-    if (sys.env.contains("GRAFT_DEBUG_CLUSTER"))
-      System.err.println(f"[cluster] init sum in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     var rounds = 0
     while (curSum != prevSum && rounds < 25) {
-      t0 = System.nanoTime()
       // neighbor propagation + POINTER JUMPING (label(label(id))): path
       // compression makes convergence O(log diameter) — plain neighbor
       // propagation needs diameter-many rounds and chain-shaped candidate
@@ -861,9 +827,6 @@ object NearDup {
       checkpointRdd(labels).foreach(_.unpersist(blocking = false))
       labels = updated
       rounds += 1
-      if (sys.env.contains("GRAFT_DEBUG_CLUSTER"))
-        System.err.println(f"[cluster] round=$rounds sum=$curSum " +
-          f"in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     // edges fed their last join; only the FINAL label blocks must outlive
     // this call (they back the returned frame — ContextCleaner reclaims
@@ -1112,7 +1075,7 @@ object NearDup {
     * ladder is 8 → 4: the 20 M-hash shape lands on 4.
     */
   def hammingAutoBands(n: Long, bits: Int, floorBands: Int, maxHamming: Int,
-                       targetOccupancy: Long = 128L): Int = {
+                       targetOccupancy: Long = Sizing.TargetOccupancy): Int = {
     require(bits % floorBands == 0,
       s"bits ($bits) must divide into floorBands ($floorBands)")
     require(maxHamming < floorBands,
@@ -1142,13 +1105,10 @@ object NearDup {
   def hammingCorpusFlagsAuto(corpus: DataFrame, batch: DataFrame,
                              idCol: String, hashCol: String, bits: Int,
                              floorBands: Int, maxHamming: Int,
-                             targetOccupancy: Long = 128L): DataFrame = {
+                             targetOccupancy: Long = Sizing.TargetOccupancy): DataFrame = {
     val n = corpus.count()
     val bands = hammingAutoBands(n, bits, floorBands, maxHamming,
       targetOccupancy)
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(s"[scale] hammingCorpusFlagsAuto n=$n -> " +
-        s"bands=$bands (floor $floorBands, maxHamming $maxHamming)")
     hammingCorpusFlags(hammingBandRows(corpus, idCol, hashCol, bits, bands),
       batch, idCol, hashCol, bits, bands)
   }
@@ -1174,7 +1134,7 @@ object NearDup {
                              hashCol: String, bits: Int, bandsDir: String,
                              metaDir: String, floorBands: Int,
                              maxHamming: Int,
-                             targetOccupancy: Long = 128L): Int = {
+                             targetOccupancy: Long = Sizing.TargetOccupancy): Int = {
     val spark = corpus.sparkSession
     val n = corpus.count()
     val needed = hammingAutoBands(n, bits, floorBands, maxHamming,

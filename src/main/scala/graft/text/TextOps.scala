@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing
+
 /** Text-analysis primitives for the training-data pipeline surface
   * (builder brief: language-ID, quality scoring, token counting, document
   * fingerprinting). All pure Column compositions — codegen'd, no UDFs, and
@@ -152,15 +154,9 @@ object TextOps {
     */
   def sizedSemiJoin(probe: org.apache.spark.sql.DataFrame,
                     keys: org.apache.spark.sql.DataFrame, keyCol: String,
-                    maxBroadcastKeys: Long = 4000000L): org.apache.spark.sql.DataFrame = {
+                    maxBroadcastKeys: Long = Sizing.MaxBroadcastRows): org.apache.spark.sql.DataFrame = {
     val mat = keys.localCheckpoint(true)
     val n = mat.count()
-    // scale-study diagnostics (SCALE.md, VERDICT r10 #1): which side of
-    // the measured-size gate this call landed on, and on what volume
-    if (sys.env.contains("SPARK_GRAFT_SCALE_DIAG"))
-      System.err.println(s"[scale] sizedSemiJoin keys=$n " +
-        s"bound=$maxBroadcastKeys tier=" +
-        (if (n <= maxBroadcastKeys) "broadcast" else "merge"))
     if (n <= maxBroadcastKeys)
       probe.join(broadcast(mat), Seq(keyCol), "left_semi")
     else
@@ -340,14 +336,6 @@ object TextOps {
       .select(col("id"), col("pos").cast("long").as("pos"),
         concat_ws(" ", (0 until n).map(j => col(s"s.c$j")): _*).as("g"))
   }
-
-  /** Character n-gram shingles (distinct). */
-  def charShingles(text: Column, n: Int): Column =
-    array_distinct(
-      when(length(text) >= n,
-        transform(sequence(lit(1), length(text) - (n - 1)),
-          i => text.substr(i, lit(n))))
-      .otherwise(array()))
 
   /** Seeded 32-bit hash of an id column: the first 8 hex chars of
     * md5(seed || id) as a long in [0, 2^32) — the ONE deterministic

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derived-corpus generator for the scale-up study (VERDICT r10 #1).
@@ -235,14 +235,7 @@ object ScaleGen {
     require(tables.subsetOf(knownTables),
       s"unknown table name(s) ${(tables -- knownTables).mkString(", ")}; " +
         s"known: ${knownTables.toSeq.sorted.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.local()
     import graft.core.Tables
     if (tables("documents"))
       scaleDocuments(Tables.documents(spark, src), mult, twinFrac,

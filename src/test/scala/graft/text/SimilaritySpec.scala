@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.core.Tables
+import graft.core.{Sizing, Tables}
 import graft.sim.Similarity
 
 /** ANN quality: the scale paths trade recall for bounded work — this spec
@@ -407,13 +407,28 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("lshTopKAuto: below bnlMaxRows the result is the registered lshTopK shape") {
+  test("lshTopKAuto: lshTopK's shape through AnnHoldRows, banded join past it") {
     val emb = Tables.embeddings(spark, dir)
     val fixed = Similarity.lshTopK(emb, "vec_id", "embedding",
       dims = 64, bands = 4, rowsPerBand = 5, k = 3, queryPred = pred)
     val auto = Similarity.lshTopKAuto(emb, "vec_id", "embedding",
       dims = 64, bands = 4, floorRowsPerBand = 5, k = 3, queryPred = pred)
     assert(auto.exceptAll(fixed).isEmpty && fixed.exceptAll(auto).isEmpty)
+    // the shared engage point, pinned from the lshTopKAuto side: a corpus
+    // of exactly AnnHoldRows rows keeps the nested-loop plan, one more
+    // row drops it, and adaptiveCentroids leaves its floor at that same n
+    def synth(n: Long) = spark.range(n).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(63)),
+        i => sin(col("id") * 7 + i).cast("float")).as("embedding"))
+    def plan(n: Long): String = Similarity.lshTopKAuto(synth(n), "vec_id",
+        "embedding", dims = 64, bands = 4, floorRowsPerBand = 5, k = 3,
+        queryPred = pred)
+      .queryExecution.executedPlan.toString
+    val hold = Sizing.AnnHoldRows
+    assert(plan(hold).contains("BroadcastNestedLoopJoin"))
+    assert(!plan(hold + 1).contains("BroadcastNestedLoopJoin"))
+    assert(Similarity.adaptiveCentroids(hold, 16) == 16)
+    assert(Similarity.adaptiveCentroids(hold + 1, 16) > 16)
   }
 
   test("adaptiveCentroids: floor through the 4096-row hold, ~sqrt(n) power of two above, capped") {
