@@ -19,23 +19,40 @@ import org.apache.spark.sql.functions._
 object Merge {
 
   private def merge(old: DataFrame, nw: DataFrame, keys: Seq[String],
-                    valueCols: Seq[String], oldWins: Boolean): DataFrame = {
+                    valueCols: Seq[String], oldWins: Boolean,
+                    changedCol: Option[String] = None): DataFrame = {
     val o = old.select((keys ++ valueCols).map(col): _*)
       .withColumnsRenamed(valueCols.map(c => c -> s"__o_$c").toMap)
+      .withColumn("__o_row", lit(true))
     val n = nw.select((keys ++ valueCols).map(col): _*)
       .withColumnsRenamed(valueCols.map(c => c -> s"__n_$c").toMap)
     val joined = o.join(n, keys, "full_outer") // using-join coalesces keys
-    val values = valueCols.map { c =>
+    val merged = valueCols.map { c =>
       val (a, b) = if (oldWins) (s"__o_$c", s"__n_$c") else (s"__n_$c", s"__o_$c")
-      coalesce(col(a), col(b)).as(c)
+      c -> coalesce(col(a), col(b))
     }
-    joined.select(keys.map(col) ++ values: _*)
+    // a merged row differs from the stored one when the old side had no
+    // row, or when the precedence picked a value the old cell did not hold
+    val changed = changedCol.map { f =>
+      merged.map { case (c, v) => !v.eqNullSafe(col(s"__o_$c")) }
+        .foldLeft(col("__o_row").isNull)(_ || _).as(f)
+    }
+    joined.select(keys.map(col) ++ merged.map { case (c, v) => v.as(c) } ++ changed: _*)
   }
 
   /** J3 — combine_first: old wins, new fills gaps. */
   def combineFirst(old: DataFrame, nw: DataFrame, keys: Seq[String],
                    valueCols: Seq[String]): DataFrame =
     merge(old, nw, keys, valueCols, oldWins = true)
+
+  /** J3 with a per-row boolean `changedCol`: true where the merged row is
+    * not already in `old` — its key is absent there, or a null old cell was
+    * filled by a non-null new value. An all-false result means the merge is
+    * a no-op on `old`, so a caller persisting `old` can skip the write.
+    */
+  def combineFirstChanged(old: DataFrame, nw: DataFrame, keys: Seq[String],
+                          valueCols: Seq[String], changedCol: String): DataFrame =
+    merge(old, nw, keys, valueCols, oldWins = true, Some(changedCol))
 
   /** J9 — update: new wins, old kept where new is null or absent. */
   def updateWith(old: DataFrame, nw: DataFrame, keys: Seq[String],

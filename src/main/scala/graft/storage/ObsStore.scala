@@ -15,13 +15,15 @@ import graft.ops.Merge
   * — distinct-month discovery, per-month file selection, per-file
   * combine_first, rewrite (:192-258) — Catalyst does declaratively:
   * partition-column filters prune the scan, and dynamic partition overwrite
-  * rewrites ONLY the touched partitions.
+  * rewrites only the (yyyymm, param) partitions the merge changed; a no-op
+  * tick (a retried tick, or a lookback with no new readings) writes
+  * nothing.
   *
   * Scale notes: the month list of the incoming batch is tiny (bounded by
-  * the calendar — a 2-day ingest touches ≤2 months), so collecting it to
-  * drive partition pruning is O(1) driver work, not data-sized. The merge
-  * join shuffles only the overlapping partitions' rows on
-  * (station, ts, param).
+  * the calendar — a 2-day ingest touches ≤2 months), and so is the list of
+  * changed partitions, so collecting them to drive pruning and the write
+  * is O(1) driver work, not data-sized. The merge join shuffles only the
+  * overlapping partitions' rows on (station, ts, param).
   */
 class ObsStore(spark: SparkSession, path: String) {
 
@@ -33,11 +35,6 @@ class ObsStore(spark: SparkSession, path: String) {
       spark.sparkContext.hadoopConfiguration).exists(new org.apache.hadoop.fs.Path(path))
 
   def read(): DataFrame = spark.read.parquet(path)
-
-  /** Months (partition keys) present in a batch — the driver-side pruning
-    * list (bounded by calendar span, not data volume). */
-  def monthsOf(obs: DataFrame): Seq[String] =
-    withKeys(obs).select("yyyymm").distinct().collect().map(_.getString(0)).toSeq
 
   /** Cluster rows by their target partition before the partitioned write:
     * without this, EVERY task holds a writer for EVERY (yyyymm, param) it
@@ -62,26 +59,33 @@ class ObsStore(spark: SparkSession, path: String) {
   /** T2 merge-upsert: read ONLY the partitions overlapping the batch
     * (pruned via the partition-column isin filter), combine_first with the
     * reference's precedence — existing non-null wins, new fills gaps
-    * (discharge_obs_pd.py:176-190) — and dynamically overwrite just those
-    * partitions.
+    * (discharge_obs_pd.py:176-190) — and dynamically overwrite only the
+    * (yyyymm, param) partitions the merge changed; a no-op tick writes
+    * nothing.
     */
   def mergeUpsert(newObs: DataFrame): Unit = {
     if (!exists) { write(newObs); return }
-    val months = monthsOf(newObs)
+    // the batch is evaluated once: its month list and the merge both read
+    // this checkpoint, so a keep-first dedup upstream (whose order may
+    // depend on the evaluation) cannot differ between the two
+    val batch = withKeys(newObs.select("station", "ts", "param", "value"))
+      .localCheckpoint(true)
+    val months = batch.select("yyyymm").distinct().collect().map(_.getString(0)).toSeq
+    if (months.isEmpty) return
     val existing = read().filter(col("yyyymm").isin(months: _*))
       .select("station", "ts", "param", "value")
-    val merged = Merge.combineFirst(existing, newObs.select("station", "ts", "param", "value"),
-      Seq("station", "ts", "param"), Seq("value"))
+    val merged = Merge.combineFirstChanged(existing, batch,
+        Seq("station", "ts", "param"), Seq("value"), "__changed")
       // materialize BEFORE writing: the merge reads the very partitions the
       // dynamic overwrite rewrites — staging-commit makes the lazy form
       // work, but an eager localCheckpoint removes the self-overwrite
       // hazard outright (the overlap is bounded by the batch's month span,
       // so the materialized set is small relative to the table)
       .localCheckpoint(true)
-    clustered(withKeys(merged)).write
-      .partitionBy("yyyymm", "param")
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(path)
+    val keyed = withKeys(merged)
+    val changed = keyed.filter(col("__changed")).select("yyyymm", "param").distinct()
+      .collect().map(r => col("yyyymm") <=> r.getString(0) && col("param") <=> r.getString(1))
+    if (changed.nonEmpty)
+      write(keyed.filter(changed.reduce(_ || _)).drop("__changed", "yyyymm"))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.TimeUtil
-import graft.export.Exports
+import graft.export.{Exports, Xls, Xlsx}
 import graft.ingest.{EcccSwob, Provincial, Usgs, Wsc}
 import graft.pipeline.Pipelines
 import graft.storage.ObsStore
@@ -98,23 +98,25 @@ object ExportDaily {
           nowIso: Option[String], stationsArg: Seq[String]): (Long, Long) = {
     val inst = new ObsStore(spark, storeDir).read()
     // default `now` = the newest stored observation — the tail-patch
-    // cutoff the reference takes from the wall clock on its cron tick.
-    // An EMPTY store has no max(ts): fail with an actionable message
-    // instead of NPE-ing later in the rollup.
-    val now = nowIso.map(s => lit(s).cast("timestamp")).getOrElse {
-      val maxTs = inst.agg(max(col("ts"))).head().getTimestamp(0)
-      require(maxTs != null,
-        s"store at $storeDir is empty; pass nowIso explicitly")
-      lit(maxTs)
+    // cutoff the reference takes from the wall clock on its cron tick —
+    // and the sheet year with it, from one aggregate. An EMPTY store has
+    // no max(ts): fail with an actionable message instead of NPE-ing
+    // later in the rollup.
+    val (now, year) = nowIso match {
+      case Some(s) => (lit(s).cast("timestamp"), s.take(4))
+      case None =>
+        val r = inst.agg(max(col("ts")), date_format(max(col("ts")), "yyyy")).head()
+        require(!r.isNullAt(0), s"store at $storeDir is empty; pass nowIso explicitly")
+        (lit(r.getTimestamp(0)), r.getString(1))
     }
-    val hourly = Pipelines.hourlyRollup(inst, now)
-    hourly.write.mode("overwrite").parquet(s"$outDir/hourly")
+    Pipelines.hourlyRollup(inst, now).write.mode("overwrite").parquet(s"$outDir/hourly")
     // same stale-listing hazard as EcccTick's grid: a second run in one
     // session must not plan its read-back over the deleted files
     spark.catalog.refreshByPath(s"$outDir/hourly")
-    val daily = Pipelines.dailyRollup(spark.read.parquet(s"$outDir/hourly"))
-    daily.write.mode("overwrite").parquet(s"$outDir/daily")
+    val hourly = spark.read.parquet(s"$outDir/hourly")
+    Pipelines.dailyRollup(hourly).write.mode("overwrite").parquet(s"$outDir/daily")
     spark.catalog.refreshByPath(s"$outDir/daily")
+    val daily = spark.read.parquet(s"$outDir/daily")
     Exports.writeCsv(
       Pipelines.coffeeProduct(spark, inst)
         .withColumn("bucket", date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss")),
@@ -123,13 +125,11 @@ object ExportDaily {
       if (stationsArg.nonEmpty) stationsArg
       else daily.filter(col("param") === "Q").select("station").distinct()
         .collect().map(_.getString(0)).sorted.toSeq
-    val model = Pipelines.modelInput(spark.read.parquet(s"$outDir/daily"),
-        stations, estimates = Nil)
+    val model = Pipelines.modelInput(daily, stations, estimates = Nil)
       .withColumn("date", date_format(col("date"), "yyyy-MM-dd"))
-    val year = nowIso.map(_.take(4)).getOrElse(
-      inst.agg(date_format(max(col("ts")), "yyyy")).head().getString(0))
-    Exports.writeXlsxSheet(model, s"$outDir/model.xlsx", year, "date")
-    Exports.writeXlsSheet(model, s"$outDir/obsflows.xls", year, "date")
+    val grid = Exports.sheetRows(model, "date")
+    Xlsx.upsertSheet(s"$outDir/model.xlsx", year, grid)
+    Xls.upsertSheet(s"$outDir/obsflows.xls", year, grid)
     val counts = (hourly.count(), daily.count())
     println(s"[export-daily] hourly=${counts._1} daily=${counts._2} " +
       s"stations=${stations.size} -> $outDir")
@@ -184,15 +184,15 @@ object EcccTick {
     val done = grid.select(col("station"), col("ts"), col("f_read"))
     val pending = EcccSwob.pendingWork(stations, hours, done)
     val nPending = pending.count()
-    for (param <- Seq("TA", "PC")) {
-      val st = grid.filter(col("param") === param).select("station")
-        .distinct().collect().map(_.getString(0)).sorted.toSeq
-      if (st.nonEmpty)
-        Exports.writeCsv(
-          Pipelines.ecccVariableExport(grid, param, st)
-            .withColumn("ts", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")),
-          s"$outDir/$param")
-    }
+    val exported = Seq("TA", "PC")
+    val stationsOf = grid.filter(col("param").isin(exported: _*))
+      .select("param", "station").distinct().collect()
+      .groupMap(_.getString(0))(_.getString(1))
+    for (param <- exported; st <- stationsOf.get(param))
+      Exports.writeCsv(
+        Pipelines.ecccVariableExport(grid, param, st.sorted.toSeq)
+          .withColumn("ts", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")),
+        s"$outDir/$param")
     val nGrid = grid.count()
     println(s"[eccc-tick] grid rows=$nGrid pending cells=$nPending -> $outDir")
     (nGrid, nPending)

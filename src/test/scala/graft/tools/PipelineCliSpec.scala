@@ -48,6 +48,22 @@ class PipelineCliSpec extends SparkSpec {
     assert(coffee.count() > 0)
   }
 
+  test("ExportDaily cron default: now from the store, counts from the products, re-runs agree") {
+    val storeDir = Files.createTempDirectory("cli-store3").toString + "/obs"
+    IngestTick.run(spark, resourcesRoot, storeDir)
+    val outDir = Files.createTempDirectory("cli-out3").toString
+    val year = spark.read.parquet(storeDir).agg(date_format(max(col("ts")), "yyyy"))
+      .head().getString(0)
+    val first = ExportDaily.run(spark, storeDir, outDir, nowIso = None, stationsArg = Nil)
+    assert(first._1 > 0 && first._2 > 0)
+    assert(first === (spark.read.parquet(s"$outDir/hourly").count(),
+      spark.read.parquet(s"$outDir/daily").count()))
+    assert(graft.export.Xlsx.read(s"$outDir/model.xlsx").map(_._1) === Seq(year))
+    assert(graft.export.Xls.read(s"$outDir/obsflows.xls").map(_._1) === Seq(year))
+    // a second tick in the same session reads its own fresh products back
+    assert(ExportDaily.run(spark, storeDir, outDir, nowIso = None, stationsArg = Nil) === first)
+  }
+
   test("EcccTick builds the resume grid, old wins on re-stage, exports pivots") {
     val gridDir = Files.createTempDirectory("cli-grid").toString + "/grid"
     val outDir = Files.createTempDirectory("cli-eccc").toString
