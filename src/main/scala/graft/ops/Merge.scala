@@ -18,9 +18,12 @@ import org.apache.spark.sql.functions._
   */
 object Merge {
 
+  /** Name of the per-row flag `combineFirstChanged` adds. */
+  val ChangedCol = "__changed"
+
   private def merge(old: DataFrame, nw: DataFrame, keys: Seq[String],
                     valueCols: Seq[String], oldWins: Boolean,
-                    changedCol: Option[String] = None): DataFrame = {
+                    withChanged: Boolean = false): DataFrame = {
     val o = old.select((keys ++ valueCols).map(col): _*)
       .withColumnsRenamed(valueCols.map(c => c -> s"__o_$c").toMap)
       .withColumn("__o_row", lit(true))
@@ -33,10 +36,9 @@ object Merge {
     }
     // a merged row differs from the stored one when the old side had no
     // row, or when the precedence picked a value the old cell did not hold
-    val changed = changedCol.map { f =>
+    val changed = if (!withChanged) Nil else Seq(
       merged.map { case (c, v) => !v.eqNullSafe(col(s"__o_$c")) }
-        .foldLeft(col("__o_row").isNull)(_ || _).as(f)
-    }
+        .foldLeft(col("__o_row").isNull)(_ || _).as(ChangedCol))
     joined.select(keys.map(col) ++ merged.map { case (c, v) => v.as(c) } ++ changed: _*)
   }
 
@@ -45,14 +47,14 @@ object Merge {
                    valueCols: Seq[String]): DataFrame =
     merge(old, nw, keys, valueCols, oldWins = true)
 
-  /** J3 with a per-row boolean `changedCol`: true where the merged row is
+  /** J3 with a per-row boolean `ChangedCol`: true where the merged row is
     * not already in `old` — its key is absent there, or a null old cell was
     * filled by a non-null new value. An all-false result means the merge is
     * a no-op on `old`, so a caller persisting `old` can skip the write.
     */
   def combineFirstChanged(old: DataFrame, nw: DataFrame, keys: Seq[String],
-                          valueCols: Seq[String], changedCol: String): DataFrame =
-    merge(old, nw, keys, valueCols, oldWins = true, Some(changedCol))
+                          valueCols: Seq[String]): DataFrame =
+    merge(old, nw, keys, valueCols, oldWins = true, withChanged = true)
 
   /** J9 — update: new wins, old kept where new is null or absent. */
   def updateWith(old: DataFrame, nw: DataFrame, keys: Seq[String],

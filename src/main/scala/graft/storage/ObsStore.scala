@@ -75,7 +75,7 @@ class ObsStore(spark: SparkSession, path: String) {
     val existing = read().filter(col("yyyymm").isin(months: _*))
       .select("station", "ts", "param", "value")
     val merged = Merge.combineFirstChanged(existing, batch,
-        Seq("station", "ts", "param"), Seq("value"), "__changed")
+        Seq("station", "ts", "param"), Seq("value"))
       // materialize BEFORE writing: the merge reads the very partitions the
       // dynamic overwrite rewrites — staging-commit makes the lazy form
       // work, but an eager localCheckpoint removes the self-overwrite
@@ -83,9 +83,9 @@ class ObsStore(spark: SparkSession, path: String) {
       // so the materialized set is small relative to the table)
       .localCheckpoint(true)
     val keyed = withKeys(merged)
-    val changed = keyed.filter(col("__changed")).select("yyyymm", "param").distinct()
+    val changed = keyed.filter(col(Merge.ChangedCol)).select("yyyymm", "param").distinct()
       .collect().map(r => col("yyyymm") <=> r.getString(0) && col("param") <=> r.getString(1))
     if (changed.nonEmpty)
-      write(keyed.filter(changed.reduce(_ || _)).drop("__changed", "yyyymm"))
+      write(keyed.filter(changed.reduce(_ || _)).drop(Merge.ChangedCol, "yyyymm"))
   }
 }
