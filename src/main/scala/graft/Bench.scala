@@ -350,28 +350,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // SPILL-SAFE LARGE SHUFFLES (VERDICT r12 #3): start every shuffle
-      // at 512 partitions and let AQE COALESCE small stages back to the
-      // 64 MB advisory target — at sf0.1 plans land where they always
-      // did, while a ×1000 wedge join's per-task sort shrinks 16×, so
-      // 32 concurrent tasks stop holding multi-GB page sets that OOM'd
-      // the default 8 GiB single-box heap (the r12 ×1000 spot needed a
-      // 48g dial; this makes the dial automatic and data-proportional —
-      // exactly what a 1000-executor cluster does by having 1000×32
-      // shuffle slots)
-      // env-tunable for A/B drills (SPARK_GRAFT_INITIAL_PARTITIONS);
-      // driver runs leave it unset → 512
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "512"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.ToolSession.local()
 
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

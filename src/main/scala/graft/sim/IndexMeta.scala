@@ -31,9 +31,7 @@ object IndexMeta {
     * the artifact predates the meta contract (no directory). */
   def read(spark: SparkSession, metaDir: String,
            cols: Seq[String]): Option[Map[String, Long]] = {
-    val p = new org.apache.hadoop.fs.Path(metaDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
+    if (!graft.storage.Fs.exists(spark, metaDir)) None
     else {
       val rows = spark.read.parquet(metaDir)
         .select(cols.map(c => col(c).cast("long").as(c)): _*).collect()

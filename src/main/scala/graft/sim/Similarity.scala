@@ -690,7 +690,7 @@ object Similarity {
 
   /** Probe an ALREADY-BUILT IVF index frame (vec_id, v, vn, ccos, cell) —
     * the read side of the build-once/probe-many lifecycle: pass the frame
-    * reopened from a persisted cell-bucketed table (`tools.IvfBuild`) and
+    * reopened from a persisted cell-bucketed table (`tools.Catalog.open`) and
     * query time pays ZERO assignment work; the cell equi-join consumes the
     * table's bucketing with no index-side exchange. SimilaritySpec asserts
     * a reopened index answers identically to a freshly-built one.

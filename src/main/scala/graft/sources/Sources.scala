@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * S9 — object-store GET/LIST: reads/writes address the store directly via
   * the Hadoop FileSystem API (s3a:// URIs behave identically to file://
-  * here — see ObsStore.exists); no staged copy step is needed.
+  * here — see `graft.storage.Fs`); no staged copy step is needed.
   */
 object Sources {
 

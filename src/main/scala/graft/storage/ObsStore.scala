@@ -30,10 +30,6 @@ class ObsStore(spark: SparkSession, path: String) {
   private def withKeys(obs: DataFrame): DataFrame =
     obs.withColumn("yyyymm", TimeUtil.yyyymm(col("ts")))
 
-  def exists: Boolean =
-    new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(new org.apache.hadoop.fs.Path(path))
-
   def read(): DataFrame = spark.read.parquet(path)
 
   /** Cluster rows by their target partition before the partitioned write:
@@ -64,7 +60,7 @@ class ObsStore(spark: SparkSession, path: String) {
     * nothing.
     */
   def mergeUpsert(newObs: DataFrame): Unit = {
-    if (!exists) { write(newObs); return }
+    if (!Fs.exists(spark, path)) { write(newObs); return }
     // the batch is evaluated once: its month list and the merge both read
     // this checkpoint, so a keep-first dedup upstream (whose order may
     // depend on the evaluation) cannot differ between the two

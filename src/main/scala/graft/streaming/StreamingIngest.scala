@@ -2,10 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.Sizing
-import graft.storage.ObsStore
+import graft.storage.{Fs, ObsStore, ParquetCompact}
 
 /** Streaming face of the engine (SURVEY §2.10).
   *
@@ -27,6 +27,33 @@ import graft.storage.ObsStore
   */
 object StreamingIngest {
 
+  /** One cron tick over `stream`: drain every available micro-batch into
+    * `onBatch` under `checkpointDir`, then stop (`Trigger.AvailableNow`).
+    * Blocks until the drain completes. `outputMode` is `update` for a
+    * stateful aggregate; the checkpoint commits a batch only after
+    * `onBatch` returns, so a crash inside it replays the batch. */
+  def drain(stream: DataFrame, checkpointDir: String,
+            outputMode: String = "append")(onBatch: DataFrame => Unit): Unit =
+    stream.writeStream
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) => onBatch(batch) }
+      .start()
+      .awaitTermination()
+
+  /** The replay probe every append tick shares: the ids of `batch`
+    * already in `store`. A tick's appends are not atomic with its
+    * checkpoint commit, so a crash replays the batch, and a non-empty
+    * answer is the replay's signature. Reads only the store's id column,
+    * broadcasts the batch side, and checkpoints eagerly (the callers
+    * consume it after the append that would change its answer). */
+  def storedIds(store: DataFrame, batch: DataFrame, idCol: String): DataFrame =
+    store.select(col(idCol))
+      .join(broadcast(batch.select(col(idCol).as("bid"))),
+        col(idCol) === col("bid"))
+      .select(idCol).distinct().localCheckpoint(true)
+
   /** Stream normalized long obs (station, ts, param, value) from CSV files
     * appearing in `stagingDir` (schema of the normalized long form —
     * upstream normalizers write this shape to staging).
@@ -41,16 +68,8 @@ object StreamingIngest {
     * merge-upsert, then stop. Blocks until the drain completes.
     */
   def ingestTick(spark: SparkSession, stagingDir: String, store: ObsStore,
-                 checkpointDir: String): Unit = {
-    val q: StreamingQuery = readObsStream(spark, stagingDir).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        store.mergeUpsert(batch)
-      }
-      .start()
-    q.awaitTermination()
-  }
+                 checkpointDir: String): Unit =
+    drain(readObsStream(spark, stagingDir), checkpointDir)(store.mergeUpsert)
 
   /** One CORPUS-ingest tick — the training-data-pipeline analog of
     * `ingestTick`: drain newly landed document files, exact-dedup WITHIN
@@ -69,6 +88,14 @@ object StreamingIngest {
     * flags. At scale `corpusDir` is the partitioned corpus table and the
     * band/set signature frames are a persisted index refreshed per tick
     * (see incrementalDedup's scaladoc).
+    *
+    * Crash replay: the corpus append and the `_manifest` overwrite are
+    * not atomic. A replayed batch matches its own stored copies as
+    * exact dups and appends nothing, so a fold would never count it;
+    * when the [[storedIds]] probe finds batch docs already in the
+    * corpus, the manifest is instead REBUILT from the corpus (one
+    * corpus scan, the crawl and BPE ticks' rebuild), healing the
+    * window.
     */
   def corpusIngestTick(spark: SparkSession, stagingDir: String,
                        corpusDir: String, checkpointDir: String,
@@ -77,60 +104,61 @@ object StreamingIngest {
       .schema("doc_id LONG, text STRING")
       .option("header", "true")
       .csv(stagingDir)
-    val q: StreamingQuery = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import graft.text.NearDup
-        val sp = batch.sparkSession
-        val keepers = NearDup.exactDedup(batch, "doc_id", "text")
-          .select(col("keeper_id").as("doc_id"))
-        // cache: the survivors' lineage (staging scan + dedup aggregate +
-        // shingle/signature pipeline) is consumed by THREE actions in one
-        // tick — the in-batch pair clustering, the incremental flags, and
-        // the final append — and would otherwise recompute per action
-        val exactUniq = batch.join(keepers, Seq("doc_id"), "left_semi").persist()
-        try {
-          // near-dedup within the batch: cluster the batch's own near-dup
-          // pairs and keep only cluster keepers (min id per component)
-          val nearPairs = NearDup.minhashLshPairsFromRows(
-              graft.text.TextOps.wordShingleRows(exactUniq, "doc_id", "text", 3))
-            .filter(col("jaccard") >= minJaccard)
-          val dropped = NearDup.dedupClusters(nearPairs, "id_a", "id_b")
-            .filter(col("doc_id") =!= col("keeper_id")).select("doc_id")
-          val uniq = exactUniq.join(dropped, Seq("doc_id"), "left_anti")
-          val path = new org.apache.hadoop.fs.Path(corpusDir)
-          val fs = path.getFileSystem(sp.sessionState.newHadoopConf())
-          val fresh = (if (fs.exists(path)) {
+    drain(docs, checkpointDir) { batch =>
+      import graft.text.{NearDup, TextOps}
+      val sp = batch.sparkSession
+      val keepers = NearDup.exactDedup(batch, "doc_id", "text")
+        .select(col("keeper_id").as("doc_id"))
+      // cache: the survivors' lineage (staging scan + dedup aggregate +
+      // shingle/signature pipeline) is consumed by FOUR actions in one
+      // tick — the in-batch pair clustering, the replay probe, the
+      // incremental flags, and the final append — and would otherwise
+      // recompute per action
+      val exactUniq = batch.join(keepers, Seq("doc_id"), "left_semi").persist()
+      try {
+        // near-dedup within the batch: cluster the batch's own near-dup
+        // pairs and keep only cluster keepers (min id per component)
+        val nearPairs = NearDup.minhashLshPairsFromRows(
+            TextOps.wordShingleRows(exactUniq, "doc_id", "text", 3))
+          .filter(col("jaccard") >= minJaccard)
+        val dropped = NearDup.dedupClusters(nearPairs, "id_a", "id_b")
+          .filter(col("doc_id") =!= col("keeper_id")).select("doc_id")
+        val uniq = exactUniq.join(dropped, Seq("doc_id"), "left_anti")
+        val (survivors, replay) =
+          if (Fs.exists(sp, corpusDir)) {
             val corpus = sp.read.parquet(corpusDir)
-            val flags = NearDup.incrementalDedup(corpus, uniq, "doc_id", "text",
-              minJaccard = minJaccard)
-            uniq.join(flags.filter(col("verdict") === "new").select("doc_id"),
-              Seq("doc_id"), "left_semi")
-          } else uniq)
-            // eager: the survivors feed TWO writes (corpus append +
-            // manifest fold) — without the checkpoint the second one
-            // would re-run the whole incremental-dedup lineage
-            .localCheckpoint(true)
-          fresh.write.mode("append").parquet(corpusDir)
-          // manifest maintenance (TextOps.manifestMerge scaladoc): the
-          // release cells stay current at per-batch cost. `_manifest`
-          // is underscore-hidden, so corpus parquet scans skip it; the
-          // standing frame is cell-bounded and checkpointed before the
-          // overwrite so the read never races its own replacement. The
-          // staged stream carries no (source, lang) → one global cell.
-          val manifestDir = s"$corpusDir/_manifest"
-          val merged =
-            if (fs.exists(new org.apache.hadoop.fs.Path(manifestDir)))
-              graft.text.TextOps.manifestMerge(
-                sp.read.parquet(manifestDir).localCheckpoint(true), fresh,
-                groupCols = Seq.empty)
-            else graft.text.TextOps.corpusManifest(fresh, groupCols = Seq.empty)
-          merged.write.mode("overwrite").parquet(manifestDir)
-        } finally exactUniq.unpersist()
-      }
-      .start()
-    q.awaitTermination()
+            val flags = NearDup.incrementalDedup(corpus, uniq, "doc_id",
+              "text", minJaccard = minJaccard)
+            (uniq.join(flags.filter(col("verdict") === "new").select("doc_id"),
+              Seq("doc_id"), "left_semi"),
+              storedIds(corpus, uniq, "doc_id").count() > 0)
+          } else (uniq, false)
+        // eager: the survivors feed TWO writes (corpus append + manifest
+        // fold) — without the checkpoint the second one would re-run the
+        // whole incremental-dedup lineage
+        val fresh = survivors.localCheckpoint(true)
+        fresh.write.mode("append").parquet(corpusDir)
+        // manifest maintenance (TextOps.manifestMerge scaladoc): the
+        // release cells stay current at per-batch cost. `_manifest`
+        // is underscore-hidden, so corpus parquet scans skip it; the
+        // standing frame is cell-bounded and checkpointed before the
+        // overwrite so the read never races its own replacement. The
+        // staged stream carries no (source, lang) → one global cell.
+        val manifestDir = s"$corpusDir/_manifest"
+        val merged =
+          if (replay) {
+            System.err.println("[corpus-tick] replay detected (batch docs " +
+              "already in the corpus) — rebuilding the manifest from the " +
+              "corpus, healing any crash window")
+            TextOps.corpusManifest(sp.read.parquet(corpusDir), groupCols = Seq.empty)
+          } else if (Fs.exists(sp, manifestDir))
+            TextOps.manifestMerge(
+              sp.read.parquet(manifestDir).localCheckpoint(true), fresh,
+              groupCols = Seq.empty)
+          else TextOps.corpusManifest(fresh, groupCols = Seq.empty)
+        merged.write.mode("overwrite").parquet(manifestDir)
+      } finally exactUniq.unpersist()
+    }
   }
 
   /** STREAMING EMBEDDING-DEDUP TICK (VERDICT r11 #6): one
@@ -179,80 +207,67 @@ object StreamingIngest {
     val vecs = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<DOUBLE>")
       .parquet(stagingDir)
-    val q: StreamingQuery = vecs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import graft.text.NearDup
-        val sp = batch.sparkSession
-        val b = batch.dropDuplicates("vec_id").persist()
-        try {
-          // in-batch near-dedup: keepers only (min id per component)
-          val pairs = Similarity.lshNeighborPairs(b, "vec_id", "embedding",
-            dims, bands, rowsPerBand, minCosine)
-          val dropped = NearDup.dedupClusters(pairs, "id_a", "id_b")
-            .filter(col("doc_id") =!= col("keeper_id"))
-            .select(col("doc_id").as("vec_id"))
-          val uniq = b.join(dropped, Seq("vec_id"), "left_anti")
-          val path = new org.apache.hadoop.fs.Path(corpusDir)
-          val fs = path.getFileSystem(sp.sessionState.newHadoopConf())
-          if (fs.exists(path)) {
-            val corpus = sp.read.parquet(corpusDir)
-            // STALENESS GUARD (VERDICT r12 #3): the persisted index
-            // froze its width at build time; if the corpus has grown
-            // past the next occupancy threshold, rebuild it (and use
-            // the rebuilt width below for flags AND the band append —
-            // an appended row at the old width would poison the index)
-            val rEff = Similarity.ensureBandIndexFresh(corpus, "vec_id",
-              "embedding", dims, s"$corpusDir/_bands",
-              s"$corpusDir/_bands_meta", bands, rowsPerBand, targetOccupancy)
-            val flags = Similarity.embeddingCorpusFlags(
-              corpus,
-              sp.read.parquet(s"$corpusDir/_bands"),
-              uniq, "vec_id", "embedding", dims, bands, rEff)
-            // multiple consumers below (vector append + band append)
-            val keep = uniq.join(flags.filter(col("best_cosine") >= minCosine)
-                .select("vec_id"),
-              Seq("vec_id"), "left_anti")
-              .localCheckpoint(true)
-            // CRASH-REPLAY GUARD (ADVICE r12): the two dependent appends
-            // below are not atomic — a crash between them leaves vectors
-            // in the corpus with no band rows, and a replayed batch (the
-            // checkpoint commits only after foreachBatch returns) would
-            // re-append them because the flag check consults only the
-            // index. Probe corpus membership DIRECTLY by vec_id — the
-            // batch side broadcasts and the corpus streams map-side
-            // reading just the pruned id column — so a replay (a) never
-            // re-appends a vector already in the corpus and (b) still
-            // appends the MISSING band rows for the crash-window
-            // vectors, healing the index. An already-fully-ingested
-            // replay self-flags through the index (cosine 1.0) and
-            // no-ops both appends, so band rows are never duplicated
-            // either; repeated replays converge.
-            val inCorpus = corpus.select(col("vec_id"))
-              .join(broadcast(keep.select(col("vec_id").as("bid"))),
-                col("vec_id") === col("bid"))
-              .select("vec_id").distinct()
-              .localCheckpoint(true)
-            keep.join(broadcast(inCorpus), Seq("vec_id"), "left_anti")
-              .write.mode("append").parquet(corpusDir)
-            Similarity.lshBandRows(keep, "vec_id", "embedding",
-                dims, bands, rEff)
-              .write.mode("append").parquet(s"$corpusDir/_bands")
-          } else {
-            // two writes read the survivors (vectors + band rows)
-            val fresh = uniq.localCheckpoint(true)
-            fresh.write.mode("append").parquet(corpusDir)
-            Similarity.lshBandRows(fresh, "vec_id", "embedding",
-                dims, bands, rowsPerBand)
-              .write.mode("append").parquet(s"$corpusDir/_bands")
-            Similarity.writeBandIndexMeta(sp, s"$corpusDir/_bands_meta",
-              bands, rowsPerBand, fresh.count())
-          }
-        } finally b.unpersist()
-      }
-      .start()
-    q.awaitTermination()
+    drain(vecs, checkpointDir) { batch =>
+      import graft.text.NearDup
+      val sp = batch.sparkSession
+      val b = batch.dropDuplicates("vec_id").persist()
+      try {
+        // in-batch near-dedup: keepers only (min id per component)
+        val pairs = Similarity.lshNeighborPairs(b, "vec_id", "embedding",
+          dims, bands, rowsPerBand, minCosine)
+        val dropped = NearDup.dedupClusters(pairs, "id_a", "id_b")
+          .filter(col("doc_id") =!= col("keeper_id"))
+          .select(col("doc_id").as("vec_id"))
+        val uniq = b.join(dropped, Seq("vec_id"), "left_anti")
+        if (Fs.exists(sp, corpusDir)) {
+          val corpus = sp.read.parquet(corpusDir)
+          // STALENESS GUARD (VERDICT r12 #3): the persisted index
+          // froze its width at build time; if the corpus has grown
+          // past the next occupancy threshold, rebuild it (and use
+          // the rebuilt width below for flags AND the band append —
+          // an appended row at the old width would poison the index)
+          val rEff = Similarity.ensureBandIndexFresh(corpus, "vec_id",
+            "embedding", dims, s"$corpusDir/_bands",
+            s"$corpusDir/_bands_meta", bands, rowsPerBand, targetOccupancy)
+          val flags = Similarity.embeddingCorpusFlags(
+            corpus,
+            ParquetCompact.read(sp, s"$corpusDir/_bands"),
+            uniq, "vec_id", "embedding", dims, bands, rEff)
+          // multiple consumers below (vector append + band append)
+          val keep = uniq.join(flags.filter(col("best_cosine") >= minCosine)
+              .select("vec_id"),
+            Seq("vec_id"), "left_anti")
+            .localCheckpoint(true)
+          // CRASH-REPLAY GUARD (ADVICE r12): the two dependent appends
+          // below are not atomic — a crash between them leaves vectors
+          // in the corpus with no band rows, and a replayed batch (the
+          // checkpoint commits only after foreachBatch returns) would
+          // re-append them because the flag check consults only the
+          // index. Probe corpus membership DIRECTLY by vec_id
+          // ([[storedIds]]), so a replay (a) never re-appends a vector
+          // already in the corpus and (b) still appends the MISSING
+          // band rows for the crash-window vectors, healing the index.
+          // An already-fully-ingested replay self-flags through the
+          // index (cosine 1.0) and no-ops both appends, so band rows
+          // are never duplicated either; repeated replays converge.
+          val inCorpus = storedIds(corpus, keep, "vec_id")
+          keep.join(broadcast(inCorpus), Seq("vec_id"), "left_anti")
+            .write.mode("append").parquet(corpusDir)
+          Similarity.lshBandRows(keep, "vec_id", "embedding",
+              dims, bands, rEff)
+            .write.mode("append").parquet(s"$corpusDir/_bands")
+        } else {
+          // two writes read the survivors (vectors + band rows)
+          val fresh = uniq.localCheckpoint(true)
+          fresh.write.mode("append").parquet(corpusDir)
+          Similarity.lshBandRows(fresh, "vec_id", "embedding",
+              dims, bands, rowsPerBand)
+            .write.mode("append").parquet(s"$corpusDir/_bands")
+          Similarity.writeBandIndexMeta(sp, s"$corpusDir/_bands_meta",
+            bands, rowsPerBand, fresh.count())
+        }
+      } finally b.unpersist()
+    }
   }
 
   /** STREAMING FINGERPRINT-DEDUP TICK (VERDICT r12 #6 — the hamming
@@ -296,67 +311,56 @@ object StreamingIngest {
     val fps = spark.readStream
       .schema("doc_id LONG, fp LONG")
       .parquet(stagingDir)
-    val q: StreamingQuery = fps.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        val b = batch.dropDuplicates("doc_id").persist()
-        try {
-          val pairs = NearDup.hammingPairs(b, "doc_id", "fp",
-            bits, bands, maxHamming)
-          val dropped = NearDup.dedupClusters(pairs, "id_a", "id_b")
-            .filter(col("doc_id") =!= col("keeper_id"))
-            .select(col("doc_id"))
-          val uniq = b.join(dropped, Seq("doc_id"), "left_anti")
-          val path = new org.apache.hadoop.fs.Path(corpusDir)
-          val fs = path.getFileSystem(sp.sessionState.newHadoopConf())
-          if (fs.exists(path)) {
-            val corpus = sp.read.parquet(corpusDir)
-            // STALENESS GUARD (VERDICT r13 #1): re-band the persisted
-            // index when the corpus has crossed a band-count step —
-            // serve AND append below at the rebuilt count (an appended
-            // row at the old count would poison the index)
-            val bEff = NearDup.ensureFpBandIndexFresh(corpus, "doc_id",
-              "fp", bits, s"$corpusDir/_fpbands",
-              s"$corpusDir/_fpbands_meta", bands, maxHamming,
-              targetOccupancy)
-            val flags = NearDup.hammingCorpusFlags(
-              sp.read.parquet(s"$corpusDir/_fpbands"),
-              uniq, "doc_id", "fp", bits, bEff)
-            val keep = uniq.join(
-                flags.filter(col("best_hamming") <= maxHamming)
-                  .select("doc_id"),
-                Seq("doc_id"), "left_anti")
-              .localCheckpoint(true)
-            // crash-replay guard (the embedding tick's): never re-append
-            // a doc_id already in the corpus; still append its missing
-            // band rows so a crash between the two appends self-heals
-            val inCorpus = corpus.select(col("doc_id"))
-              .join(broadcast(keep.select(col("doc_id").as("bid"))),
-                col("doc_id") === col("bid"))
-              .select("doc_id").distinct()
-              .localCheckpoint(true)
-            keep.join(broadcast(inCorpus), Seq("doc_id"), "left_anti")
-              .write.mode("append").parquet(corpusDir)
-            NearDup.hammingBandRows(keep, "doc_id", "fp", bits, bEff)
-              .write.mode("append").parquet(s"$corpusDir/_fpbands")
-          } else {
-            val fresh = uniq.localCheckpoint(true)
-            val n0 = fresh.count()
-            val b0 = NearDup.hammingAutoBands(n0, bits, bands, maxHamming,
-              targetOccupancy)
-            fresh.write.mode("append").parquet(corpusDir)
-            NearDup.hammingBandRows(fresh, "doc_id", "fp", bits, b0)
-              .write.mode("append").parquet(s"$corpusDir/_fpbands")
-            graft.sim.IndexMeta.write(sp, s"$corpusDir/_fpbands_meta",
-              Seq("bits" -> bits.toLong, "max_hamming" -> maxHamming.toLong,
-                "bands" -> b0.toLong, "built_n" -> n0))
-          }
-        } finally b.unpersist()
-      }
-      .start()
-    q.awaitTermination()
+    drain(fps, checkpointDir) { batch =>
+      val sp = batch.sparkSession
+      val b = batch.dropDuplicates("doc_id").persist()
+      try {
+        val pairs = NearDup.hammingPairs(b, "doc_id", "fp",
+          bits, bands, maxHamming)
+        val dropped = NearDup.dedupClusters(pairs, "id_a", "id_b")
+          .filter(col("doc_id") =!= col("keeper_id"))
+          .select(col("doc_id"))
+        val uniq = b.join(dropped, Seq("doc_id"), "left_anti")
+        if (Fs.exists(sp, corpusDir)) {
+          val corpus = sp.read.parquet(corpusDir)
+          // STALENESS GUARD (VERDICT r13 #1): re-band the persisted
+          // index when the corpus has crossed a band-count step —
+          // serve AND append below at the rebuilt count (an appended
+          // row at the old count would poison the index)
+          val bEff = NearDup.ensureFpBandIndexFresh(corpus, "doc_id",
+            "fp", bits, s"$corpusDir/_fpbands",
+            s"$corpusDir/_fpbands_meta", bands, maxHamming,
+            targetOccupancy)
+          val flags = NearDup.hammingCorpusFlags(
+            ParquetCompact.read(sp, s"$corpusDir/_fpbands"),
+            uniq, "doc_id", "fp", bits, bEff)
+          val keep = uniq.join(
+              flags.filter(col("best_hamming") <= maxHamming)
+                .select("doc_id"),
+              Seq("doc_id"), "left_anti")
+            .localCheckpoint(true)
+          // crash-replay guard (the embedding tick's): never re-append
+          // a doc_id already in the corpus; still append its missing
+          // band rows so a crash between the two appends self-heals
+          val inCorpus = storedIds(corpus, keep, "doc_id")
+          keep.join(broadcast(inCorpus), Seq("doc_id"), "left_anti")
+            .write.mode("append").parquet(corpusDir)
+          NearDup.hammingBandRows(keep, "doc_id", "fp", bits, bEff)
+            .write.mode("append").parquet(s"$corpusDir/_fpbands")
+        } else {
+          val fresh = uniq.localCheckpoint(true)
+          val n0 = fresh.count()
+          val b0 = NearDup.hammingAutoBands(n0, bits, bands, maxHamming,
+            targetOccupancy)
+          fresh.write.mode("append").parquet(corpusDir)
+          NearDup.hammingBandRows(fresh, "doc_id", "fp", bits, b0)
+            .write.mode("append").parquet(s"$corpusDir/_fpbands")
+          graft.sim.IndexMeta.write(sp, s"$corpusDir/_fpbands_meta",
+            Seq("bits" -> bits.toLong, "max_hamming" -> maxHamming.toLong,
+              "bands" -> b0.toLong, "built_n" -> n0))
+        }
+      } finally b.unpersist()
+    }
   }
 
   /** Streaming dedup across micro-batches: drops re-delivered
@@ -369,19 +373,6 @@ object StreamingIngest {
     obs.withWatermark("ts", "48 hours")
       .dropDuplicatesWithinWatermark("station", "ts", "param")
 
-  /** STREAMING DRIFT MONITOR: one `Trigger.AvailableNow` tick drains
-    * newly staged docs, folds their log₂ length buckets into the
-    * persisted (group, bucket) count grid (`Calibrate.psiGrid` — the
-    * grid is MERGEABLE by cell-wise add, the manifest-maintenance
-    * algebra), and rewrites the current per-source PSI table from the
-    * merged cells. Cost per tick = one pass over the NEW docs plus
-    * cell-grid arithmetic — the corpus is never re-read, yet the PSI
-    * out of the maintained grid is BIT-IDENTICAL to the batch
-    * `psiByGroup` over everything ingested so far (StreamingSpec pins
-    * this across multi-tick arrivals). The standing grid is
-    * checkpointed before the overwrite so the read never races its own
-    * replacement (the manifest-tick lesson).
-    */
   /** STREAMING CRAWL-INGEST TICK (VERDICT r16 #6): the HTML →
     * boilerplate stage as an incremental pipeline. q224's line-
     * frequency df is a corpus-wide aggregate; recomputing it per run
@@ -416,14 +407,7 @@ object StreamingIngest {
     val docs = spark.readStream
       .schema("doc_id LONG, html STRING")
       .parquet(stagingDir)
-    val q: StreamingQuery = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        crawlFoldBatch(batch, outDir, minChars); ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docs, checkpointDir)(crawlFoldBatch(_, outDir, minChars))
   }
 
   /** Line-grain append half of the crawl ticks: extract main content
@@ -448,16 +432,10 @@ object StreamingIngest {
           .select(col("doc_id"), col("main_text")),
         "doc_id", "main_text")
       .localCheckpoint(true)
-    val path = new org.apache.hadoop.fs.Path(linesDir)
-    val fs = path.getFileSystem(sp.sessionState.newHadoopConf())
     val (fresh, replayDetected) =
-      if (fs.exists(path)) {
-        val batchIds = lines.select(col("doc_id")).distinct()
-        // pruned-column store scan, batch side broadcasts
-        val ingested = sp.read.parquet(linesDir).select(col("doc_id"))
-          .join(broadcast(batchIds.select(col("doc_id").as("bid"))),
-            col("doc_id") === col("bid"))
-          .select("doc_id").distinct().localCheckpoint(true)
+      if (Fs.exists(sp, linesDir)) {
+        val ingested = storedIds(sp.read.parquet(linesDir),
+          lines.select(col("doc_id")).distinct(), "doc_id")
         val f = lines.join(broadcast(ingested), Seq("doc_id"),
           "left_anti").localCheckpoint(true)
         (f, ingested.count() > 0)
@@ -488,12 +466,10 @@ object StreamingIngest {
     val linesDir = s"$outDir/_lines"
     val dfDir = s"$outDir/_linedf"
     val (fresh, replayDetected) = linesAppendBatch(batch, outDir, minChars)
-    val fs = new org.apache.hadoop.fs.Path(dfDir)
-      .getFileSystem(sp.sessionState.newHadoopConf())
     // standing grid checkpointed before its own overwrite (the
     // manifest-tick race lesson)
     val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(dfDir)))
+      if (Fs.exists(sp, dfDir))
         Some(sp.read.parquet(dfDir).localCheckpoint(true))
       else None
     val merged = (if (replayDetected) {
@@ -600,15 +576,8 @@ object StreamingIngest {
         l => md5(l)))).as("lh"))
     val markers = docs.select(
       concat(lit("d:"), col("doc_id").cast("string")).as("lh"))
-    val q: StreamingQuery = lineCells.unionByName(markers)
-      .groupBy(col("lh")).count()
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", gridCkpt)
-      .foreachBatch { (b: DataFrame, _: Long) => sink(b) }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(lineCells.unionByName(markers).groupBy(col("lh")).count(),
+      gridCkpt, outputMode = "update")(sink)
   }
 
   /** Staging-contract violations recorded in the state grid: doc ids
@@ -729,65 +698,56 @@ object StreamingIngest {
     }
     // ---- phase 1: frontier keepers + line-grain append
     val docs1 = spark.readStream.schema(schema).parquet(stagingDir)
-    val q1: StreamingQuery = docs1.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        val b = batch.dropDuplicates("doc_id")
-        val kept = urlCol match {
-          case Some(u) =>
-            val fs = new org.apache.hadoop.fs.Path(urlsDir)
-              .getFileSystem(sp.sessionState.newHadoopConf())
-            // IndexMeta invariant (the q55 incremental-index shape): a
-            // persisted frontier keyed under a DIFFERENT fuzzy-key
-            // formula would silently split/merge URL groups — refuse
-            // to serve it. fuzzy_v is the formula version, built_n the
-            // key census.
-            graft.sim.IndexMeta.read(sp, s"$urlsDir-meta",
-                Seq("fuzzy_v", "built_n")).foreach { m =>
-              require(m("fuzzy_v") == 1L,
-                s"_urls index at $urlsDir was keyed under fuzzy-key " +
-                  s"formula v${m("fuzzy_v")}, this engine writes v1 — " +
-                  "rebuild the frontier index")
-            }
-            // within-batch fuzzy-key keepers; a key already in the
-            // index keeps its FIRST keeper (anti-join is idempotent,
-            // so a replayed batch never re-appends its keys)
-            val batchKeep = graft.text.TextOps.urlDedup(b, "doc_id", u)
-              .select(col("canon_key"), col("keeper_id"), col("canon_url"))
-            val newKeys =
-              (if (fs.exists(new org.apache.hadoop.fs.Path(urlsDir)))
-                batchKeep.join(
-                  sp.read.parquet(urlsDir).select(col("canon_key")),
-                  Seq("canon_key"), "left_anti")
-              else batchKeep).localCheckpoint(true)
-            newKeys.write.mode("append").parquet(urlsDir)
-            val prevN = graft.sim.IndexMeta.read(sp, s"$urlsDir-meta",
-              Seq("fuzzy_v", "built_n"))
-              .map(_("built_n")).getOrElse(0L)
-            graft.sim.IndexMeta.write(sp, s"$urlsDir-meta", Seq(
-              "fuzzy_v" -> 1L, "built_n" -> (prevN + newKeys.count())))
-            // keepers-ever, re-read POST-append (this batch's keepers
-            // included; replayed keepers self-identify)
-            b.join(sp.read.parquet(urlsDir)
-                .select(col("keeper_id").as("doc_id")).distinct(),
-                Seq("doc_id"), "left_semi")
-              .drop(u)
-          case None => b
-        }
-        linesAppendBatch(kept, outDir, minChars); ()
+    drain(docs1, checkpointDir) { batch =>
+      val sp = batch.sparkSession
+      val b = batch.dropDuplicates("doc_id")
+      val kept = urlCol match {
+        case Some(u) =>
+          // IndexMeta invariant (the q55 incremental-index shape): a
+          // persisted frontier keyed under a DIFFERENT fuzzy-key
+          // formula would silently split/merge URL groups — refuse
+          // to serve it. fuzzy_v is the formula version, built_n the
+          // key census.
+          graft.sim.IndexMeta.read(sp, s"$urlsDir-meta",
+              Seq("fuzzy_v", "built_n")).foreach { m =>
+            require(m("fuzzy_v") == 1L,
+              s"_urls index at $urlsDir was keyed under fuzzy-key " +
+                s"formula v${m("fuzzy_v")}, this engine writes v1 — " +
+                "rebuild the frontier index")
+          }
+          // within-batch fuzzy-key keepers; a key already in the
+          // index keeps its FIRST keeper (anti-join is idempotent,
+          // so a replayed batch never re-appends its keys)
+          val batchKeep = graft.text.TextOps.urlDedup(b, "doc_id", u)
+            .select(col("canon_key"), col("keeper_id"), col("canon_url"))
+          val newKeys =
+            (if (Fs.exists(sp, urlsDir))
+              batchKeep.join(
+                sp.read.parquet(urlsDir).select(col("canon_key")),
+                Seq("canon_key"), "left_anti")
+            else batchKeep).localCheckpoint(true)
+          newKeys.write.mode("append").parquet(urlsDir)
+          val prevN = graft.sim.IndexMeta.read(sp, s"$urlsDir-meta",
+            Seq("fuzzy_v", "built_n"))
+            .map(_("built_n")).getOrElse(0L)
+          graft.sim.IndexMeta.write(sp, s"$urlsDir-meta", Seq(
+            "fuzzy_v" -> 1L, "built_n" -> (prevN + newKeys.count())))
+          // keepers-ever, re-read POST-append (this batch's keepers
+          // included; replayed keepers self-identify)
+          b.join(sp.read.parquet(urlsDir)
+              .select(col("keeper_id").as("doc_id")).distinct(),
+              Seq("doc_id"), "left_semi")
+            .drop(u)
+        case None => b
       }
-      .start()
-    q1.awaitTermination()
+      linesAppendBatch(kept, outDir, minChars); ()
+    }
     // ---- phase 2: state-grid drain, dirty-batch capture to _pending
     val docs2raw = spark.readStream.schema(schema).parquet(stagingDir)
     val docs2 = urlCol match {
       case Some(u) =>
-        val fs = new org.apache.hadoop.fs.Path(urlsDir)
-          .getFileSystem(spark.sessionState.newHadoopConf())
         val keepers =
-          if (fs.exists(new org.apache.hadoop.fs.Path(urlsDir)))
+          if (Fs.exists(spark, urlsDir))
             spark.read.parquet(urlsDir)
               .select(col("keeper_id")).distinct()
           else spark.range(0).select(col("id").as("keeper_id"))
@@ -834,9 +794,7 @@ object StreamingIngest {
     val pendDir = s"$outDir/_pending"
     val overDir = s"$outDir/_over"
     val linesDir = s"$outDir/_lines"
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def exists(d: String) = fs.exists(new org.apache.hadoop.fs.Path(d))
+    def exists(d: String) = Fs.exists(spark, d)
     if (!exists(pendDir) || !exists(linesDir)) return // nothing staged yet
     val pending = spark.read.parquet(pendDir).distinct()
       .localCheckpoint(true)
@@ -905,33 +863,39 @@ object StreamingIngest {
       .write.mode("overwrite").parquet(pendDir)
   }
 
+  /** STREAMING DRIFT MONITOR: one `Trigger.AvailableNow` tick drains
+    * newly staged docs, folds their log₂ length buckets into the
+    * persisted (group, bucket) count grid (`Calibrate.psiGrid` — the
+    * grid is MERGEABLE by cell-wise add, the manifest-maintenance
+    * algebra), and rewrites the current per-source PSI table from the
+    * merged cells. Cost per tick = one pass over the NEW docs plus
+    * cell-grid arithmetic — the corpus is never re-read, yet the PSI
+    * out of the maintained grid is BIT-IDENTICAL to the batch
+    * `psiByGroup` over everything ingested so far (StreamingSpec pins
+    * this across multi-tick arrivals). The standing grid is
+    * checkpointed before the overwrite so the read never races its own
+    * replacement (the manifest-tick lesson).
+    */
   def driftMonitorTick(spark: SparkSession, stagingDir: String,
                        monitorDir: String, checkpointDir: String): Unit = {
     val docs = spark.readStream
       .schema("doc_id LONG, text STRING, source STRING, n_chars LONG")
       .option("header", "true")
       .csv(stagingDir)
-    val q: StreamingQuery = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import graft.text.Calibrate
-        val sp = batch.sparkSession
-        val gridDir = s"$monitorDir/_grid"
-        val psiDir = s"$monitorDir/psi"
-        val fresh = Calibrate.psiGrid(batch, "source", col("n_chars"))
-        val path = new org.apache.hadoop.fs.Path(gridDir)
-        val fs = path.getFileSystem(sp.sessionState.newHadoopConf())
-        val merged = (if (fs.exists(path))
-          sp.read.parquet(gridDir).localCheckpoint(true)
-            .unionByName(fresh)
-            .groupBy(col("grp"), col("bucket")).agg(sum(col("c")).as("c"))
-        else fresh).localCheckpoint(true)
-        merged.write.mode("overwrite").parquet(gridDir)
-        Calibrate.psiFromGrid(merged)
-          .write.mode("overwrite").parquet(psiDir)
-      }
-      .start()
-    q.awaitTermination()
+    drain(docs, checkpointDir) { batch =>
+      import graft.text.Calibrate
+      val sp = batch.sparkSession
+      val gridDir = s"$monitorDir/_grid"
+      val psiDir = s"$monitorDir/psi"
+      val fresh = Calibrate.psiGrid(batch, "source", col("n_chars"))
+      val merged = (if (Fs.exists(sp, gridDir))
+        sp.read.parquet(gridDir).localCheckpoint(true)
+          .unionByName(fresh)
+          .groupBy(col("grp"), col("bucket")).agg(sum(col("c")).as("c"))
+      else fresh).localCheckpoint(true)
+      merged.write.mode("overwrite").parquet(gridDir)
+      Calibrate.psiFromGrid(merged)
+        .write.mode("overwrite").parquet(psiDir)
+    }
   }
 }

@@ -2,9 +2,10 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sim.IndexMeta
+import graft.storage.Fs
+import graft.streaming.StreamingIngest
 import graft.text.Bpe
 
 /** TOKENIZER ARTIFACT LIFECYCLE (VERDICT r17 #3 — the IvfPqBuild analog
@@ -106,66 +107,56 @@ object BpeBuild {
     val docs = spark.readStream
       .schema("doc_id LONG, text STRING, shard STRING")
       .parquet(stagingDir)
-    val q = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        val tokensDir = s"$outDir/tokens"
-        val offDir = s"$outDir/_shard_offsets"
-        val fs = new org.apache.hadoop.fs.Path(outDir)
-          .getFileSystem(sp.sessionState.newHadoopConf())
-        val uniq = batch.dropDuplicates("doc_id").localCheckpoint(true)
-        // replay probe (crawl-tick discipline): column-pruned id scan,
-        // batch side broadcasts
-        val (fresh, replay) =
-          if (fs.exists(new org.apache.hadoop.fs.Path(tokensDir))) {
-            val ingested = sp.read.parquet(tokensDir).select(col("doc_id"))
-              .join(broadcast(uniq.select(col("doc_id").as("bid"))),
-                col("doc_id") === col("bid"))
-              .select("doc_id").distinct().localCheckpoint(true)
-            (uniq.join(broadcast(ingested), Seq("doc_id"), "left_anti"),
-              ingested.count() > 0)
-          } else (uniq, false)
-        val standing =
-          if (fs.exists(new org.apache.hadoop.fs.Path(offDir)))
-            Some(sp.read.parquet(offDir).localCheckpoint(true))
-          else None
-        // base offsets for THIS batch's fresh docs (ADVICE r18): on a
-        // detected replay the standing _shard_offsets may be stale (a
-        // crash between the token append and the offset fold), so a
-        // replayed batch that also carries fresh docs must NOT tokenize
-        // them against it — colliding global_tok values appended here
-        // could never be repaired by a later offsets rebuild. Rebuild
-        // the per-shard bases from the token store FIRST (checkpointed:
-        // the frame is read before the append and consumed after it,
-        // and it feeds both the tokenize plan and the offset fold) and
-        // tokenize against those; the fold below then runs the same
-        // base + batch arithmetic on either path.
-        val baseOff = if (replay) {
-          System.err.println("[bpe-tick] replay detected — rebuilding " +
-            "shard offsets from the token store BEFORE tokenizing, " +
-            "healing any crash window between append and offset fold")
-          Some(sp.read.parquet(tokensDir).groupBy(col("shard"))
-            .agg(count(lit(1)).as("base_tok")).localCheckpoint(true))
-        } else standing
-        val packed = Bpe.tokenizeWithTrained(fresh, "doc_id", "text",
-            "shard", merges, vocab, blockTokens,
-            baseOffsets = baseOff)
-          .localCheckpoint(true) // feeds the append AND the offset fold
-        packed.write.mode("append").parquet(tokensDir)
-        val batchCounts = packed.groupBy(col("shard"))
-          .agg(count(lit(1)).as("base_tok"))
-        val newOffsets = (baseOff match {
-          case Some(st) => st.unionByName(batchCounts)
-            .groupBy(col("shard"))
-            .agg(sum(col("base_tok")).as("base_tok"))
-          case None => batchCounts
-        }).localCheckpoint(true)
-        newOffsets.write.mode("overwrite").parquet(offDir)
-      }
-      .start()
-    q.awaitTermination()
+    StreamingIngest.drain(docs, ckptDir) { batch =>
+      val sp = batch.sparkSession
+      val tokensDir = s"$outDir/tokens"
+      val offDir = s"$outDir/_shard_offsets"
+      val uniq = batch.dropDuplicates("doc_id").localCheckpoint(true)
+      // replay probe: batch docs already in the token store
+      val (fresh, replay) =
+        if (Fs.exists(sp, tokensDir)) {
+          val ingested = StreamingIngest.storedIds(sp.read.parquet(tokensDir),
+            uniq, "doc_id")
+          (uniq.join(broadcast(ingested), Seq("doc_id"), "left_anti"),
+            ingested.count() > 0)
+        } else (uniq, false)
+      val standing =
+        if (Fs.exists(sp, offDir))
+          Some(sp.read.parquet(offDir).localCheckpoint(true))
+        else None
+      // base offsets for THIS batch's fresh docs (ADVICE r18): on a
+      // detected replay the standing _shard_offsets may be stale (a
+      // crash between the token append and the offset fold), so a
+      // replayed batch that also carries fresh docs must NOT tokenize
+      // them against it — colliding global_tok values appended here
+      // could never be repaired by a later offsets rebuild. Rebuild
+      // the per-shard bases from the token store FIRST (checkpointed:
+      // the frame is read before the append and consumed after it,
+      // and it feeds both the tokenize plan and the offset fold) and
+      // tokenize against those; the fold below then runs the same
+      // base + batch arithmetic on either path.
+      val baseOff = if (replay) {
+        System.err.println("[bpe-tick] replay detected — rebuilding " +
+          "shard offsets from the token store BEFORE tokenizing, " +
+          "healing any crash window between append and offset fold")
+        Some(sp.read.parquet(tokensDir).groupBy(col("shard"))
+          .agg(count(lit(1)).as("base_tok")).localCheckpoint(true))
+      } else standing
+      val packed = Bpe.tokenizeWithTrained(fresh, "doc_id", "text",
+          "shard", merges, vocab, blockTokens,
+          baseOffsets = baseOff)
+        .localCheckpoint(true) // feeds the append AND the offset fold
+      packed.write.mode("append").parquet(tokensDir)
+      val batchCounts = packed.groupBy(col("shard"))
+        .agg(count(lit(1)).as("base_tok"))
+      val newOffsets = (baseOff match {
+        case Some(st) => st.unionByName(batchCounts)
+          .groupBy(col("shard"))
+          .agg(sum(col("base_tok")).as("base_tok"))
+        case None => batchCounts
+      }).localCheckpoint(true)
+      newOffsets.write.mode("overwrite").parquet(offDir)
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.text.NearDup
 
-/** Offline TEXT-corpus dedup-index lifecycle — the [[IvfBuild]] of the
+/** Offline TEXT-corpus dedup-index lifecycle — the [[IvfPqBuild]] of the
   * MinHash world: build the [[NearDup.CorpusIndex]] ONCE per corpus
   * version, persist its three frames as bucketed tables, and serve every
   * ingest tick's `incrementalDedupIndexed` from the reopened tables.
@@ -25,7 +25,7 @@ import graft.text.NearDup
   * then pays batch-side scans plus bucket-pruned index probes — nothing
   * corpus-sized is recomputed or re-shuffled per tick. Catalog names
   * derive from `outDir` (two indexes in one metastore must not clobber
-  * each other — the IvfBuild lesson).
+  * each other — [[Catalog.pathTable]]).
   *
   * Usage:
   *   runMain graft.tools.CorpusBuild build <sfDir> <outDir> [k=16] [bands=8] [buckets=8] [batchMod=5]
@@ -46,7 +46,7 @@ object CorpusBuild {
     * bands than the build is not an error Spark can see — the band hashes
     * simply never collide, the candidate join comes back empty, and every
     * near-dup is silently reported 'new'. The params are part of the
-    * artifact, exactly like IvfBuild's persisted quantizer. Storage rides
+    * artifact, exactly like IvfPqBuild's persisted codebooks. Storage rides
     * the shared [[graft.sim.IndexMeta]] contract (VERDICT r13 #4); this
     * index is the INVARIANTS-ONLY case — MinHash banding has no
     * corpus-sized dial (band count is pinned by the signature length),
@@ -65,13 +65,9 @@ object CorpusBuild {
   def build(spark: SparkSession, corpus: DataFrame, outDir: String,
             k: Int = 16, bands: Int = 8, buckets: Int = 8): Unit = {
     val idx = NearDup.corpusIndex(corpus, "doc_id", "text", k, bands)
-    def write(df: DataFrame, part: String, bucketCol: String): Unit = {
-      val table = tableName(outDir, part)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      df.write.bucketBy(buckets, bucketCol).sortBy(bucketCol)
-        .option("path", s"$outDir/$part")
-        .format("parquet").mode("overwrite").saveAsTable(table)
-    }
+    def write(df: DataFrame, part: String, bucketCol: String): Unit =
+      Catalog.save(df, tableName(outDir, part), s"$outDir/$part", buckets,
+        bucketCol)
     write(idx.bands, "bands", "band_hash")
     write(idx.sets, "sets", "id")
     write(idx.hashes, "hashes", "ch")
@@ -86,29 +82,21 @@ object CorpusBuild {
     IndexMeta(m("k").toInt, m("bands").toInt, m("buckets").toInt)
   }
 
-  /** Re-register the persisted files as external bucketed tables (the
-    * bucket spec lives in the catalog DDL, not the parquet footers — same
-    * reopening rule as [[IvfBuild.openIndex]]) and return the index ready
+  /** Re-register the persisted files as external bucketed tables
+    * ([[Catalog.open]]: the bucket spec lives in the catalog DDL, not the
+    * parquet footers) and return the index ready
     * for [[NearDup.incrementalDedupIndexed]] TOGETHER with the build-time
     * k/bands a probe must reuse. Safe in a fresh session.
     */
   def openIndex(spark: SparkSession, outDir: String): OpenedIndex = {
     val meta = readMeta(spark, outDir)
-    def reopen(part: String, schema: String, bucketCol: String): DataFrame = {
-      val table = tableName(outDir, part)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"""
-        CREATE TABLE $table ($schema)
-        USING parquet
-        CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
-          INTO ${meta.buckets} BUCKETS
-        LOCATION '$outDir/$part'""")
-      spark.table(table)
-    }
+    def reopen(part: String, bucketCol: String): DataFrame =
+      Catalog.open(spark, tableName(outDir, part), s"$outDir/$part",
+        meta.buckets, bucketCol)
     OpenedIndex(NearDup.CorpusIndex(
-      bands = reopen("bands", "id BIGINT, band_hash STRING", "band_hash"),
-      sets = reopen("sets", "id BIGINT, sh ARRAY<BIGINT>", "id"),
-      hashes = reopen("hashes", "id BIGINT, ch STRING", "ch")), meta)
+      bands = reopen("bands", "band_hash"),
+      sets = reopen("sets", "id"),
+      hashes = reopen("hashes", "ch")), meta)
   }
 
   /** Drop the catalog registrations for the index at `outDir` (the data

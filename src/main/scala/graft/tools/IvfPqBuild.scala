@@ -4,10 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.sim.Similarity
+import graft.storage.{Fs, ParquetCompact}
+import graft.streaming.StreamingIngest
 
-/** Offline IVF-PQ index lifecycle — the [[IvfBuild]] analog for the
-  * IVFADC serving path (VERDICT r11 #2). The r11 scale study measured
-  * WHY this tool exists: the one-shot `ivfPqTopK` is build-dominated
+/** Offline IVF-PQ index lifecycle for the IVFADC serving path
+  * (VERDICT r11 #2). The r11 scale study measured WHY this tool
+  * exists: the one-shot `ivfPqTopK` is build-dominated
   * (the N·K assignment + PQ encode is 32.0 s of the 35.8 s ×100 run),
   * while serving 80 queries on a PREBUILT index is 0.62/0.70/1.05 s
   * across ×1/×10/×100 — near-flat over 100× corpus growth (SCALE.md
@@ -21,7 +23,7 @@ import graft.sim.Similarity
   *    the m×ksub PQ sub-codebooks) and a params row, so the artifact is
   *    self-describing.
   *  - `probe`: a NEW session re-registers the bucketed DDL (the bucket
-  *    spec lives in the catalog, not the files — the IvfBuild lesson),
+  *    spec lives in the catalog, not the files — [[Catalog.open]]),
   *    loads BOTH codebooks from the artifact, and serves external
   *    raw-vector queries through [[Similarity.ivfPqProbe]] with zero
   *    corpus-side assignment or encode work at query time.
@@ -175,10 +177,8 @@ object IvfPqBuild {
       s"(built ${p.centroids}), encoding residual")
     // training input: build-time sample ∪ fresh md5-rank sample (both
     // bounded; dedup by id so overlap is harmless)
-    val fs = new org.apache.hadoop.fs.Path(s"$outDir/train_sample")
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val builtSample =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/train_sample")))
+      if (Fs.exists(spark, s"$outDir/train_sample"))
         // normalize on read too: samples persisted before the r16
         // projection fix carry the source table's full column set
         spark.read.parquet(s"$outDir/train_sample")
@@ -215,18 +215,14 @@ object IvfPqBuild {
     require(dims % m == 0, s"m=$m must divide dims=$dims")
     val centroids = cents.length
     val table = tableName(outDir)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
     // pre-partition on the BUCKET spec's own hash (repartition and
     // bucketBy share Murmur3 HashPartitioning) so each task owns whole
     // buckets and the table lands as ~one file per bucket — without
     // this, every upstream task writes a sliver of every bucket and a
     // 512-partition encode shuffle fans out to task×bucket ≈ 11k tiny
     // files, taxing every later listing, scan, and append commit
-    encodeFor(encoding, emb, dims, m, ksub, cents, pqCb)
-      .repartition(buckets, col("cell"))
-      .write.bucketBy(buckets, "cell").sortBy("cell")
-      .option("path", s"$outDir/index")
-      .format("parquet").mode("overwrite").saveAsTable(table)
+    Catalog.save(encodeFor(encoding, emb, dims, m, ksub, cents, pqCb)
+      .repartition(buckets, col("cell")), table, s"$outDir/index", buckets, "cell")
     Similarity.saveCentroids(spark, cents, s"$outDir/centroids.parquet")
     (for (s <- 0 until m; cc <- 0 until ksub)
       yield (s, cc, pqCb(s, cc).toSeq)).toDF("subspace", "code", "cv")
@@ -340,7 +336,6 @@ object IvfPqBuild {
                  recallFloorMicro: Long = 0L,
                  recallDropFactorMicro: Long = 800000L,
                  reconcileEvery: Int = 16): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val p = loadParams(spark, outDir)
     val cents = Similarity.loadCentroids(spark, s"$outDir/centroids.parquet")
     val pqCb = loadPqCodebook(spark, outDir)
@@ -349,146 +344,123 @@ object IvfPqBuild {
     val vecs = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<DOUBLE>")
       .parquet(stagingDir)
-    val q = vecs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import spark.implicits._
-        val sp = batch.sparkSession
-        val b = batch.dropDuplicates("vec_id").persist()
-        try {
-          val indexed = sp.table(table).filter(col("subspace") === 0)
-            .select(col("vec_id"))
-            .join(broadcast(b.select(col("vec_id").as("bid"))),
-              col("vec_id") === col("bid"))
-            .select("vec_id").distinct().localCheckpoint(true)
-          val fresh = b.join(broadcast(indexed), Seq("vec_id"), "left_anti")
-            .localCheckpoint(true)
-          val appended = fresh.count()
-          encodeFor(p.encoding, fresh, p.dims, p.m, p.ksub, cents,
-              (s, c) => pqCb((s, c)))
-            .repartition(p.buckets, col("cell"))
-            .write.format("parquet").mode("append")
-            .bucketBy(p.buckets, "cell").sortBy("cell")
-            .option("path", s"$outDir/index").saveAsTable(table)
-          // staleness signal 1: the √N dial, against a MAINTAINED
-          // vector census (`_meta`, the shared IndexMeta contract) —
-          // never a per-tick corpus-sized distinct to re-learn a number
-          // the artifact already knows. A legacy artifact (no `_meta`)
-          // pays the exact count ONCE and records it. A crash between
-          // the code append and the meta write loses that batch from
-          // the census FOR GOOD (ADVICE r14 — the replayed batch
-          // appends zero rows, so the maintained count never recovers
-          // it, and repeated crash windows ACCUMULATE undercount, which
-          // under-fires the √N dial). The periodic reconcile bounds
-          // that drift: every `reconcileEvery` ticks the census
-          // re-anchors to the exact subspace-0 distinct count (one
-          // index scan, amortized to 1/reconcileEvery of tick cost), so
-          // drift survives at most a window — immaterial against the
-          // power-of-2-stepped dial.
-          val metaDir = s"$outDir/_meta"
-          val meta = graft.sim.IndexMeta.read(sp, metaDir, Seq("n_vectors"))
-          // n_ticks reads tolerantly: artifacts from before the
-          // reconcile counter carry only n_vectors
-          val nTicks = (if (meta.isEmpty) 0L else {
-            val df = sp.read.parquet(metaDir)
-            if (df.columns.contains("n_ticks"))
-              df.select(col("n_ticks").cast("long")).head().getLong(0)
-            else 0L
-          }) + 1L
-          def exactCount(): Long = sp.table(table)
-            .filter(col("subspace") === 0)
-            .select(col("vec_id")).distinct().count()
-          val nAfter = meta match {
-            case None => exactCount()
-            case Some(m)
-                if reconcileEvery > 0 && nTicks % reconcileEvery == 0 =>
-              val maintained = m("n_vectors") + appended
-              val exact = exactCount()
-              if (exact != maintained)
-                System.err.println(s"[ivfpq] census reconcile: maintained " +
-                  s"$maintained vs exact $exact vectors (drift " +
-                  s"${maintained - exact} — crash-window loss healed)")
-              exact
-            case Some(m) => m("n_vectors") + appended
-          }
-          graft.sim.IndexMeta.write(sp, metaDir,
-            Seq("n_vectors" -> nAfter, "n_ticks" -> nTicks))
-          val neededC = Similarity.adaptiveCentroids(nAfter, p.centroids)
-          if (neededC > p.centroids)
-            System.err.println(s"[ivfpq] STALE coarse quantizer: corpus " +
-              s"$nAfter vectors needs C=$neededC, artifact built at " +
-              s"C=${p.centroids} — run 'retrain <rawsDir> <outDir>' " +
-              "(trains both codebooks from the persisted sample + a " +
-              "fresh raws sample, re-encodes, re-freezes the baseline)")
-          // staleness signal 2: held-out recall against the CALIBRATED
-          // floor — the untrained/formula quantizer legitimately serves
-          // low frozen-set recall at tight nprobe/K, so "stale" is
-          // recall FALLING from the build-time baseline
-          // (recall0 × dropFactor), not an absolute bar; the absolute
-          // `recallFloorMicro` stays available for callers with an SLO
-          val hqDir = s"$outDir/heldout/queries"
-          val fs = new org.apache.hadoop.fs.Path(hqDir)
-            .getFileSystem(sp.sessionState.newHadoopConf())
-          if (fs.exists(new org.apache.hadoop.fs.Path(hqDir))) {
-            val recall = heldoutRecall(sp, outDir, sp.table(table),
-              cents, (s, c) => pqCb((s, c)), nprobe, k)
-            val r0Dir = s"$outDir/heldout/recall0"
-            val relFloor =
-              if (fs.exists(new org.apache.hadoop.fs.Path(r0Dir))) {
-                val r0 = sp.read.parquet(r0Dir)
-                  .filter(col("nprobe") === nprobe && col("k") === k)
-                  .select(col("recall_micro")).collect()
-                r0.headOption.map(r =>
-                  r.getLong(0) * recallDropFactorMicro / 1000000L)
-                  .getOrElse {
-                    // ADVICE r14: the build froze recall0 only at its
-                    // own knobs — a tick at OTHER (nprobe, k) used to
-                    // silently disarm the calibrated check. Warn
-                    // loudly, and freeze the CURRENT recall as the
-                    // first-use baseline at these knobs so every LATER
-                    // tick has a calibrated floor (this tick itself
-                    // stays on the absolute `recallFloorMicro` only).
-                    System.err.println(s"[ivfpq] no recall0 baseline at " +
-                      s"nprobe=$nprobe k=$k — calibrated drift check " +
-                      s"disarmed THIS tick; freezing current recall " +
-                      s"$recall µ as the first-use baseline")
-                    val existing = sp.read.parquet(r0Dir)
-                      .select(col("nprobe").cast("int"), col("k").cast("int"),
-                        col("recall_micro").cast("long")).collect()
-                      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
-                    (existing :+ ((nprobe, k, recall)))
-                      .toDF("nprobe", "k", "recall_micro")
-                      .coalesce(1).write.mode("overwrite").parquet(r0Dir)
-                    0L
-                  }
-              } else 0L
-            val floor = math.max(recallFloorMicro, relFloor)
-            val stale = recall < floor
-            if (stale)
-              System.err.println(s"[ivfpq] STALE codebooks: held-out " +
-                s"recall $recall µ < floor $floor µ at " +
-                s"nprobe=$nprobe k=$k on $nAfter vectors — run " +
-                "'retrain <rawsDir> <outDir>'")
-            Seq((nAfter, recall, floor, stale, neededC))
-              .toDF("n_vectors", "recall_micro", "floor_micro", "stale",
-                "needed_centroids")
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/_heldout_recall")
-          }
-        } finally b.unpersist()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Data-file census of the bucketed code table. */
-  def indexDataFiles(spark: SparkSession, outDir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/index")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p)
-      .count(f => f.isFile && !f.getPath.getName.startsWith("_"))
+    StreamingIngest.drain(vecs, checkpointDir) { batch =>
+      import spark.implicits._
+      val sp = batch.sparkSession
+      val b = batch.dropDuplicates("vec_id").persist()
+      try {
+        val indexed = StreamingIngest.storedIds(
+          sp.table(table).filter(col("subspace") === 0), b, "vec_id")
+        val fresh = b.join(broadcast(indexed), Seq("vec_id"), "left_anti")
+          .localCheckpoint(true)
+        val appended = fresh.count()
+        Catalog.save(encodeFor(p.encoding, fresh, p.dims, p.m, p.ksub, cents,
+            (s, c) => pqCb((s, c))).repartition(p.buckets, col("cell")),
+          table, s"$outDir/index", p.buckets, "cell", mode = "append")
+        // staleness signal 1: the √N dial, against a MAINTAINED
+        // vector census (`_meta`, the shared IndexMeta contract) —
+        // never a per-tick corpus-sized distinct to re-learn a number
+        // the artifact already knows. A legacy artifact (no `_meta`)
+        // pays the exact count ONCE and records it. A crash between
+        // the code append and the meta write loses that batch from
+        // the census FOR GOOD (ADVICE r14 — the replayed batch
+        // appends zero rows, so the maintained count never recovers
+        // it, and repeated crash windows ACCUMULATE undercount, which
+        // under-fires the √N dial). The periodic reconcile bounds
+        // that drift: every `reconcileEvery` ticks the census
+        // re-anchors to the exact subspace-0 distinct count (one
+        // index scan, amortized to 1/reconcileEvery of tick cost), so
+        // drift survives at most a window — immaterial against the
+        // power-of-2-stepped dial.
+        val metaDir = s"$outDir/_meta"
+        val meta = graft.sim.IndexMeta.read(sp, metaDir, Seq("n_vectors"))
+        // n_ticks reads tolerantly: artifacts from before the
+        // reconcile counter carry only n_vectors
+        val nTicks = (if (meta.isEmpty) 0L else {
+          val df = sp.read.parquet(metaDir)
+          if (df.columns.contains("n_ticks"))
+            df.select(col("n_ticks").cast("long")).head().getLong(0)
+          else 0L
+        }) + 1L
+        def exactCount(): Long = sp.table(table)
+          .filter(col("subspace") === 0)
+          .select(col("vec_id")).distinct().count()
+        val nAfter = meta match {
+          case None => exactCount()
+          case Some(m)
+              if reconcileEvery > 0 && nTicks % reconcileEvery == 0 =>
+            val maintained = m("n_vectors") + appended
+            val exact = exactCount()
+            if (exact != maintained)
+              System.err.println(s"[ivfpq] census reconcile: maintained " +
+                s"$maintained vs exact $exact vectors (drift " +
+                s"${maintained - exact} — crash-window loss healed)")
+            exact
+          case Some(m) => m("n_vectors") + appended
+        }
+        graft.sim.IndexMeta.write(sp, metaDir,
+          Seq("n_vectors" -> nAfter, "n_ticks" -> nTicks))
+        val neededC = Similarity.adaptiveCentroids(nAfter, p.centroids)
+        if (neededC > p.centroids)
+          System.err.println(s"[ivfpq] STALE coarse quantizer: corpus " +
+            s"$nAfter vectors needs C=$neededC, artifact built at " +
+            s"C=${p.centroids} — run 'retrain <rawsDir> <outDir>' " +
+            "(trains both codebooks from the persisted sample + a " +
+            "fresh raws sample, re-encodes, re-freezes the baseline)")
+        // staleness signal 2: held-out recall against the CALIBRATED
+        // floor — the untrained/formula quantizer legitimately serves
+        // low frozen-set recall at tight nprobe/K, so "stale" is
+        // recall FALLING from the build-time baseline
+        // (recall0 × dropFactor), not an absolute bar; the absolute
+        // `recallFloorMicro` stays available for callers with an SLO
+        if (Fs.exists(sp, s"$outDir/heldout/queries")) {
+          val recall = heldoutRecall(sp, outDir, sp.table(table),
+            cents, (s, c) => pqCb((s, c)), nprobe, k)
+          val r0Dir = s"$outDir/heldout/recall0"
+          val relFloor =
+            if (Fs.exists(sp, r0Dir)) {
+              val r0 = sp.read.parquet(r0Dir)
+                .filter(col("nprobe") === nprobe && col("k") === k)
+                .select(col("recall_micro")).collect()
+              r0.headOption.map(r =>
+                r.getLong(0) * recallDropFactorMicro / 1000000L)
+                .getOrElse {
+                  // ADVICE r14: the build froze recall0 only at its
+                  // own knobs — a tick at OTHER (nprobe, k) used to
+                  // silently disarm the calibrated check. Warn
+                  // loudly, and freeze the CURRENT recall as the
+                  // first-use baseline at these knobs so every LATER
+                  // tick has a calibrated floor (this tick itself
+                  // stays on the absolute `recallFloorMicro` only).
+                  System.err.println(s"[ivfpq] no recall0 baseline at " +
+                    s"nprobe=$nprobe k=$k — calibrated drift check " +
+                    s"disarmed THIS tick; freezing current recall " +
+                    s"$recall µ as the first-use baseline")
+                  val existing = sp.read.parquet(r0Dir)
+                    .select(col("nprobe").cast("int"), col("k").cast("int"),
+                      col("recall_micro").cast("long")).collect()
+                    .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
+                  (existing :+ ((nprobe, k, recall)))
+                    .toDF("nprobe", "k", "recall_micro")
+                    .coalesce(1).write.mode("overwrite").parquet(r0Dir)
+                  0L
+                }
+            } else 0L
+          val floor = math.max(recallFloorMicro, relFloor)
+          val stale = recall < floor
+          if (stale)
+            System.err.println(s"[ivfpq] STALE codebooks: held-out " +
+              s"recall $recall µ < floor $floor µ at " +
+              s"nprobe=$nprobe k=$k on $nAfter vectors — run " +
+              "'retrain <rawsDir> <outDir>'")
+          Seq((nAfter, recall, floor, stale, neededC))
+            .toDF("n_vectors", "recall_micro", "floor_micro", "stale",
+              "needed_centroids")
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/_heldout_recall")
+        }
+      } finally b.unpersist()
+    }
   }
 
   /** BUCKETED-INDEX COMPACTION (VERDICT r14 #3): each [[ingestTick]]
@@ -503,134 +475,42 @@ object IvfPqBuild {
     * preserved so pruning and the no-exchange cell distribution
     * survive).
     *
-    * Swap discipline (r16, VERDICT r15 #4 — CRASH-ATOMIC): the rewrite
-    * lands fully at `index__compact` while the original keeps serving;
-    * the swap is then rename-ASIDE — original → `index__old`, rewrite →
-    * canonical, aside deleted last — so EVERY crash window leaves a
-    * complete copy on disk: before the first rename the original is
-    * canonical (a stray __compact is deleted on next open); between
-    * the renames the completed rewrite is promoted by [[recoverSwap]];
-    * after the second rename only the stray __old remains to sweep.
-    * The old delete→rename swap had a window where NEITHER copy was at
-    * the canonical path ("original deleted" was its own error text).
-    * Every open path runs [[recoverSwap]] first, and the swap bumps
-    * `_meta` so a warm [[serve]] loop re-opens. Returns (filesBefore,
+    * The swap is [[ParquetCompact.compactWith]]'s crash-atomic
+    * rename-aside swap (its scaladoc walks the windows); every
+    * [[openIndex]] runs its reader-side [[ParquetCompact.recover]], so a
+    * crashed compaction heals on the next open. The swap bumps `_meta`
+    * so a warm [[serve]] loop re-opens. Returns (filesBefore,
     * filesAfter) — equal when the threshold did not bind.
     */
   def compact(spark: SparkSession, outDir: String,
               maxFilesPerBucket: Int = 4): (Int, Int) = {
     require(maxFilesPerBucket >= 1, s"maxFilesPerBucket $maxFilesPerBucket < 1")
     val p = loadParams(spark, outDir)
-    val before = indexDataFiles(spark, outDir)
-    if (before <= p.buckets * maxFilesPerBucket) (before, before)
-    else {
-      // writer-only stray hygiene (ADVICE r16): clear any aside/rewrite
-      // leftovers from an interrupted earlier compaction BEFORE starting
-      // this one — reader opens no longer sweep, so this is the one
-      // place strays are cleaned
-      sweepStrays(spark, outDir)
-      val table = tableName(outDir)
-      val tmpTable = tableName(s"$outDir/index__compact")
-      spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-      // read the FILES, not the registered table: a bucketed scan
-      // reports HashPartitioning(cell, buckets) as already satisfied,
-      // so Catalyst elides the repartition below and the write fans
-      // out one file per INPUT task again — the exact fragmentation
-      // this rewrite exists to undo (caught by the bit-parity spec:
-      // 16 -> 14 files instead of 4)
-      spark.read.parquet(s"$outDir/index")
-        .repartition(p.buckets, col("cell"))
-        .write.bucketBy(p.buckets, "cell").sortBy("cell")
-        .option("path", s"$outDir/index__compact")
-        .format("parquet").mode("overwrite").saveAsTable(tmpTable)
+    val table = tableName(outDir)
+    val maxFiles = p.buckets * maxFilesPerBucket
+    val files = ParquetCompact.compactWith(spark, s"$outDir/index",
+        maxFiles) { (codes, tmp) =>
+      // the rewrite reads the FILES, not the registered table: a
+      // bucketed scan reports HashPartitioning(cell, buckets) as already
+      // satisfied, so Catalyst elides the repartition below and the
+      // write fans out one file per INPUT task again — the exact
+      // fragmentation this rewrite exists to undo (caught by the
+      // bit-parity spec: 16 -> 14 files instead of 4)
+      val tmpTable = tableName(tmp)
+      Catalog.save(codes.repartition(p.buckets, col("cell")), tmpTable, tmp,
+        p.buckets, "cell")
       // both tables are EXTERNAL (explicit path): dropping the catalog
-      // entries leaves the files; the rename-aside swap below moves the
-      // compacted files into the canonical location and openIndex
-      // re-registers
+      // entries leaves the files for the swap; openIndex re-registers
       spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
       spark.sql(s"DROP TABLE IF EXISTS $table")
-      val idx = new org.apache.hadoop.fs.Path(s"$outDir/index")
-      val tmp = new org.apache.hadoop.fs.Path(s"$outDir/index__compact")
-      val old = new org.apache.hadoop.fs.Path(s"$outDir/index__old")
-      val fs = idx.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(old, true) // stray from a crash after a completed swap
-      require(fs.rename(idx, old),
-        s"compaction swap failed: $idx -> $old (nothing moved; the " +
-          "original is still canonical)")
-      require(fs.rename(tmp, idx),
-        s"compaction swap failed: $tmp -> $idx (original preserved at " +
-          "index__old; openIndex recovers automatically)")
-      fs.delete(old, true)
-      // bump _meta so a warm serve loop's staleness check sees the new
-      // layout (same census values — only the mtime signal changes)
+    }
+    if (files._1 > maxFiles) {
+      // the swap ran: bump _meta so a warm serve loop's staleness check
+      // sees the new layout (same census values — only the mtime moves)
       touchMeta(spark, outDir)
       openIndex(spark, outDir)
-      (before, indexDataFiles(spark, outDir))
     }
-  }
-
-  /** Crash recovery for [[compact]]'s rename-aside swap, run by every
-    * [[openIndex]]: if the canonical `index` directory is missing, a
-    * crash hit one of the swap windows — promote the COMPLETED rewrite
-    * (`index__compact`; it is fully written before any rename starts)
-    * or, lacking one, roll the renamed-aside original (`index__old`)
-    * back. READERS AT MOST PROMOTE, NEVER DELETE (ADVICE r16): this
-    * used to also sweep stray aside/rewrite copies, but a reader
-    * reopening (probe, or serve's _meta-triggered reopen) while a
-    * compaction is MID-RUN in another process would sweep the writer's
-    * in-progress `index__compact` and spuriously abort it — worse,
-    * after the writer's first rename, with no canonical copy left
-    * until the next open healed it. Stray sweeping is now writer-only
-    * ([[sweepStrays]], called from [[compact]] before it starts its
-    * own rewrite — the only actor that knows no rewrite is in flight).
-    * Idempotent; no-op on a healthy artifact.
-    */
-  private def recoverSwap(spark: SparkSession, outDir: String): Unit = {
-    val idx = new org.apache.hadoop.fs.Path(s"$outDir/index")
-    val tmp = new org.apache.hadoop.fs.Path(s"$outDir/index__compact")
-    val old = new org.apache.hadoop.fs.Path(s"$outDir/index__old")
-    val fs = idx.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(idx)) {
-      if (fs.exists(tmp)) {
-        require(fs.rename(tmp, idx),
-          s"swap recovery failed: $tmp -> $idx")
-        System.err.println("[ivfpq] compaction crash window recovered: " +
-          "promoted the completed index__compact rewrite")
-      } else if (fs.exists(old)) {
-        require(fs.rename(old, idx),
-          s"swap recovery failed: $old -> $idx")
-        System.err.println("[ivfpq] compaction crash window recovered: " +
-          "rolled the index__old original back")
-      }
-    }
-  }
-
-  /** WRITER-ONLY stray sweep (ADVICE r16 — split out of [[recoverSwap]]
-    * so reader opens can never delete a concurrent compaction's
-    * in-progress rewrite): with the canonical directory present, a
-    * leftover `index__old` (swap completed; crash before its delete)
-    * or `index__compact` (rewrite finished but never swapped in) is
-    * dead weight from an interrupted run — safe to clear HERE because
-    * the caller IS the compaction writer about to start a fresh
-    * rewrite, so no other rewrite of this artifact can be in flight
-    * (single-writer deployment contract, same as the append ticks).
-    */
-  private def sweepStrays(spark: SparkSession, outDir: String): Unit = {
-    val idx = new org.apache.hadoop.fs.Path(s"$outDir/index")
-    val tmp = new org.apache.hadoop.fs.Path(s"$outDir/index__compact")
-    val old = new org.apache.hadoop.fs.Path(s"$outDir/index__old")
-    val fs = idx.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(idx)) {
-      if (fs.exists(old)) {
-        fs.delete(old, true)
-        System.err.println("[ivfpq] swept stray index__old (swap had completed)")
-      }
-      if (fs.exists(tmp)) {
-        fs.delete(tmp, true)
-        System.err.println("[ivfpq] swept stray index__compact " +
-          "(rewrite never swapped in; the original is canonical)")
-      }
-    }
+    files
   }
 
   /** Rewrite `_meta` with its current values — the mtime bump is the
@@ -638,9 +518,7 @@ object IvfPqBuild {
     * rewrite `_meta` anyway, compaction calls this explicitly. */
   private def touchMeta(spark: SparkSession, outDir: String): Unit = {
     val metaDir = s"$outDir/_meta"
-    val p = new org.apache.hadoop.fs.Path(metaDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) {
+    if (Fs.exists(spark, metaDir)) {
       val df = spark.read.parquet(metaDir)
       val fields = df.columns.toSeq.map { c =>
         c -> df.select(col(c).cast("long")).head().getLong(0)
@@ -650,22 +528,15 @@ object IvfPqBuild {
   }
 
   /** Re-register the persisted code files as an external bucketed table
-    * (fresh-session safe; DDL carries the bucket spec). Runs
-    * [[recoverSwap]] first, so a crashed compaction heals on the next
-    * open — probe, serve, tick, and compact all pass through here.
+    * ([[Catalog.open]], fresh-session safe). Runs
+    * [[ParquetCompact.recover]] first, so a crashed compaction heals on
+    * the next open — probe, serve, tick, and compact all pass through
+    * here.
     */
   def openIndex(spark: SparkSession, outDir: String): DataFrame = {
-    recoverSwap(spark, outDir)
-    val p = loadParams(spark, outDir)
-    val table = tableName(outDir)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"""
-      CREATE TABLE $table
-        (vec_id BIGINT, cell INT, subspace INT, code INT)
-      USING parquet
-      CLUSTERED BY (cell) SORTED BY (cell) INTO ${p.buckets} BUCKETS
-      LOCATION '$outDir/index'""")
-    spark.table(table)
+    ParquetCompact.recover(spark, s"$outDir/index")
+    Catalog.open(spark, tableName(outDir), s"$outDir/index",
+      loadParams(spark, outDir).buckets, "cell")
   }
 
   /** Serve top-k for `queries` from the persisted artifact: reopened
@@ -739,11 +610,10 @@ object IvfPqBuild {
       require(rawsDir != null, "two-stage serve needs the raw vector " +
         "store (rawsDir) — the artifact carries codes, not raws")
     }
-    val idxFs = new org.apache.hadoop.fs.Path(s"$outDir/index")
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val idxFs = Fs.get(spark, s"$outDir/index")
     def metaFingerprint(): String = {
       val metaPath = new org.apache.hadoop.fs.Path(s"$outDir/_meta")
-      if (!idxFs.exists(metaPath)) ""
+      if (!Fs.exists(spark, s"$outDir/_meta")) ""
       else idxFs.listStatus(metaPath).filter(_.isFile)
         .map(f => s"${f.getPath.getName}:${f.getModificationTime}:${f.getLen}")
         .sorted.mkString("|")
@@ -788,13 +658,9 @@ object IvfPqBuild {
       metaFp = metaFingerprint()
     }
     reopen()
-    val fs = new org.apache.hadoop.fs.Path(reqDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val inDir = new org.apache.hadoop.fs.Path(s"$reqDir/in")
-    def done(name: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$reqDir/out/$name/_SUCCESS"))
-    def ready(d: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))
+    val inDir = s"$reqDir/in"
+    def done(name: String) = Fs.exists(spark, s"$reqDir/out/$name/_SUCCESS")
+    def ready(d: org.apache.hadoop.fs.Path) = Fs.exists(spark, s"$d/_SUCCESS")
     var served = 0
     var stop = false
     while (!stop) {
@@ -805,8 +671,9 @@ object IvfPqBuild {
         reopen()
       }
       val pending =
-        if (!fs.exists(inDir)) Array.empty[org.apache.hadoop.fs.Path]
-        else fs.listStatus(inDir).filter(_.isDirectory).map(_.getPath)
+        if (!Fs.exists(spark, inDir)) Array.empty[org.apache.hadoop.fs.Path]
+        else Fs.get(spark, inDir).listStatus(new org.apache.hadoop.fs.Path(inDir))
+          .filter(_.isDirectory).map(_.getPath)
           .filter(d => ready(d) && !done(d.getName)).sortBy(_.getName)
       pending.foreach { d =>
         val t0 = System.nanoTime()
@@ -823,8 +690,7 @@ object IvfPqBuild {
           f"${(System.nanoTime() - t0) / 1e9}%.1f s (warm, no re-open" +
           (if (rerank > 0) s", two-stage R=$rerank)" else ")"))
       }
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$reqDir/stop"))
-          && pending.isEmpty) stop = true
+      if (Fs.exists(spark, s"$reqDir/stop") && pending.isEmpty) stop = true
       else if (pending.isEmpty) Thread.sleep(pollMs)
     }
     served

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,9 +7,9 @@ import graft.core.TimeUtil
 import graft.export.{Exports, Xls, Xlsx}
 import graft.ingest.{EcccSwob, Provincial, Usgs, Wsc}
 import graft.pipeline.Pipelines
-import graft.storage.ObsStore
+import graft.storage.{Fs, ObsStore}
 
-/** Thin per-workflow CLIs mirroring the reference's three cron scripts —
+/* Thin per-workflow CLIs mirroring the reference's three cron scripts —
   * the "run E1/E2/E3 on a tick" entry points (SURVEY §3; the reference
   * schedules one process per script from `.github/workflows/main*.yml`).
   * Each wraps the existing Pipelines/EcccSwob/ObsStore operators around a
@@ -19,11 +17,9 @@ import graft.storage.ObsStore
   * the engine by design — a fetcher (or the driver's fixtures) stages
   * raw files, the tick normalizes + merges them. main() owns the session
   * (ToolSession doctrine); run() is session-injected so PipelineCliSpec
-  * drives all three on the shared test session.
+  * drives all three on the shared test session. Paths are probed with
+  * `Fs.exists`, so `file://` and `s3a://` URIs work as plain paths do.
   */
-object PipelineCli {
-  private[tools] def exists(p: String): Boolean = Files.exists(Paths.get(p))
-}
 
 /** E1 — instantaneous ingest tick (`discharge_obs_pd.py:366-412`):
   * normalize every staged source present under `stagingDir`
@@ -34,7 +30,6 @@ object PipelineCli {
   * Usage: runMain graft.tools.IngestTick <stagingDir> <storeDir>
   */
 object IngestTick {
-  import PipelineCli.exists
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: IngestTick <stagingDir> <storeDir>")
@@ -44,6 +39,7 @@ object IngestTick {
   }
 
   def run(spark: SparkSession, stagingDir: String, storeDir: String): Long = {
+    def exists(p: String) = Fs.exists(spark, p)
     val stations =
       if (exists(s"$stagingDir/provincial/provincial_station_list.csv"))
         Some(Provincial.stationList(spark,
@@ -145,7 +141,6 @@ object ExportDaily {
   * Usage: runMain graft.tools.EcccTick <swobStagingDir> <gridDir> <outDir>
   */
 object EcccTick {
-  import PipelineCli.exists
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
@@ -160,7 +155,7 @@ object EcccTick {
     val fresh = EcccSwob.readObs(spark, stagingDir)
       .withColumn("f_read", lit(true))
     val prior =
-      if (exists(gridDir)) spark.read.parquet(gridDir)
+      if (Fs.exists(spark, gridDir)) spark.read.parquet(gridDir)
       else fresh.limit(0)
     // old wins (T2 doctrine): a re-staged hour cannot overwrite the
     // stored cell; localCheckpoint decouples the merged frame from the

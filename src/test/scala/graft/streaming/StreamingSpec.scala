@@ -78,6 +78,44 @@ class StreamingSpec extends SparkSpec {
     assert(folded === oneShot && folded.head._1 === 4L)
   }
 
+  test("corpus tick crash replay: a batch appended but never folded heals " +
+      "the manifest") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("corpusreplay").toString
+    val staging = s"$base/staging"
+    Files.createDirectories(Paths.get(staging))
+    val corpus = s"$base/corpus"
+    Files.writeString(Paths.get(s"$staging/b1.csv"),
+      "doc_id,text\n" +
+      "1,the quick brown fox jumps over the lazy dog again and again\n" +
+      "2,unrelated corpus prose about catalyst tungsten codegen shuffles\n")
+    StreamingIngest.corpusIngestTick(spark, staging, corpus, s"$base/ckpt",
+      minJaccard = 0.3)
+    // the crash window: the next tick appended docs 3 and 4 to the corpus
+    // and died before the manifest overwrite and the checkpoint commit,
+    // so the replay re-delivers them together with a fresh doc 5
+    Seq((3L, "completely novel third document that matches nothing else here"),
+        (4L, "a fourth distinct text about parquet footers and file listings"))
+      .toDF("doc_id", "text").write.mode("append").parquet(corpus)
+    Files.writeString(Paths.get(s"$staging/b2.csv"),
+      "doc_id,text\n" +
+      "3,completely novel third document that matches nothing else here\n" +
+      "4,a fourth distinct text about parquet footers and file listings\n" +
+      "5,one more genuinely new arrival describing broadcast hash joins\n")
+    StreamingIngest.corpusIngestTick(spark, staging, corpus, s"$base/ckpt",
+      minJaccard = 0.3)
+    val ids = spark.read.parquet(corpus).select("doc_id").as[Long].collect()
+    assert(ids.sorted.toSeq === Seq(1L, 2L, 3L, 4L, 5L), s"got ${ids.toSeq}")
+    val cols = Seq("n_docs", "n_tokens", "min_id", "max_id", "content_checksum")
+    val manifest = spark.read.parquet(s"$corpus/_manifest")
+      .select(cols.map(col): _*).as[(Long, Long, Long, Long, Long)].collect().toSeq
+    val oneShot = graft.text.TextOps
+      .corpusManifest(spark.read.parquet(corpus), groupCols = Seq.empty)
+      .select(cols.map(col): _*).as[(Long, Long, Long, Long, Long)].collect().toSeq
+    assert(manifest === oneShot && manifest.head._1 === 5L,
+      s"manifest $manifest != corpus manifest $oneShot")
+  }
+
   test("embedding ticks: in-batch keepers, corpus-index dedup, only new appended, " +
       "no reprocess, batch parity, corpus never repartitioned") {
     import spark.implicits._
@@ -570,7 +608,7 @@ class StreamingSpec extends SparkSpec {
       graft.tools.IvfPqBuild.ingestTick(spark, out, staging, s"$base/ckpt",
         recallFloorMicro = 0L, recallDropFactorMicro = 0L)
     }
-    val filesBefore = graft.tools.IvfPqBuild.indexDataFiles(spark, out)
+    val filesBefore = graft.storage.ParquetCompact.dataFiles(spark, s"$out/index")
     assert(filesBefore > 4, s"3 appends must fragment past 1 file/bucket: $filesBefore")
     val raws = ((0L until 40L) ++ (100L until 130L)).map(i => (i, unit(i.toInt)))
       .toDF("vec_id", "embedding")
@@ -690,6 +728,47 @@ class StreamingSpec extends SparkSpec {
     assert(nb > na, s"compaction must bind here: $nb -> $na")
     assert(probeSet() === healthy, "rename-aside compaction changed results")
     assert(!fs.exists(tmp) && !fs.exists(old))
+
+    // the plain-parquet arm: an embedding tick's `_bands` directory
+    // shares the swap, and the tick's read of it recovers the same way
+    val corpus = s"$base/corpus"
+    val vecStaging = s"$base/vecstaging"
+    def stageAndTick(ids: Long*): Unit = {
+      ids.map(i => (i, unit(i.toInt))).toDF("vec_id", "embedding")
+        .coalesce(1).write.mode("append").parquet(vecStaging)
+      StreamingIngest.embeddingIngestTick(spark, vecStaging, corpus,
+        s"$base/vecckpt")
+    }
+    def bandRows() = spark.read.parquet(s"$corpus/_bands")
+      .collect().map(_.toSeq).toSet
+    stageAndTick(1L, 2L)
+    val bIdx = new org.apache.hadoop.fs.Path(s"$corpus/_bands")
+    val bTmp = new org.apache.hadoop.fs.Path(s"$corpus/_bands__compact")
+    val bOld = new org.apache.hadoop.fs.Path(s"$corpus/_bands__old")
+    // window 1: the completed rewrite is promoted by the next tick
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, bIdx, fs, bTmp, false, conf))
+    assert(fs.rename(bIdx, bOld))
+    stageAndTick(3L)
+    assert(fs.exists(bIdx) && !fs.exists(bTmp) && fs.exists(bOld),
+      "the tick's read must promote the _bands rewrite and keep the aside")
+    assert(bandRows().size === 3 * 4)
+    fs.delete(bOld, true)
+    // window 2: with no rewrite on disk the aside original rolls back
+    assert(fs.rename(bIdx, bOld))
+    stageAndTick(4L)
+    assert(fs.exists(bIdx) && !fs.exists(bOld),
+      "the tick's read must roll the _bands aside back")
+    assert(spark.read.parquet(corpus).count() === 4L)
+    assert(bandRows().size === 4 * 4)
+    // a stray rewrite is swept by the next compaction, which binds over
+    // the tick-fragmented directory and preserves rows exactly
+    val bandsBefore = bandRows()
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, bIdx, fs, bTmp, false, conf))
+    val (bb, ba) = graft.storage.ParquetCompact.compactDir(spark,
+      s"$corpus/_bands", maxFiles = 1)
+    assert(bb > 1 && ba === 1, s"band-dir compaction must bind: $bb -> $ba")
+    assert(!fs.exists(bTmp) && !fs.exists(bOld))
+    assert(bandRows() === bandsBefore)
   }
 
   test("warm serve loop re-opens when a tick lands underneath " +

@@ -183,12 +183,17 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF lifecycle: centroids round-trip bit-exact, reopened index answers probes identically") {
-    import graft.tools.IvfBuild
+    import graft.tools.Catalog
     val emb = Tables.embeddings(spark, dir)
     val out = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val table = Catalog.pathTable("graft_ivf", out)
     // BUILD: train 1 Lloyd pass, persist centroids + cell-bucketed index
-    val trained = IvfBuild.build(spark, dir, out, centroids = 16,
-      iterations = 1, buckets = 8)
+    val dims = emb.select(size(col("embedding"))).head().getInt(0)
+    val trained = Similarity.trainCentroidsExactMatrix(emb, "vec_id",
+      "embedding", dims, 16, 1)
+    Similarity.saveCentroids(spark, trained, s"$out/centroids.parquet")
+    Catalog.save(Similarity.ivfIndex(emb, "vec_id", "embedding", trained),
+      table, s"$out/index", 8, "cell")
     // (a) the persisted matrix reloads BIT-exact — one flipped ulp in a
     // centroid can flip an argmax assignment and silently degrade recall
     val reloaded = Similarity.loadCentroids(spark, s"$out/centroids.parquet")
@@ -202,7 +207,7 @@ class SimilaritySpec extends SparkSpec {
     // (b) a FRESH session's view: drop the catalog entry, re-register the
     // files via the bucketed DDL, and probe — answers must be identical to
     // building the index from scratch with the same quantizer
-    val reopened = IvfBuild.openIndex(spark, out, buckets = 8)
+    val reopened = Catalog.open(spark, table, s"$out/index", 8, "cell")
     val fresh = Similarity.ivfTopKWith(emb, "vec_id", "embedding", reloaded,
       nprobe = 2, k = 3, queryPred = pred)
     val served = Similarity.ivfProbe(reopened, nprobe = 2, k = 3, queryPred = pred)
@@ -221,7 +226,7 @@ class SimilaritySpec extends SparkSpec {
         s"reopened index lost bucket pruning:\n$plan")
     } finally {
       spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-      spark.sql(s"DROP TABLE IF EXISTS ${IvfBuild.tableName(out)}")
+      spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
 

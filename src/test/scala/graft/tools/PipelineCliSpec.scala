@@ -83,4 +83,20 @@ class PipelineCliSpec extends SparkSpec {
     if (grid2.filter(col("param") === "TA" && col("value").isNotNull).count() > 0)
       assert(spark.read.option("header", "true").csv(s"$outDir/TA").count() > 0)
   }
+
+  test("EcccTick keeps earlier hours when the grid is a file:// URI") {
+    val base = Files.createTempDirectory("cli-grid-uri")
+    val gridDir = base.resolve("grid").toUri.toString
+    assert(gridDir.startsWith("file:/"))
+    val outDir = base.resolve("out").toString
+    val src = Paths.get(s"$resourcesRoot/swob/WAE_2024011506.xml")
+    // two ticks over different hours of one station
+    for ((hour, i) <- Seq("2024011506", "2024011507").zipWithIndex) {
+      val staged = Files.createDirectories(base.resolve(s"swob$i"))
+      Files.copy(src, staged.resolve(s"WAE_$hour.xml"))
+      EcccTick.run(spark, staged.toString, gridDir, outDir)
+    }
+    val hours = spark.read.parquet(gridDir).select("ts").distinct().count()
+    assert(hours === 2L, "the second tick overwrote the first tick's hour")
+  }
 }
