@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{EcccSwob, ExcelShaped, Provincial, Usgs, Wsc}
@@ -15,13 +14,7 @@ import graft.storage.ObsStore
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.ToolSession.local()
 
     val res = "src/test/resources"
     val stations = Provincial.stationList(spark, s"$res/provincial/provincial_station_list.csv")
@@ -69,9 +62,10 @@ object PipelineDemo {
     // workbooks, replace-if-exists on the second write
     val products = Files.createTempDirectory("graft-products").toString
     val modelOut = model.withColumn("date", date_format(col("date"), "yyyy-MM-dd"))
-    graft.export.Exports.writeXlsxSheet(modelOut, s"$products/model.xlsx", "2023", "date")
-    graft.export.Exports.writeXlsxSheet(modelOut, s"$products/model.xlsx", "2023", "date")
-    graft.export.Exports.writeXlsSheet(modelOut, s"$products/obsflows.xls", "2023", "date")
+    val grid = graft.export.Exports.sheetRows(modelOut, "date")
+    graft.export.Xlsx.upsertSheet(s"$products/model.xlsx", "2023", grid)
+    graft.export.Xlsx.upsertSheet(s"$products/model.xlsx", "2023", grid)
+    graft.export.Xls.upsertSheet(s"$products/obsflows.xls", "2023", grid)
     val xlsxBack = graft.export.Xlsx.read(s"$products/model.xlsx")
     val xlsBack = graft.export.Xls.read(s"$products/obsflows.xls")
     val rowsExpected = modelOut.count()

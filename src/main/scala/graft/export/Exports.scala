@@ -45,9 +45,26 @@ object Exports {
       .partitionBy(shardCol)
       .parquet(path)
 
-  /** K2 — write a bounded product frame as ONE headered CSV file. */
+  /** Replace a driver-side product file whole: `body` fills a temp
+    * sibling, which then moves over `path`, so a crash mid-write leaves
+    * the previous product, never a truncated one (K3/K4 workbooks). */
+  private[export] def replaceFile(path: String)(
+      body: java.io.OutputStream => Unit): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dst = Paths.get(path).toAbsolutePath
+    val tmp = Files.createTempFile(dst.getParent, ".graft-", ".tmp")
+    try {
+      val out = Files.newOutputStream(tmp)
+      try body(out) finally out.close()
+      Files.move(tmp, dst, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** K2 — write a bounded product frame as ONE headered CSV file,
+    * replacing `path` whole ([[graft.storage.ParquetCompact.replace]]). */
   def writeCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.option("header", "true").mode("overwrite").csv(path)
+    graft.storage.ParquetCompact.replace(df.sparkSession, path)(
+      df.coalesce(1).write.option("header", "true").csv(_))
 
   /** JSONL corpus sink — the lingua franca of LLM corpus interchange
     * (one JSON object per line, gzip-compressed shards). Distributed by
@@ -78,20 +95,4 @@ object Exports {
     }
     (cols, rows)
   }
-
-  /** K3 — write a bounded product frame into an .xlsx workbook as a
-    * year-named sheet, replace-if-exists (dischargeobs_write_xl.py:
-    * 136-144, 211-216) — the reference's actual daily product file.
-    */
-  def writeXlsxSheet(df: DataFrame, path: String, sheetName: String,
-                     orderCol: String): Unit =
-    Xlsx.upsertSheet(path, sheetName, sheetRows(df, orderCol))
-
-  /** K4 — the legacy `.xls` product (FRASER/SKEENA `obsflows.xls`,
-    * dischargeobs_write_xl.py:217-250): same grid, BIFF8 workbook,
-    * replace-if-exists over self-written files.
-    */
-  def writeXlsSheet(df: DataFrame, path: String, sheetName: String,
-                    orderCol: String): Unit =
-    Xls.upsertSheet(path, sheetName, sheetRows(df, orderCol))
 }

@@ -1,6 +1,6 @@
 package graft.export
 
-import java.io.{ByteArrayOutputStream, FileOutputStream}
+import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
@@ -251,15 +251,14 @@ object Xls {
       dirEntry("Workbook", 2, -1, firstStream, size) ++
       dirEntry("", 0, -1, 0, 0) ++ dirEntry("", 0, -1, 0, 0)
 
-    val out = new FileOutputStream(path)
-    try {
+    val fatBytes = body(nFat * 512)(b => fat.foreach(b.putInt))
+    Exports.replaceFile(path) { out =>
       out.write(header)
       out.write(difatExt)
-      val fatBytes = body(nFat * 512)(b => fat.foreach(b.putInt))
       out.write(fatBytes)
       out.write(dir)
       out.write(padded)
-    } finally out.close()
+    }
   }
 
   /** Replace-if-exists append via record-level SPLICE — the reference's

@@ -1,6 +1,6 @@
 package graft.export
 
-import java.io.{ByteArrayOutputStream, FileInputStream, FileOutputStream}
+import java.io.ByteArrayOutputStream
 import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
 import javax.xml.parsers.DocumentBuilderFactory
 import scala.collection.mutable
@@ -112,46 +112,48 @@ object Xlsx {
   /** Write a workbook with the given (name, grid) sheets, in order. */
   def write(path: String, sheets: Seq[(String, Grid)]): Unit = {
     require(sheets.nonEmpty, "a workbook needs at least one sheet")
-    val zos = new ZipOutputStream(new FileOutputStream(path))
-    def part(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8"))
-      zos.closeEntry()
+    Exports.replaceFile(path) { out =>
+      val zos = new ZipOutputStream(out)
+      def part(name: String, content: String): Unit = {
+        zos.putNextEntry(new ZipEntry(name))
+        zos.write(content.getBytes("UTF-8"))
+        zos.closeEntry()
+      }
+      val n = sheets.size
+      part("[Content_Types].xml",
+        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+        """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
+        """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
+        """<Default Extension="xml" ContentType="application/xml"/>""" +
+        """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>""" +
+        (1 to n).map(i =>
+          s"""<Override PartName="/xl/worksheets/sheet$i.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>""")
+          .mkString +
+        """</Types>""")
+      part("_rels/.rels",
+        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
+        """<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>""" +
+        """</Relationships>""")
+      part("xl/workbook.xml",
+        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+        """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>""" +
+        sheets.zipWithIndex.map { case ((name, _), i) =>
+          s"""<sheet name="${esc(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
+        }.mkString +
+        """</sheets></workbook>""")
+      part("xl/_rels/workbook.xml.rels",
+        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
+        (1 to n).map(i =>
+          s"""<Relationship Id="rId$i" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet$i.xml"/>""")
+          .mkString +
+        """</Relationships>""")
+      sheets.zipWithIndex.foreach { case ((_, grid), i) =>
+        part(s"xl/worksheets/sheet${i + 1}.xml", sheetXml(grid))
+      }
+      zos.finish()
     }
-    val n = sheets.size
-    part("[Content_Types].xml",
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-      """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
-      """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
-      """<Default Extension="xml" ContentType="application/xml"/>""" +
-      """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>""" +
-      (1 to n).map(i =>
-        s"""<Override PartName="/xl/worksheets/sheet$i.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>""")
-        .mkString +
-      """</Types>""")
-    part("_rels/.rels",
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-      """<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>""" +
-      """</Relationships>""")
-    part("xl/workbook.xml",
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-      """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>""" +
-      sheets.zipWithIndex.map { case ((name, _), i) =>
-        s"""<sheet name="${esc(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
-      }.mkString +
-      """</sheets></workbook>""")
-    part("xl/_rels/workbook.xml.rels",
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-      (1 to n).map(i =>
-        s"""<Relationship Id="rId$i" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet$i.xml"/>""")
-        .mkString +
-      """</Relationships>""")
-    sheets.zipWithIndex.foreach { case ((_, grid), i) =>
-      part(s"xl/worksheets/sheet${i + 1}.xml", sheetXml(grid))
-    }
-    zos.close()
   }
 
   /** The reference's replace-if-exists append (dischargeobs_write_xl.py:
@@ -257,13 +259,9 @@ object Xlsx {
     edits match {
       case None => false
       case Some((replaced, dropped, added)) =>
-        val src = java.nio.file.Paths.get(path)
-        val tmpPath = java.nio.file.Files.createTempFile(
-          src.toAbsolutePath.getParent, ".graft-upsert", ".xlsx")
         val zin = new ZipFile(path)
-        try {
-          val zos = new ZipOutputStream(
-            java.nio.file.Files.newOutputStream(tmpPath))
+        try Exports.replaceFile(path) { out =>
+          val zos = new ZipOutputStream(out)
           val en = zin.entries()
           while (en.hasMoreElements) {
             val e = en.nextElement()
@@ -279,14 +277,9 @@ object Xlsx {
           added.foreach { case (n, b) =>
             zos.putNextEntry(new ZipEntry(n)); zos.write(b); zos.closeEntry()
           }
-          zos.close()
-          java.nio.file.Files.move(tmpPath, src,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          true
-        } finally {
-          zin.close()
-          java.nio.file.Files.deleteIfExists(tmpPath)
-        }
+          zos.finish()
+        } finally zin.close()
+        true
     }
   }
 

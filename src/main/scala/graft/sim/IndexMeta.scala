@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.storage.ParquetCompact
+
 /** ONE index-meta contract for every persisted tick index (VERDICT r13
   * #4): the embedding tick's `_bands_meta`, the fingerprint tick's
   * `_fpbands_meta`, and any next modality share this module's
@@ -30,27 +32,25 @@ object IndexMeta {
   /** Read the single meta row at `metaDir` as name → long. None when
     * the artifact predates the meta contract (no directory). */
   def read(spark: SparkSession, metaDir: String,
-           cols: Seq[String]): Option[Map[String, Long]] = {
-    if (!graft.storage.Fs.exists(spark, metaDir)) None
-    else {
-      val rows = spark.read.parquet(metaDir)
-        .select(cols.map(c => col(c).cast("long").as(c)): _*).collect()
+           cols: Seq[String]): Option[Map[String, Long]] =
+    ParquetCompact.readIfExists(spark, metaDir).map { df =>
+      val rows = df.select(cols.map(c => col(c).cast("long").as(c)): _*)
+        .collect()
       require(rows.length == 1, s"index meta at $metaDir has " +
         s"${rows.length} rows, expected exactly 1")
-      Some(cols.zipWithIndex.map { case (c, i) => c -> rows(0).getLong(i) }.toMap)
+      cols.zipWithIndex.map { case (c, i) => c -> rows(0).getLong(i) }.toMap
     }
-  }
 
-  /** Persist the meta row (overwrite — the meta IS the current-dial
+  /** Persist the meta row (replaced whole — the meta IS the current-dial
     * record, history lives in the tick logs). */
   def write(spark: SparkSession, metaDir: String,
             fields: Seq[(String, Long)]): Unit = {
     val schema = StructType(fields.map(f =>
       StructField(f._1, LongType, nullable = false)))
     val row: Row = Row(fields.map(f => Long.box(f._2)): _*)
-    spark.createDataFrame(
+    ParquetCompact.replace(spark, metaDir)(spark.createDataFrame(
         java.util.Collections.singletonList(row), schema)
-      .coalesce(1).write.mode("overwrite").parquet(metaDir)
+      .coalesce(1).write.parquet(_))
   }
 
   /** The shared staleness skeleton. Returns the EFFECTIVE dial every

@@ -826,7 +826,7 @@ object Similarity {
     IndexMeta.read(spark, metaDir, Seq("bands", "rows_per_band", "built_n"))
       .map(m => (m("bands").toInt, m("rows_per_band").toInt, m("built_n")))
 
-  /** Persist the band-index meta row (overwrite — the meta IS the
+  /** Persist the band-index meta row (replaced whole — the meta IS the
     * current-width record, history lives in the tick logs). */
   def writeBandIndexMeta(spark: SparkSession, metaDir: String, bands: Int,
                          rowsPerBand: Int, builtN: Long): Unit =
@@ -868,8 +868,8 @@ object Similarity {
       legacyDial = floorRowsPerBand.toLong, corpusN = n,
       staleWhen = (built, need) => need > built,
       what = s"embedding LSH band index at $bandsDir") { w =>
-      lshBandRows(corpus, idCol, vecCol, dims, bands, w.toInt)
-        .write.mode("overwrite").parquet(bandsDir)
+      graft.storage.ParquetCompact.replace(spark, bandsDir)(
+        lshBandRows(corpus, idCol, vecCol, dims, bands, w.toInt).write.parquet(_))
     }.toInt
   }
 

@@ -3,32 +3,35 @@ package graft.storage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Small-file compaction for APPEND-GROWN parquet directories: the
-  * `_bands`/`_fpbands` corpus indexes of the embedding and fingerprint
-  * ticks, and (through [[compactWith]]) the bucketed IVF-PQ code table
-  * of [[graft.tools.IvfPqBuild.compact]]. Every ingest tick appends a
-  * handful of files; a thousand ticks is thousands of files under every
-  * later scan and listing, so a deployment runs this on a slower cadence
-  * than the ticks (or whenever [[dataFiles]] crosses its threshold).
+/** The ONE way graft replaces a directory in place — every tick
+  * product a rerun rewrites (the ECCC grid, ExportDaily's products and
+  * CSVs, the corpus `_manifest`, the crawl `_linedf`, the drift
+  * `_grid`/`psi`, BPE `_shard_offsets`, every [[graft.sim.IndexMeta]]
+  * row, the band-index rebuilds) and the small-file compaction of
+  * APPEND-GROWN directories (`_bands`/`_fpbands`, and through
+  * [[compactWith]] the bucketed IVF-PQ code table). The reference gets
+  * the same guarantee from its object store: it writes a product whole,
+  * then PUTs it, so a reader sees the old object or the new one.
   *
-  * THE SWAP (the only one in graft — crash-atomic, single-writer): the
-  * rewrite lands fully at `<dir>__compact` while the original keeps
-  * serving; the swap is then rename-ASIDE — original → `<dir>__old`,
-  * rewrite → canonical, aside deleted last — so every crash window
-  * leaves a complete copy on disk:
+  * THE SWAP (crash-atomic, single-writer; [[replace]]): the new
+  * contents land fully at `<dir>__compact` while the original keeps
+  * serving (so the writer may read `dir` to build them); the swap is
+  * then rename-ASIDE — original → `<dir>__old`, new → canonical, aside
+  * deleted last — so every crash window leaves a complete copy on disk:
   *  - before the first rename the original is canonical (a stray
-  *    `__compact` is swept by the next compaction);
+  *    `__compact`, finished or not, is swept by the next writer);
   *  - between the renames nothing is canonical, and the next reader's
-  *    [[recover]] promotes the completed rewrite (or, lacking one, rolls
+  *    [[recover]] promotes the finished rewrite (or, lacking one, rolls
   *    the aside original back);
   *  - after the second rename only the stray `__old` remains to sweep.
+  * A rewrite counts as finished once its job committed (`_SUCCESS`), so
+  * a crashed first write is never promoted in place of "absent".
   * READERS AT MOST PROMOTE, NEVER DELETE: a reader opening while a
-  * compaction runs in another process must not sweep that writer's
-  * in-progress `__compact`, so stray sweeping is writer-only
-  * ([[compactWith]], the one actor that knows no rewrite is in flight).
-  * Row-level content is IDENTICAL before and after (spec-pinned); only
-  * the file layout changes. Rewrite cost is one read + one write of the
-  * directory, paid 1/cadence as often as ticks.
+  * writer runs in another process must not sweep that writer's
+  * in-progress `__compact`, so stray sweeping is writer-only.
+  * Cost per replace: two renames and one delete on top of the write.
+  * On `s3a://` a rename is a copy, so there the swap costs one more
+  * copy of the directory per replace.
   */
 object ParquetCompact {
 
@@ -48,27 +51,63 @@ object ParquetCompact {
   }
 
   /** Reader-side crash recovery for the swap: when the canonical `dir`
-    * is missing, promote the completed `__compact` rewrite or, lacking
+    * is missing, promote the finished `__compact` rewrite or, lacking
     * one, roll the `__old` aside back. Idempotent; no-op on a healthy
     * directory. */
   def recover(spark: SparkSession, dir: String): Unit = {
     val fs = Fs.get(spark, dir)
     val (p, tmp, old) = (new Path(dir), rewritePath(dir), asidePath(dir))
     if (!fs.exists(p)) {
-      val from = if (fs.exists(tmp)) Some(tmp)
+      val from = if (Fs.exists(spark, s"$tmp/_SUCCESS")) Some(tmp)
         else if (fs.exists(old)) Some(old) else None
       from.foreach { f =>
-        require(fs.rename(f, p), s"swap recovery failed: $f -> $p")
+        require(fs.rename(f, p) || promoted(fs, f, p),
+          s"swap recovery failed: $f -> $p")
         System.err.println(s"[compact] crash window recovered at $dir: " +
           s"renamed ${f.getName} back to canonical")
       }
     }
   }
 
+  /** A rename that lost the race to another actor's identical one. */
+  private def promoted(fs: FileSystem, from: Path, to: Path): Boolean =
+    fs.exists(to) && !fs.exists(from)
+
   /** Read a swap-managed parquet directory, recovering first. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     recover(spark, dir)
     spark.read.parquet(dir)
+  }
+
+  /** [[read]], or None when the directory does not exist. */
+  def readIfExists(spark: SparkSession, dir: String): Option[DataFrame] = {
+    recover(spark, dir)
+    if (Fs.exists(spark, dir)) Some(spark.read.parquet(dir)) else None
+  }
+
+  /** Replace the contents of `dir` (absent or not) with what `write`
+    * puts at the path it is given: recover, sweep strays, write, swap
+    * in, and refresh the session's cached listings of `dir` once.
+    * `dir` stays canonical until `write` returns, so `write` may read
+    * it (a fold of the standing rows needs no checkpoint); a `write`
+    * that throws leaves `dir` untouched. */
+  def replace(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
+    recover(spark, dir)
+    val fs = Fs.get(spark, dir)
+    val (p, tmp, old) = (new Path(dir), rewritePath(dir), asidePath(dir))
+    sweepStrays(fs, tmp, old)
+    write(tmp.toString)
+    if (fs.exists(p))
+      require(fs.rename(p, old),
+        s"replace swap failed: $p -> $old (nothing moved; the " +
+          "original is still canonical)")
+    // between the renames a concurrent reader's recover may already
+    // have promoted the rewrite: that is the swap done, not a failure
+    require(fs.rename(tmp, p) || promoted(fs, tmp, p),
+      s"replace swap failed: $tmp -> $p (original preserved at " +
+        s"${old.getName}; the next read recovers it)")
+    fs.delete(old, true)
+    spark.catalog.refreshByPath(dir)
   }
 
   /** Rewrite `dir` into ~`targetFiles` files when its census exceeds
@@ -78,31 +117,21 @@ object ParquetCompact {
                  targetFiles: Int = 1): (Int, Int) = {
     require(targetFiles >= 1, s"targetFiles $targetFiles < 1")
     compactWith(spark, dir, maxFiles) { (src, tmp) =>
-      src.coalesce(targetFiles).write.mode("overwrite").parquet(tmp)
+      src.coalesce(targetFiles).write.parquet(tmp)
     }
   }
 
-  /** The threshold + rewrite + swap skeleton: recover, take the census,
-    * and when it exceeds `maxFiles` sweep strays, let `rewrite` write
-    * the directory's rows (read from the FILES) to the `__compact` path
-    * it is given, and swap it in. Returns (filesBefore, filesAfter). */
+  /** The threshold + [[replace]] skeleton: recover, take the census,
+    * and when it exceeds `maxFiles` let `rewrite` write the directory's
+    * rows (read from the FILES) to the path it is given, swapped in by
+    * [[replace]]. Returns (filesBefore, filesAfter). */
   def compactWith(spark: SparkSession, dir: String, maxFiles: Int)(
       rewrite: (DataFrame, String) => Unit): (Int, Int) = {
     recover(spark, dir)
     val before = dataFiles(spark, dir)
     if (before <= maxFiles) (before, before)
     else {
-      val fs = Fs.get(spark, dir)
-      val (p, tmp, old) = (new Path(dir), rewritePath(dir), asidePath(dir))
-      sweepStrays(fs, tmp, old)
-      rewrite(spark.read.parquet(dir), tmp.toString)
-      require(fs.rename(p, old),
-        s"compaction swap failed: $p -> $old (nothing moved; the " +
-          "original is still canonical)")
-      require(fs.rename(tmp, p),
-        s"compaction swap failed: $tmp -> $p (original preserved at " +
-          s"${old.getName}; the next read recovers it)")
-      fs.delete(old, true)
+      replace(spark, dir)(tmp => rewrite(spark.read.parquet(dir), tmp))
       (before, dataFiles(spark, dir))
     }
   }

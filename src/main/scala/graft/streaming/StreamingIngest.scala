@@ -89,7 +89,7 @@ object StreamingIngest {
     * band/set signature frames are a persisted index refreshed per tick
     * (see incrementalDedup's scaladoc).
     *
-    * Crash replay: the corpus append and the `_manifest` overwrite are
+    * Crash replay: the corpus append and the `_manifest` replace are
     * not atomic. A replayed batch matches its own stored copies as
     * exact dups and appends nothing, so a fold would never count it;
     * when the [[storedIds]] probe finds batch docs already in the
@@ -140,9 +140,7 @@ object StreamingIngest {
         fresh.write.mode("append").parquet(corpusDir)
         // manifest maintenance (TextOps.manifestMerge scaladoc): the
         // release cells stay current at per-batch cost. `_manifest`
-        // is underscore-hidden, so corpus parquet scans skip it; the
-        // standing frame is cell-bounded and checkpointed before the
-        // overwrite so the read never races its own replacement. The
+        // is underscore-hidden, so corpus parquet scans skip it. The
         // staged stream carries no (source, lang) → one global cell.
         val manifestDir = s"$corpusDir/_manifest"
         val merged =
@@ -151,12 +149,12 @@ object StreamingIngest {
               "already in the corpus) — rebuilding the manifest from the " +
               "corpus, healing any crash window")
             TextOps.corpusManifest(sp.read.parquet(corpusDir), groupCols = Seq.empty)
-          } else if (Fs.exists(sp, manifestDir))
-            TextOps.manifestMerge(
-              sp.read.parquet(manifestDir).localCheckpoint(true), fresh,
-              groupCols = Seq.empty)
-          else TextOps.corpusManifest(fresh, groupCols = Seq.empty)
-        merged.write.mode("overwrite").parquet(manifestDir)
+          } else ParquetCompact.readIfExists(sp, manifestDir) match {
+            case Some(standing) =>
+              TextOps.manifestMerge(standing, fresh, groupCols = Seq.empty)
+            case None => TextOps.corpusManifest(fresh, groupCols = Seq.empty)
+          }
+        ParquetCompact.replace(sp, manifestDir)(merged.write.parquet(_))
       } finally exactUniq.unpersist()
     }
   }
@@ -391,7 +389,7 @@ object StreamingIngest {
     * text, which is the point of frequency-truth maintenance).
     *
     * Crash-replay safety (the embedding-tick discipline): the two
-    * writes (line append, df overwrite) are not atomic. Batch docs are
+    * writes (line append, df replace) are not atomic. Batch docs are
     * anti-joined against the line store's doc_ids first, so a replayed
     * batch never double-appends lines; if the anti-join detects
     * already-ingested docs (the replay signature), the df grid is
@@ -466,13 +464,7 @@ object StreamingIngest {
     val linesDir = s"$outDir/_lines"
     val dfDir = s"$outDir/_linedf"
     val (fresh, replayDetected) = linesAppendBatch(batch, outDir, minChars)
-    // standing grid checkpointed before its own overwrite (the
-    // manifest-tick race lesson)
-    val standing =
-      if (Fs.exists(sp, dfDir))
-        Some(sp.read.parquet(dfDir).localCheckpoint(true))
-      else None
-    val merged = (if (replayDetected) {
+    val merged = if (replayDetected) {
       System.err.println("[crawl-tick] replay detected (batch docs " +
         "already in the line store) — rebuilding the df grid from " +
         "the store instead of folding, healing any crash window")
@@ -482,13 +474,13 @@ object StreamingIngest {
     } else {
       val freshDf = fresh.groupBy(col("lh"))
         .agg(countDistinct(col("doc_id")).as("line_df"))
-      standing match {
+      ParquetCompact.readIfExists(sp, dfDir) match {
         case Some(st) => st.unionByName(freshDf)
           .groupBy(col("lh")).agg(sum(col("line_df")).as("line_df"))
         case None => freshDf
       }
-    }).localCheckpoint(true)
-    merged.write.mode("overwrite").parquet(dfDir)
+    }
+    ParquetCompact.replace(sp, dfDir)(merged.write.parquet(_))
   }
 
   /** LINE-DF GRID AS STREAMING STATE (r18, the structural answer to
@@ -795,9 +787,8 @@ object StreamingIngest {
     val overDir = s"$outDir/_over"
     val linesDir = s"$outDir/_lines"
     def exists(d: String) = Fs.exists(spark, d)
-    if (!exists(pendDir) || !exists(linesDir)) return // nothing staged yet
-    val pending = spark.read.parquet(pendDir).distinct()
-      .localCheckpoint(true)
+    val pending = ParquetCompact.readIfExists(spark, pendDir)
+    if (pending.isEmpty || !exists(linesDir)) return // nothing staged yet
     val grid = lineDfFromState(spark, gridCkpt)
     // crossings from durable state: over-threshold cells not yet
     // handled (df is monotone ⇒ once over, always over; `_over` is the
@@ -809,7 +800,7 @@ object StreamingIngest {
     val linesStore = spark.read.parquet(linesDir)
     val crossedDocs = TextOps.sizedSemiJoin(linesStore, newOver, "lh")
       .select(col("doc_id")).distinct()
-    val dirty = pending.unionByName(crossedDocs).distinct()
+    val dirty = pending.get.unionByName(crossedDocs).distinct()
       .localCheckpoint(true)
     if (dirty.count() > 0) {
       // dirty docs' line rows (checkpointed: consumed by the cell
@@ -859,8 +850,8 @@ object StreamingIngest {
       newOver.write.mode("append").parquet(overDir)
     // clear LAST: a crash before this line re-runs the docs above as a
     // harmless superset next tick
-    spark.range(0).select(col("id").as("doc_id"))
-      .write.mode("overwrite").parquet(pendDir)
+    ParquetCompact.replace(spark, pendDir)(
+      spark.range(0).select(col("id").as("doc_id")).write.parquet(_))
   }
 
   /** STREAMING DRIFT MONITOR: one `Trigger.AvailableNow` tick drains
@@ -872,9 +863,9 @@ object StreamingIngest {
     * cell-grid arithmetic — the corpus is never re-read, yet the PSI
     * out of the maintained grid is BIT-IDENTICAL to the batch
     * `psiByGroup` over everything ingested so far (StreamingSpec pins
-    * this across multi-tick arrivals). The standing grid is
-    * checkpointed before the overwrite so the read never races its own
-    * replacement (the manifest-tick lesson).
+    * this across multi-tick arrivals). The grid and the PSI table are
+    * each replaced whole ([[ParquetCompact.replace]]), so a crashed
+    * tick keeps the last good grid.
     */
   def driftMonitorTick(spark: SparkSession, stagingDir: String,
                        monitorDir: String, checkpointDir: String): Unit = {
@@ -888,14 +879,14 @@ object StreamingIngest {
       val gridDir = s"$monitorDir/_grid"
       val psiDir = s"$monitorDir/psi"
       val fresh = Calibrate.psiGrid(batch, "source", col("n_chars"))
-      val merged = (if (Fs.exists(sp, gridDir))
-        sp.read.parquet(gridDir).localCheckpoint(true)
-          .unionByName(fresh)
+      val merged = ParquetCompact.readIfExists(sp, gridDir) match {
+        case Some(standing) => standing.unionByName(fresh)
           .groupBy(col("grp"), col("bucket")).agg(sum(col("c")).as("c"))
-      else fresh).localCheckpoint(true)
-      merged.write.mode("overwrite").parquet(gridDir)
-      Calibrate.psiFromGrid(merged)
-        .write.mode("overwrite").parquet(psiDir)
+        case None => fresh
+      }
+      ParquetCompact.replace(sp, gridDir)(merged.write.parquet(_))
+      ParquetCompact.replace(sp, psiDir)(
+        Calibrate.psiFromGrid(sp.read.parquet(gridDir)).write.parquet(_))
     }
   }
 }

@@ -1148,8 +1148,8 @@ object NearDup {
       // staleness is any mismatch, not a one-directional outgrowth
       staleWhen = (built, need) => need != built,
       what = s"hamming fingerprint band index at $bandsDir") { b =>
-      hammingBandRows(corpus, idCol, hashCol, bits, b.toInt)
-        .write.mode("overwrite").parquet(bandsDir)
+      graft.storage.ParquetCompact.replace(spark, bandsDir)(
+        hammingBandRows(corpus, idCol, hashCol, bits, b.toInt).write.parquet(_))
     }.toInt
   }
 

@@ -124,7 +124,7 @@ object TextOps {
                          outDir: String,
                          maxDocFreq: Long): org.apache.spark.sql.DataFrame =
     lineFilterFromRows(spark.read.parquet(s"$outDir/_lines"),
-      spark.read.parquet(s"$outDir/_linedf"), maxDocFreq)
+      graft.storage.ParquetCompact.read(spark, s"$outDir/_linedf"), maxDocFreq)
 
   def corpusDiff(oldDf: org.apache.spark.sql.DataFrame,
                  newDf: org.apache.spark.sql.DataFrame,

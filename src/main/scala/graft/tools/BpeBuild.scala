@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sim.IndexMeta
-import graft.storage.Fs
+import graft.storage.{Fs, ParquetCompact}
 import graft.streaming.StreamingIngest
 import graft.text.Bpe
 
@@ -120,10 +120,7 @@ object BpeBuild {
           (uniq.join(broadcast(ingested), Seq("doc_id"), "left_anti"),
             ingested.count() > 0)
         } else (uniq, false)
-      val standing =
-        if (Fs.exists(sp, offDir))
-          Some(sp.read.parquet(offDir).localCheckpoint(true))
-        else None
+      val standing = ParquetCompact.readIfExists(sp, offDir)
       // base offsets for THIS batch's fresh docs (ADVICE r18): on a
       // detected replay the standing _shard_offsets may be stale (a
       // crash between the token append and the offset fold), so a
@@ -149,13 +146,13 @@ object BpeBuild {
       packed.write.mode("append").parquet(tokensDir)
       val batchCounts = packed.groupBy(col("shard"))
         .agg(count(lit(1)).as("base_tok"))
-      val newOffsets = (baseOff match {
+      val newOffsets = baseOff match {
         case Some(st) => st.unionByName(batchCounts)
           .groupBy(col("shard"))
           .agg(sum(col("base_tok")).as("base_tok"))
         case None => batchCounts
-      }).localCheckpoint(true)
-      newOffsets.write.mode("overwrite").parquet(offDir)
+      }
+      ParquetCompact.replace(sp, offDir)(newOffsets.write.parquet(_))
     }
   }
 

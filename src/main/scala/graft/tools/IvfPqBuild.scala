@@ -418,8 +418,8 @@ object IvfPqBuild {
             cents, (s, c) => pqCb((s, c)), nprobe, k)
           val r0Dir = s"$outDir/heldout/recall0"
           val relFloor =
-            if (Fs.exists(sp, r0Dir)) {
-              val r0 = sp.read.parquet(r0Dir)
+            ParquetCompact.readIfExists(sp, r0Dir).map { r0All =>
+              val r0 = r0All
                 .filter(col("nprobe") === nprobe && col("k") === k)
                 .select(col("recall_micro")).collect()
               r0.headOption.map(r =>
@@ -436,16 +436,15 @@ object IvfPqBuild {
                     s"nprobe=$nprobe k=$k — calibrated drift check " +
                     s"disarmed THIS tick; freezing current recall " +
                     s"$recall µ as the first-use baseline")
-                  val existing = sp.read.parquet(r0Dir)
+                  ParquetCompact.replace(sp, r0Dir)(r0All
                     .select(col("nprobe").cast("int"), col("k").cast("int"),
-                      col("recall_micro").cast("long")).collect()
-                    .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
-                  (existing :+ ((nprobe, k, recall)))
-                    .toDF("nprobe", "k", "recall_micro")
-                    .coalesce(1).write.mode("overwrite").parquet(r0Dir)
+                      col("recall_micro").cast("long"))
+                    .unionByName(Seq((nprobe, k, recall))
+                      .toDF("nprobe", "k", "recall_micro"))
+                    .coalesce(1).write.parquet(_))
                   0L
                 }
-            } else 0L
+            }.getOrElse(0L)
           val floor = math.max(recallFloorMicro, relFloor)
           val stale = recall < floor
           if (stale)
@@ -453,11 +452,11 @@ object IvfPqBuild {
               s"recall $recall µ < floor $floor µ at " +
               s"nprobe=$nprobe k=$k on $nAfter vectors — run " +
               "'retrain <rawsDir> <outDir>'")
-          Seq((nAfter, recall, floor, stale, neededC))
-            .toDF("n_vectors", "recall_micro", "floor_micro", "stale",
-              "needed_centroids")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/_heldout_recall")
+          ParquetCompact.replace(sp, s"$outDir/_heldout_recall")(
+            Seq((nAfter, recall, floor, stale, neededC))
+              .toDF("n_vectors", "recall_micro", "floor_micro", "stale",
+                "needed_centroids")
+              .coalesce(1).write.parquet(_))
         }
       } finally b.unpersist()
     }
@@ -518,8 +517,7 @@ object IvfPqBuild {
     * rewrite `_meta` anyway, compaction calls this explicitly. */
   private def touchMeta(spark: SparkSession, outDir: String): Unit = {
     val metaDir = s"$outDir/_meta"
-    if (Fs.exists(spark, metaDir)) {
-      val df = spark.read.parquet(metaDir)
+    ParquetCompact.readIfExists(spark, metaDir).foreach { df =>
       val fields = df.columns.toSeq.map { c =>
         c -> df.select(col(c).cast("long")).head().getLong(0)
       }

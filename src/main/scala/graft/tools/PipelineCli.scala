@@ -7,7 +7,7 @@ import graft.core.TimeUtil
 import graft.export.{Exports, Xls, Xlsx}
 import graft.ingest.{EcccSwob, Provincial, Usgs, Wsc}
 import graft.pipeline.Pipelines
-import graft.storage.{Fs, ObsStore}
+import graft.storage.{Fs, ObsStore, ParquetCompact}
 
 /* Thin per-workflow CLIs mirroring the reference's three cron scripts —
   * the "run E1/E2/E3 on a tick" entry points (SURVEY §3; the reference
@@ -18,7 +18,9 @@ import graft.storage.{Fs, ObsStore}
   * raw files, the tick normalizes + merges them. main() owns the session
   * (ToolSession doctrine); run() is session-injected so PipelineCliSpec
   * drives all three on the shared test session. Paths are probed with
-  * `Fs.exists`, so `file://` and `s3a://` URIs work as plain paths do.
+  * `Fs.exists`, so `file://` and `s3a://` URIs work as plain paths do,
+  * and every product a rerun rewrites goes through
+  * `ParquetCompact.replace`, so a crashed tick leaves the last good copy.
   */
 
 /** E1 — instantaneous ingest tick (`discharge_obs_pd.py:366-412`):
@@ -105,13 +107,11 @@ object ExportDaily {
         require(!r.isNullAt(0), s"store at $storeDir is empty; pass nowIso explicitly")
         (lit(r.getTimestamp(0)), r.getString(1))
     }
-    Pipelines.hourlyRollup(inst, now).write.mode("overwrite").parquet(s"$outDir/hourly")
-    // same stale-listing hazard as EcccTick's grid: a second run in one
-    // session must not plan its read-back over the deleted files
-    spark.catalog.refreshByPath(s"$outDir/hourly")
+    ParquetCompact.replace(spark, s"$outDir/hourly")(
+      Pipelines.hourlyRollup(inst, now).write.parquet(_))
     val hourly = spark.read.parquet(s"$outDir/hourly")
-    Pipelines.dailyRollup(hourly).write.mode("overwrite").parquet(s"$outDir/daily")
-    spark.catalog.refreshByPath(s"$outDir/daily")
+    ParquetCompact.replace(spark, s"$outDir/daily")(
+      Pipelines.dailyRollup(hourly).write.parquet(_))
     val daily = spark.read.parquet(s"$outDir/daily")
     Exports.writeCsv(
       Pipelines.coffeeProduct(spark, inst)
@@ -154,23 +154,17 @@ object EcccTick {
           outDir: String): (Long, Long) = {
     val fresh = EcccSwob.readObs(spark, stagingDir)
       .withColumn("f_read", lit(true))
-    val prior =
-      if (Fs.exists(spark, gridDir)) spark.read.parquet(gridDir)
-      else fresh.limit(0)
+    val prior = ParquetCompact.readIfExists(spark, gridDir)
+      .getOrElse(fresh.limit(0))
     // old wins (T2 doctrine): a re-staged hour cannot overwrite the
-    // stored cell; localCheckpoint decouples the merged frame from the
-    // gridDir files so the overwrite below cannot read its own output
-    val merged = graft.ops.Dedup.dedupFirst(
-        prior.withColumn("__src", lit(0))
-          .unionByName(fresh.withColumn("__src", lit(1))),
-        Seq("station", "ts", "param"), Seq(col("__src")))
-      .drop("__src")
-      .localCheckpoint(true)
-    merged.write.mode("overwrite").parquet(gridDir)
-    // path-based reads cache their file listing; without the refresh a
-    // second tick in one session plans the read-back over the deleted
-    // pre-overwrite files
-    spark.catalog.refreshByPath(gridDir)
+    // stored cell
+    ParquetCompact.replace(spark, gridDir)(
+      graft.ops.Dedup.dedupFirst(
+          prior.withColumn("__src", lit(0))
+            .unionByName(fresh.withColumn("__src", lit(1))),
+          Seq("station", "ts", "param"), Seq(col("__src")))
+        .drop("__src")
+        .write.parquet(_))
     val grid = spark.read.parquet(gridDir)
     // the resume work-list a fetcher would take next tick: full
     // station × hour grid of the observed window, minus read cells

@@ -2,9 +2,12 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE local-session builder for graft's mains (`graft.Bench` and
-  * the tools) — copies had already drifted on the SPARK_GRAFT_CPUS
-  * default; a new required config now lands once.
+/** The ONE local-session builder for graft's mains (`graft.Bench`,
+  * `Smoke`, `PipelineDemo` and the tools) — copies had already drifted
+  * on the SPARK_GRAFT_CPUS default; a new required config now lands
+  * once. `graft.Verify` alone keeps its own builder: it is the oracle
+  * correctness run, and its 33.5 s was measured at its own `local[4]`
+  * default (ToolSession defaults to `local[32]`).
   */
 object ToolSession {
   def local(): SparkSession = {

@@ -10,7 +10,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the bucketed-table DDL (`CLUSTERED BY`): `tools.Catalog.open`;
   *  - the Hadoop-FS path probe: `storage.Fs` (also the one
   *    `getFileSystem`), and no `java.nio` `Files.exists` under tools/,
-  *    which reads a `file://` or `s3a://` URI as absent.
+  *    which reads a `file://` or `s3a://` URI as absent;
+  *  - the in-place directory replace: `storage.ParquetCompact.replace`
+  *    (also the one `refreshByPath`), so no tick product is rewritten
+  *    by `mode("overwrite")`, which deletes the old rows before the new
+  *    ones exist;
+  *  - the local session: `tools.ToolSession.local`, plus the oracle
+  *    run's own builder in `Verify`.
   */
 class OnDiskProtocolSpec extends AnyFunSuite {
   private val root = java.nio.file.Paths.get("src/main/scala/graft")
@@ -49,5 +55,18 @@ class OnDiskProtocolSpec extends AnyFunSuite {
       Seq("storage/Fs.scala" -> 1))
     assert(sites("""getFileSystem\(""") === Seq("storage/Fs.scala" -> 1))
     assert(sites("""Files\.exists""", under = "tools/").isEmpty)
+  }
+
+  test("one directory replace, in storage.ParquetCompact") {
+    assert(sites("refreshByPath") === Seq("storage/ParquetCompact.scala" -> 1))
+    // the one-off artifact builds (BpeBuild, IvfPqBuild) keep overwrite;
+    // `format("noop")` sinks end in `.save()` and do not match
+    val overwrite =
+      """mode\("overwrite"\)(\s*\.\w+\([^()]*\))*\s*\.(parquet|csv)\("""
+    val ticks = Set("streaming/StreamingIngest.scala",
+      "tools/PipelineCli.scala", "sim/IndexMeta.scala")
+    assert(sites(overwrite).filter(s => ticks(s._1)).isEmpty)
+    assert(sites("""SparkSession\s*\.builder""") ===
+      Seq("Verify.scala" -> 1, "tools/ToolSession.scala" -> 1))
   }
 }

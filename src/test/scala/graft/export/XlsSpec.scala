@@ -288,12 +288,12 @@ class XlsSpec extends SparkSpec {
     }
   }
 
-  test("writeXlsSheet: DataFrame nulls render as blank cells, doubles survive") {
+  test("upsertSheet of sheetRows: nulls render as blank cells, doubles survive") {
     import spark.implicits._
     val path = tmp("df.xls")
     val df = Seq(("2023-01-01", Some(1.5)), ("2023-01-02", None: Option[Double]))
       .toDF("DATE", "08MF005")
-    Exports.writeXlsSheet(df, path, "2023", "DATE")
+    Xls.upsertSheet(path, "2023", Exports.sheetRows(df, "DATE"))
     val (h, rows) = Xls.read(path).head._2
     assert(h === Array("DATE", "08MF005"))
     assert(rows.map(_.toSeq) === Array(Seq("2023-01-01", "1.5"), Seq("2023-01-02", "")))

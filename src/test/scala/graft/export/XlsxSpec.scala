@@ -42,12 +42,12 @@ class XlsxSpec extends SparkSpec {
     assert(back(1)._2._2.head.head === "99" && back(2)._2._2.head.head === "42")
   }
 
-  test("writeXlsxSheet: DataFrame nulls render as blank cells") {
+  test("upsertSheet of sheetRows: DataFrame nulls render as blank cells") {
     import spark.implicits._
     val path = tmp("df.xlsx")
     val df = Seq(("01-01", Some(1.5)), ("01-02", None: Option[Double]))
       .toDF("Day", "08MF005")
-    Exports.writeXlsxSheet(df, path, "2023", "Day")
+    Xlsx.upsertSheet(path, "2023", Exports.sheetRows(df, "Day"))
     val (h, rows) = Xlsx.read(path).head._2
     assert(h === Array("Day", "08MF005"))
     assert(rows.map(_.toSeq) === Array(Seq("01-01", "1.5"), Seq("01-02", "")))

@@ -769,6 +769,33 @@ class StreamingSpec extends SparkSpec {
     assert(bb > 1 && ba === 1, s"band-dir compaction must bind: $bb -> $ba")
     assert(!fs.exists(bTmp) && !fs.exists(bOld))
     assert(bandRows() === bandsBefore)
+
+    // the replaced-product arm: EcccTick's grid is rewritten through the
+    // same swap, so its next tick recovers either window and keeps every
+    // earlier hour (f_read resume flags included) instead of reading the
+    // missing grid as absent
+    val swob = Paths.get(resource("swob/WAE_2024011506.xml"))
+    def ecccTick(grid: String, hour: String): Unit = {
+      val staged = Files.createDirectories(Paths.get(s"$grid-swob$hour"))
+      Files.copy(swob, staged.resolve(s"WAE_$hour.xml"))
+      graft.tools.EcccTick.run(spark, staged.toString, grid, s"$base/eccc")
+    }
+    def hours(grid: String) = spark.read.parquet(grid)
+      .select("ts").distinct().count()
+    for (window <- Seq("rewrite", "aside")) {
+      val grid = s"$base/grid-$window"
+      val (g, gTmp, gOld) = (new org.apache.hadoop.fs.Path(grid),
+        new org.apache.hadoop.fs.Path(s"${grid}__compact"),
+        new org.apache.hadoop.fs.Path(s"${grid}__old"))
+      ecccTick(grid, "2024011506")
+      if (window == "rewrite")
+        assert(org.apache.hadoop.fs.FileUtil.copy(fs, g, fs, gTmp, false, conf))
+      assert(fs.rename(g, gOld) && !fs.exists(g))
+      ecccTick(grid, "2024011507")
+      assert(hours(grid) === 2L,
+        s"window '$window': the next EcccTick lost the earlier hour")
+      assert(!fs.exists(gTmp) && !fs.exists(gOld))
+    }
   }
 
   test("warm serve loop re-opens when a tick lands underneath " +
