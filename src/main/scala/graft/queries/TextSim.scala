@@ -231,7 +231,7 @@ object TextSim extends QueryPack {
 
   /** Micro-snapped SSE rendering shared by every residual-PQ CTE —
     * the exact ((r·r − 2·r·cv) + cv·cv) composition the engine kernel
-    * folds (pqAuditWith's association, residual operand). */
+    * folds (pqAudit's association, residual operand). */
   private def rsseSql(rcol: String, cvcol: String): String =
     s"""floor(((list_dot_product($rcol, $rcol)
                 - 2 * list_dot_product($rcol, $cvcol))

@@ -86,20 +86,29 @@ object Similarity {
     math.sqrt(acc)
   }
 
-  /** Driver-memory budget for [[ivfPqProbe]]'s query-side collect —
+  /** Driver-memory budget for the IVF-PQ serve path ([[ivfPqServe]]):
+    * its query-side collect plus the distance table it broadcasts —
     * the quantified form of the bruteForceTopK "queries must be small"
     * broadcast rule (VERDICT r14 #4 made it an enforced contract). */
   val ProbeCollectBudgetBytes: Long = 256L << 20
 
-  /** Row cap the budget buys: each collected query row is
-    * (dims + centroids) doubles (vector + cell-cosine array), so the
-    * cap SHRINKS as the centroid count grows — a √N-sized quantizer at
-    * a 2M-vector corpus widens the row ~20× vs the floor-held shape,
-    * and a fixed row cap would silently blow the budget there. */
+  /** Query cap the budget buys. Per query the driver holds the collected
+    * row — (dims + centroids) doubles (vector + cell-cosine array) — and,
+    * per probed cell, one probe row carrying the vector plus
+    * `cellTableRows` (= m·ksub) distance-table rows of six 8-byte fields
+    * on their way into the broadcast. The cap SHRINKS as the centroid
+    * count grows (a √N-sized quantizer at a 2M-vector corpus widens the
+    * row ~20× vs the floor-held shape) and as the table widens (at
+    * dims 64, C 16, nprobe 2, m 8, ksub 16 the table is 95% of a query's
+    * bytes); a fixed row cap would silently blow the budget there. The
+    * defaults count the collected row alone. */
   private[graft] def probeQueryCap(dims: Int, centroids: Int,
-                                   budgetBytes: Long): Int =
-    math.max(1024L, budgetBytes / ((dims + centroids).toLong * 8L))
-      .min(Int.MaxValue.toLong).toInt
+                                   budgetBytes: Long, nprobe: Int = 0,
+                                   cellTableRows: Int = 0): Int = {
+    val perQuery = 8L * (dims + centroids) +
+      nprobe.toLong * (8L * dims + 48L * cellTableRows)
+    math.max(1024L, budgetBytes / perQuery).min(Int.MaxValue.toLong).toInt
+  }
 
   /** Brute-force top-k: for each query vector, the k nearest non-self
     * vectors by cosine. `queries` must be small (it is broadcast). Norms
@@ -387,12 +396,7 @@ object Similarity {
       .join(truth, Seq("query_id", "vec_id"), "left_semi")
       .groupBy(col("np")).agg(count(lit(1)).as("hits"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    import vectors.sparkSession.implicits._
-    nprobes.map { np =>
-      val hits = hitsByNp.getOrElse(np, 0L)
-      (np, nq, hits, nq * k,
-        math.floor(hits.toDouble * 1e6 / (nq * k).toDouble + 0.5).toLong)
-    }.toDF("nprobe", "n_queries", "hits", "possible", "recall_micro")
+    recallTable(vectors.sparkSession, nprobes, nq, k, hitsByNp)
   }
 
   /** SIMPLIFIED SILHOUETTE per IVF cell (Rousseeuw 1987's silhouette
@@ -1244,29 +1248,6 @@ object Similarity {
     ivfTopK(vectors, idCol, vecCol, dims, c, nprobe, k, queryPred)
   }
 
-  /** IVF-PQ ADC top-k (Jégou et al. 2011's full IVFADC system, public):
-    * the composition that makes PQ scoring SERVE at corpus scale. Plain
-    * [[pqAdcTopK]] is an exhaustive ADC scan — every query scores every
-    * code row, an N·N_q term the r11 ×100 study measured at 226× wall
-    * for 100× data. Here the [[ivfTopK]] coarse quantizer prunes first:
-    * vectors carry (cell, PQ code); a query probes its `nprobe` best
-    * cells and ADC-scores ONLY the codes living there — per-query work
-    * is nprobe·N/K code lookups (sublinear at the √N centroid rule)
-    * instead of N.
-    *
-    * Semantics: identical distance tables and micro-snapped ADC sums as
-    * [[pqAdcTopK]] (same codebooks, same fold order — the oracle
-    * recomputes both quantizers from the shared md5 formulas); the
-    * result is pqAdcTopK RESTRICTED to candidates in probed cells, the
-    * recall/cost trade every deployed IVFADC index makes. k/nprobe/m/
-    * ksub are the standard serving knobs.
-    *
-    * Plan shape: the assignment+codes pass is the index build
-    * (map-only, materialized once); serving is one tiny probe window,
-    * one broadcast of the probe list, one broadcast of the per-query
-    * distance tables (both queries×-bounded), a cell equi-join, and the
-    * grouped m-term sum — no N×N_q term anywhere.
-    */
   /** [[ivfPqTopK]] behind the √N centroid rule (one count(), the
     * ivfTopKAuto doctrine): K = floor through every oracle scale, √N
     * above — a fixed coarse K leaves the probed-cell population ∝ N/K,
@@ -1292,258 +1273,52 @@ object Similarity {
                  dims: Int, m: Int, ksub: Int, centroids: Int): DataFrame =
     ivfPqEncode(vectors, idCol, vecCol, dims, m, ksub,
       (0 until centroids).map(c => centroidVec(c, dims)).toArray,
-      (s, c) => pqCentroidVec(s, c, dims / m))
+      (s, c) => pqCentroidVec(s, c, dims / m), residual = false)
 
-  /** Probe an ALREADY-BUILT IVF-PQ index with EXTERNAL raw-vector
+  /** Probe an ALREADY-BUILT [[ivfPqIndex]] with EXTERNAL raw-vector
     * queries — the serve half of the build-once/probe-many lifecycle
     * (the regime §F5 of SCALE.md is about: queries arrive at a rate
-    * independent of corpus size). Per query: one K-dot cell ranking +
-    * one m·ksub distance table (both query-side only), then ADC over
-    * the nprobe probed cells' codes. Results are [[ivfPqTopK]]'s
-    * exactly when the queries are corpus rows (spec pins parity — same
-    * quantizer formulas, same micro-snapped sums, same self-exclusion).
+    * independent of corpus size), through [[ivfPqServe]]. Results are
+    * [[ivfPqTopK]]'s exactly when the queries are corpus rows (spec pins
+    * parity — same quantizer formulas, same micro-snapped sums, same
+    * self-exclusion). A persisted artifact (tools/IvfPqBuild) serves
+    * through [[ivfPqServe]] with its own loaded codebooks.
     */
   def ivfPqProbe(index: DataFrame, queries: DataFrame, idCol: String,
                  vecCol: String, dims: Int, m: Int, ksub: Int,
                  centroids: Int, nprobe: Int, k: Int,
-                 coarseCodebook: Option[Array[Array[Double]]] = None,
-                 pqCodebook: Option[(Int, Int) => Array[Double]] = None,
-                 literalDistanceTable: Boolean = false,
-                 collectBudgetBytes: Long = ProbeCollectBudgetBytes): DataFrame = {
-    val adc = ivfPqProbeCandidates(index, queries, idCol, vecCol, dims, m,
-      ksub, centroids, nprobe, coarseCodebook, pqCodebook,
-      literalDistanceTable, collectBudgetBytes)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_micro"), col("vec_id"))
-    adc.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc_micro"), col("rank"))
-  }
+                 collectBudgetBytes: Long = ProbeCollectBudgetBytes): DataFrame =
+    ivfPqServe(index, queries, idCol, vecCol, dims, m, ksub, nprobe, k,
+      (0 until centroids).map(c => centroidVec(c, dims)).toArray,
+      (s, c) => pqCentroidVec(s, c, dims / m), residual = false,
+      collectBudgetBytes)
 
-  /** The candidate half of [[ivfPqProbe]] at probe width `npMax`, each
-    * (query, vec) ADC sum tagged with the probe rank of the vec's cell
-    * (r19 — the [[residualAdcCandidates]] discipline for the raw-PQ
-    * serve path): slicing prank ≤ nprobe reproduces a narrower probe's
-    * candidate set exactly, which lets the recall sweep run ONE probe
-    * at max(nprobes) instead of one per point. Still exactly one
-    * driver collect (the serve-sized qCap guard) and one answer plan.
+  /** IVF-PQ ADC top-k (Jégou et al. 2011's full IVFADC system, public):
+    * the composition that makes PQ scoring SERVE at corpus scale. Plain
+    * [[pqAdcTopK]] is an exhaustive ADC scan — every query scores every
+    * code row, an N·N_q term the r11 ×100 study measured at 226× wall
+    * for 100× data. Here the [[ivfTopK]] coarse quantizer prunes first:
+    * vectors carry (cell, PQ code); a query probes its `nprobe` best
+    * cells and ADC-scores ONLY the codes living there — per-query work
+    * is nprobe·N/K code lookups (sublinear at the √N centroid rule)
+    * instead of N.
+    *
+    * Semantics: identical distance tables and micro-snapped ADC sums as
+    * [[pqAdcTopK]] (same codebooks, same fold order — the oracle
+    * recomputes both quantizers from the shared md5 formulas); the
+    * result is pqAdcTopK RESTRICTED to candidates in probed cells, the
+    * recall/cost trade every deployed IVFADC index makes. k/nprobe/m/
+    * ksub are the standard serving knobs. Raw PQ is the zero-base case
+    * of the residual IVFADC ([[ivfPqResidualTopK]]); both run the same
+    * [[adcCandidates]] plan.
     */
-  private def ivfPqProbeCandidates(index: DataFrame, queries: DataFrame,
-                 idCol: String, vecCol: String, dims: Int, m: Int, ksub: Int,
-                 centroids: Int, npMax: Int,
-                 coarseCodebook: Option[Array[Array[Double]]] = None,
-                 pqCodebook: Option[(Int, Int) => Array[Double]] = None,
-                 literalDistanceTable: Boolean = false,
-                 collectBudgetBytes: Long = ProbeCollectBudgetBytes): DataFrame = {
-    val nprobe = npMax
-    require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
-    val sp = index.sparkSession
-    val dsub = dims / m
-    // codebooks default to the shared formula quantizers; a persisted
-    // artifact (tools/IvfPqBuild) passes its OWN loaded codebooks so the
-    // serve path genuinely exercises what was written to disk
-    val cents = coarseCodebook.getOrElse(
-      (0 until centroids).map(c => centroidVec(c, dims)).toArray)
-    require(cents.length == centroids,
-      s"coarse codebook carries ${cents.length} centroids, expected $centroids")
-    // QUERY-SIDE WORK IS DRIVER-BOUNDED (r13 #2): ONE job collects the
-    // kernel-assigned query rows — N_q × (dims + C) doubles — then the
-    // probe ranking is a driver sort and the probe list and query
-    // vectors re-enter the plan as LocalRelations. The serve-sized
-    // contract is ENFORCED, not assumed (VERDICT r14 #4): the collect
-    // runs under a row cap derived from `collectBudgetBytes` / the
-    // per-row width, and a batch past the cap fails with a named error
-    // instead of a silent driver OOM — the same refuse-loudly rule as
-    // the bounded histogram collect in Calibrate and the automaton
-    // guard in TextOps. limit(cap+1) bounds driver memory DURING the
-    // collect (results below the cap are identical to an unlimited
-    // collect, so the guard costs nothing on the happy path).
-    // Three consequences: (a) the scan filter, the probe join and the
-    // distance tables all derive from ONE evaluation of the upstream
-    // (ADVICE r13 — independent evaluations of a nondeterministic
-    // frame could diverge and silently drop cells the join expects);
-    // (b) a warm serve batch runs exactly TWO jobs — this collect and
-    // the answer — with no checkpoint or broadcast-from-exchange jobs
-    // between; (c) with the broadcast-table ADC below, the compiled
-    // answer plan is batch-invariant. The ranking mirrors the old
-    // window's (pcos DESC, pcell ASC) exactly: java.lang.Double.compare
-    // IS Spark's physical double ordering (NaN greatest, -0.0 < 0.0).
-    val q = assignCells(queries, idCol, vecCol, cents)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("ccos"))
-    val qCap = probeQueryCap(dims, centroids, collectBudgetBytes)
-    val qData = q.limit(qCap + 1).collect()
-    require(qData.length <= qCap,
-      s"ivfPqProbe: query batch exceeds the serve-sized cap of $qCap rows " +
-        s"(${collectBudgetBytes >> 20} MiB driver budget at dims=$dims, " +
-        s"C=$centroids) — split the batch (the serve loop's request " +
-        "granularity) or use ivfPqTopK, whose query side stays distributed")
-    val probePairs: Seq[(Any, Int, Int)] = qData.toSeq.flatMap { r =>
-      if (r.isNullAt(2)) Seq.empty[(Any, Int, Int)]
-      else {
-        val ccos = r.getSeq[Double](2)
-        ccos.indices.map(i => (i, ccos(i)))
-          .sortWith { case ((ia, xa), (ib, xb)) =>
-            val c = java.lang.Double.compare(xb, xa)
-            if (c != 0) c < 0 else ia < ib
-          }
-          .take(nprobe)
-          .zipWithIndex
-          .map { case ((i, _), rk) => (r.get(0), i, rk + 1) }
-      }
-    }
-    val qidField = q.schema.head
-    val probesL = sp.createDataFrame(
-      java.util.Arrays.asList(probePairs.map { case (qid, c, rk) =>
-        org.apache.spark.sql.Row(qid, c, rk) }: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("query_id",
-          qidField.dataType, qidField.nullable),
-        org.apache.spark.sql.types.StructField("cell",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("prank",
-          org.apache.spark.sql.types.IntegerType, nullable = false))))
-    val qL = sp.createDataFrame(
-      java.util.Arrays.asList(qData.map(r =>
-        org.apache.spark.sql.Row(r.get(0), r.get(1))): _*),
-      org.apache.spark.sql.types.StructType(q.schema.take(2)))
-    // BATCH-INVARIANT DISTANCE TABLES (VERDICT r13 #2, default): the
-    // per-(query, subspace, code) ADC table used to be built as an
-    // m·ksub-literal expression tree — every codebook vector a typedLit
-    // — which made the warm serve loop PLANNING-bound: ~2.4 s of each
-    // batch was Catalyst re-analyzing a fresh ~m·ksub-struct plan
-    // (SCALE.md §10, r13). Carrying the codebook as a small broadcast
-    // DataFrame (subspace, code, cv, cdot — m·ksub rows, driver-built
-    // once) and CROSS-JOINING the queries to it makes the compiled plan
-    // a fixed shape independent of batch content: the same sliced-dot
-    // kernel runs per joined row, so the arithmetic — slice, index-
-    // order dot folds, (aa − 2·q·c) + |c|², micro snap — is the SAME
-    // double sequence as the literal tree and the results are
-    // bit-identical (SimilaritySpec pins literal ≡ broadcast-table ≡
-    // exhaustive ADC). The literal path stays available
-    // (`literalDistanceTable = true`) as the parity witness.
-    val table =
-      if (literalDistanceTable) {
-        val entries = (0 until m).flatMap { s =>
-          val sub = slice(col("qv"), s * dsub + 1, dsub)
-          val aa = dot(sp, sub, sub)
-          (0 until ksub).map { c =>
-            val cv = pqCodebook.map(f => f(s, c))
-              .getOrElse(pqCentroidVec(s, c, dsub))
-            require(cv.length == dsub,
-              s"PQ codebook entry ($s,$c) carries ${cv.length} dims, expected $dsub")
-            val t = (aa - lit(2.0) * dot(sp, sub, typedLit(cv.toSeq))) +
-              lit(seqSelfDot(cv))
-            struct(lit(s).as("subspace"), lit(c).as("code"),
-              floor(t * lit(1e6) + lit(0.5)).cast("long").as("t_micro"))
-          }
-        }
-        qL.select(col("query_id"), explode(array(entries: _*)).as("e"))
-          .select(col("query_id"), col("e.subspace").as("subspace"),
-            col("e.code").as("code"), col("e.t_micro").as("t_micro"))
-      } else {
-        import sp.implicits._
-        val cbRows = for (s <- 0 until m; c <- 0 until ksub) yield {
-          val cv = pqCodebook.map(f => f(s, c))
-            .getOrElse(pqCentroidVec(s, c, dsub))
-          require(cv.length == dsub,
-            s"PQ codebook entry ($s,$c) carries ${cv.length} dims, expected $dsub")
-          (s, c, cv.toSeq, seqSelfDot(cv))
-        }
-        val cb = cbRows.toDF("subspace", "code", "cv", "cdot")
-        val sub = slice(col("qv"), col("subspace") * lit(dsub) + lit(1),
-          lit(dsub))
-        val t = (dot(sp, sub, sub) - lit(2.0) * dot(sp, sub, col("cv"))) +
-          col("cdot")
-        qL.crossJoin(broadcast(cb))
-          .select(col("query_id"), col("subspace"), col("code"),
-            floor(t * lit(1e6) + lit(0.5)).cast("long").as("t_micro"))
-      }
-    // PROBE-CELL PUSHDOWN (r13): the union of probed cells is bounded
-    // by min(nprobe·N_q, centroids) ≤ the 4096 centroid cap — collect
-    // it and filter the index SCAN before the join, so the `cell IN`
-    // predicate reaches the parquet reader as row-group min/max
-    // skipping (the code table is sortBy(cell)) and, on a bucketed
-    // open, bucket pruning. The join alone can never prune the scan:
-    // probes are data, and a data-dependent join reads everything.
-    // Results are unchanged (the filter keeps a superset of what the
-    // join keeps); the serve-path win is reading nprobe·N/K codes
-    // instead of all N·m — which is the entire point of IVF. Both the
-    // cell list and the joined probe frame come from the ONE driver
-    // ranking above.
-    val probeCells: Seq[Any] =
-      probePairs.map(p => Int.box(p._2)).distinct
-    val pruned = index.filter(col("cell").isin(probeCells.toIndexedSeq: _*))
-    // ONE exchange for agg + window: hash-distributing the candidate
-    // rows by query_id alone satisfies BOTH the (query_id, vec_id)
-    // aggregation (a partitioning on a subset of the grouping keys
-    // colocates every group) and the top-k window's query_id
-    // requirement — the default plan paid two exchanges (agg on the
-    // pair key, then window re-shuffling on query_id) plus an AQE
-    // stage boundary between them. Serving batches bound the shuffle
-    // either way (≤ N_q·nprobe·(N/K)·m candidate rows).
-    // min(prank) is exact, not a choice: one cell per vec_id, so every
-    // joined row of a (query, vec) group carries the same prank
-    pruned.join(broadcast(probesL), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(table), Seq("query_id", "subspace", "code"))
-      .select(col("query_id"), col("vec_id"), col("t_micro"), col("prank"))
-      .repartition(col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("t_micro")).as("adc_micro"), min(col("prank")).as("prank"))
-  }
-
   def ivfPqTopK(vectors: DataFrame, idCol: String, vecCol: String,
                 dims: Int, m: Int, ksub: Int, centroids: Int, nprobe: Int,
-                k: Int, queryPred: Column): DataFrame = {
-    require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
-    val sp = vectors.sparkSession
-    val dsub = dims / m
-    val cents = (0 until centroids).map(c => centroidVec(c, dims)).toArray
-    // index build: coarse cell + m PQ codes per vector, materialized once
-    val cells = assignCells(vectors, idCol, vecCol, cents)
-      .select(col("vec_id"), col("v"), col("vn"), col("ccos"), col("cell"))
-      .localCheckpoint(true)
-    val codes = pqAudit(cells, "vec_id", "v", dims, m, ksub)
-      .join(cells.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      .select(col("vec_id"), col("cell"), col("subspace"), col("code"))
-    // probe list: per query, the nprobe best cells by centroid cosine
-    val q = cells.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        posexplode(col("ccos")).as(Seq("pcell", "pcos")))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("pcell"))
-    val probes = q.withColumn("prank", row_number().over(wProbe))
-      .filter(col("prank") <= nprobe)
-      .select(col("query_id"), col("pcell").as("cell"))
-    // per-query ADC distance tables (the pqAdcTopK construction)
-    val qv = cells.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val entries = (0 until m).flatMap { s =>
-      val sub = slice(col("qv"), s * dsub + 1, dsub)
-      val aa = dot(sp, sub, sub)
-      (0 until ksub).map { c =>
-        val cv = pqCentroidVec(s, c, dsub)
-        val t = (aa - lit(2.0) * dot(sp, sub, typedLit(cv.toSeq))) +
-          lit(seqSelfDot(cv))
-        struct(lit(s).as("subspace"), lit(c).as("code"),
-          floor(t * lit(1e6) + lit(0.5)).cast("long").as("t_micro"))
-      }
-    }
-    val table = qv.select(col("query_id"), explode(array(entries: _*)).as("e"))
-      .select(col("query_id"), col("e.subspace").as("subspace"),
-        col("e.code").as("code"), col("e.t_micro").as("t_micro"))
-    // cell-pruned ADC: only codes in a query's probed cells are scored
-    val adc = codes.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(table), Seq("query_id", "subspace", "code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("t_micro")).as("adc_micro"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_micro"), col("vec_id"))
-    adc.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc_micro"), col("rank"))
-  }
+                k: Int, queryPred: Column): DataFrame =
+    adcTopK(adcCandidates(vectors, idCol, vecCol, dims, m, ksub,
+      (0 until centroids).map(c => centroidVec(c, dims)).toArray,
+      (s, c) => pqCentroidVec(s, c, dims / m), residual = false, nprobe,
+      queryPred), k)
 
   /** IVF-PQ RECALL-vs-NPROBE CURVE (VERDICT r12 #5 — the tuning-
     * evidence row q207's composition was missing, the [[ivfRecallCurve]]
@@ -1553,17 +1328,12 @@ object Similarity {
     * serving path loses end to end, the number a deployment reads
     * before choosing its probe budget.
     *
-    * Cost shape: ONE brute-force truth pass + ONE [[ivfPqIndex]] build
-    * (both checkpointed — they are the expensive terms and every sweep
-    * point reads them), then one [[ivfPqProbe]] per sweep point over
-    * the SHARED index (the q207 serve plan: codes join a BROADCAST
-    * probe list and BROADCAST per-query distance tables — nprobe·N/K
-    * codes scored per query, never N·N_q; probe-vs-one-shot parity is
-    * spec-pinned, so the shared build changes nothing but wall time).
-    * Per-point results are |queries|×k-bounded, the driver collects
-    * |nprobes| summary rows. ADC ties break by vec_id and the truth
-    * set is engine-exact (rounded cosine + id tie-break), so recall is
-    * an integer ratio.
+    * Cost shape: ONE brute-force truth pass (checkpointed) + ONE
+    * [[adcCandidates]] pass at max(nprobes) — each sweep point is a
+    * prank-slice of it, so no point re-encodes or re-scans the codes;
+    * all hit counts collect in ONE job ([[sweepHits]]). ADC ties break
+    * by vec_id and the truth set is engine-exact (rounded cosine + id
+    * tie-break), so recall is an integer ratio.
     */
   def ivfPqRecallCurve(vectors: DataFrame, idCol: String, vecCol: String,
                        dims: Int, m: Int, ksub: Int, centroids: Int,
@@ -1574,17 +1344,20 @@ object Similarity {
     val truth = bruteForceTopK(vectors, queries, idCol, vecCol, k)
       .select(col("query_id"), col("vec_id"))
       .localCheckpoint(true)
-    val idx = ivfPqIndex(vectors, idCol, vecCol, dims, m, ksub, centroids)
-      .localCheckpoint(true)
     val nq = queries.count()
-    // r19 sweep-share: ONE probe pass at max(nprobes) with prank
-    // attached (one driver collect instead of one per point), each
-    // sweep point a prank-slice of the checkpointed candidates, all
-    // hit counts in ONE job — see ivfPqProbeCandidates.
-    val cand = ivfPqProbeCandidates(idx, queries, idCol, vecCol, dims, m,
-      ksub, centroids, nprobes.max)
-    val hitsByNp = sweepHits(cand, truth, nprobes, k)
-    import vectors.sparkSession.implicits._
+    val cand = adcCandidates(vectors, idCol, vecCol, dims, m, ksub,
+      (0 until centroids).map(c => centroidVec(c, dims)).toArray,
+      (s, c) => pqCentroidVec(s, c, dims / m), residual = false,
+      nprobes.max, queryPred)
+    recallTable(vectors.sparkSession, nprobes, nq, k,
+      sweepHits(cand, truth, nprobes, k))
+  }
+
+  /** The (nprobe, n_queries, hits, possible, recall_micro) rows of a
+    * recall sweep from its per-point hit counts. */
+  private def recallTable(sp: SparkSession, nprobes: Seq[Int], nq: Long,
+                          k: Int, hitsByNp: Map[Int, Long]): DataFrame = {
+    import sp.implicits._
     nprobes.map { np =>
       val hits = hitsByNp.getOrElse(np, 0L)
       (np, nq, hits, nq * k,
@@ -1636,19 +1409,7 @@ object Similarity {
     * PQ index payload, ready to write partitioned alongside the ids.
     */
   def pqAudit(vectors: DataFrame, idCol: String, vecCol: String,
-              dims: Int, m: Int, ksub: Int): DataFrame =
-    pqAuditWith(vectors, idCol, vecCol, dims, m, ksub,
-      (s, c) => pqCentroidVec(s, c, dims / m))
-
-  /** [[pqAudit]] generalized over the sub-codebook source — the shared
-    * encode kernel of the one-shot index build (formula codebooks) and
-    * the streaming index-maintenance tick (codebooks LOADED from the
-    * persisted artifact, so the tick encodes through exactly what was
-    * written to disk). */
-  private[graft] def pqAuditWith(vectors: DataFrame, idCol: String,
-                                 vecCol: String, dims: Int, m: Int,
-                                 ksub: Int,
-                                 cb: (Int, Int) => Array[Double]): DataFrame = {
+              dims: Int, m: Int, ksub: Int): DataFrame = {
     require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
     require(ksub >= 1, "ksub must be >= 1")
     val sp = vectors.sparkSession
@@ -1660,28 +1421,10 @@ object Similarity {
     vectors.select(col(idCol).as("vec_id"),
         col(vecCol).cast("array<double>").as("v"))
       .select(col("vec_id"),
-        explode(pqEncodeCol(sp, col("v"), zeros, m, ksub, dsub, cb)).as("p"))
+        explode(pqEncodeCol(sp, col("v"), zeros, m, ksub, dsub,
+          (s, c) => pqCentroidVec(s, c, dsub))).as("p"))
       .select(col("vec_id"), col("p.subspace").as("subspace"),
         col("p.code").as("code"), col("p.sse_micro").as("sse_micro"))
-  }
-
-  /** Encode vectors into IVF-PQ code rows (vec_id, cell, subspace,
-    * code) through EXPLICIT codebooks — the serve-side quantizers
-    * applied to corpus rows, the append kernel of the streaming
-    * index-maintenance tick ([[graft.tools.IvfPqBuild]] `ingesttick`).
-    * With the formula codebooks this is exactly [[ivfPqIndex]], so a
-    * tick-grown index is bit-identical to a one-shot build over the
-    * union (StreamingSpec pins it). */
-  def ivfPqEncode(vectors: DataFrame, idCol: String, vecCol: String,
-                  dims: Int, m: Int, ksub: Int,
-                  cents: Array[Array[Double]],
-                  pqCodebook: (Int, Int) => Array[Double]): DataFrame = {
-    val cells = assignCells(vectors, idCol, vecCol, cents)
-      .select(col("vec_id"), col("v"), col("cell"))
-      .localCheckpoint(true)
-    pqAuditWith(cells, "vec_id", "v", dims, m, ksub, pqCodebook)
-      .join(cells.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      .select(col("vec_id"), col("cell"), col("subspace"), col("code"))
   }
 
   // ------------------------------------------------------------------
@@ -1816,163 +1559,27 @@ object Similarity {
     cb
   }
 
-  /** Encode vectors into RESIDUAL IVF-PQ code rows (vec_id, cell,
-    * subspace, code): coarse-assign, subtract the cell centroid, then
-    * per-subspace argmin against explicit (usually trained) residual
-    * codebooks — [[ivfPqEncode]]'s paper-faithful sibling, the encode
-    * kernel of a retrained artifact ([[graft.tools.IvfPqBuild]]
-    * `retrain`/`ingesttick`). Map-only after the one assignment pass. */
-  def ivfPqEncodeResidual(vectors: DataFrame, idCol: String, vecCol: String,
-                          dims: Int, m: Int, ksub: Int,
-                          cents: Array[Array[Double]],
-                          pqCb: (Int, Int) => Array[Double]): DataFrame = {
-    require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
-    val sp = vectors.sparkSession
-    val dsub = dims / m
-    assignCells(vectors, idCol, vecCol, cents)
-      .select(col("vec_id"), col("v"), col("cell"))
-      .join(broadcast(centroidDf(sp, cents)), Seq("cell"))
-      .select(col("vec_id"), col("cell"),
-        explode(pqEncodeCol(sp, col("v"), col("ccv"), m, ksub, dsub,
-          pqCb)).as("p"))
-      .select(col("vec_id"), col("cell"), col("p.subspace").as("subspace"),
-        col("p.code").as("code"))
-  }
-
   /** RESIDUAL IVFADC top-k (Jégou et al. 2011 as published): coarse
-    * cell pruning + ADC over RESIDUAL codes. The distance table is
-    * per-(query, PROBED CELL) — the residual of the query differs per
-    * probed cell (r_q = q − centroid(cell)), which is the structural
-    * difference from the raw-subvector [[ivfPqTopK]] (whose table is
-    * per-query only). Table size is N_q·nprobe·m·ksub rows — still
-    * broadcast-bounded (nprobe ≤ C ≤ the 4096 centroid cap).
-    *
-    * Scale shape: identical to [[ivfPqTopK]] — codes join ONE broadcast
-    * table (the (cell) key restricts candidates to probed cells AND
-    * selects the right residual table in the same equi-join), partial
-    * agg before the (query_id, vec_id) exchange, WindowGroupLimit rank.
+    * cell pruning + ADC over RESIDUAL codes against explicit (usually
+    * trained) codebooks. The one structural difference from the raw
+    * [[ivfPqTopK]] is the base both the codes and the distance table
+    * subtract: the cell's centroid instead of zero, so a query's table
+    * differs per probed cell (r_q = q − centroid(cell)). Same
+    * [[adcCandidates]] plan.
     */
   def ivfPqResidualTopK(vectors: DataFrame, idCol: String, vecCol: String,
                         dims: Int, m: Int, ksub: Int,
                         cents: Array[Array[Double]],
                         pqCb: (Int, Int) => Array[Double],
-                        nprobe: Int, k: Int, queryPred: Column): DataFrame = {
-    val cells = assignCells(vectors, idCol, vecCol, cents)
-      .select(col("vec_id"), col("v"), col("ccos"), col("cell"))
-      .localCheckpoint(true)
-    val codes = ivfPqEncodeResidual(
-      cells.select(col("vec_id"), col("v")), "vec_id", "v",
-      dims, m, ksub, cents, pqCb)
-    residualAdcTopK(cells, codes, dims, m, ksub, cents, pqCb, nprobe, k,
-      queryPred)
-  }
-
-  /** The probe half of the residual IVFADC over PREBUILT cells + codes
-    * — shared by the one-shot [[ivfPqResidualTopK]] and the recall
-    * sweep (which builds the index once and probes per sweep point —
-    * re-encoding N·m codes per point would make the sweep
-    * build-dominated for no information). */
-  private def residualAdcTopK(cells: DataFrame, codes: DataFrame,
-                              dims: Int, m: Int, ksub: Int,
-                              cents: Array[Array[Double]],
-                              pqCb: (Int, Int) => Array[Double],
-                              nprobe: Int, k: Int,
-                              queryPred: Column): DataFrame = {
-    val adc = residualAdcCandidates(cells, codes, dims, m, ksub, cents,
-      pqCb, nprobe, queryPred)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_micro"), col("vec_id"))
-    adc.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc_micro"), col("rank"))
-  }
-
-  /** Residual-ADC candidate scores at probe width `npMax`, each
-    * candidate tagged with `prank` — the probe rank of ITS cell for
-    * that query (r19, guide §2.4 "remove shuffles outright"): a
-    * vector's cell has ONE fixed rank in a query's coarse ordering, so
-    * the candidate set at any nprobe ≤ npMax is EXACTLY the prank ≤
-    * nprobe slice of this frame, and the ADC sum does not depend on
-    * nprobe at all. The recall sweeps exploit that: ONE codes scan +
-    * ONE broadcast-table join at npMax replaces one full probe per
-    * sweep point (the r18 shape paid |nprobes| scans of the code table
-    * — at 100 TB the dominant term of the sweep, multiplied by the
-    * sweep length for no information).
-    */
-  private def residualAdcCandidates(cells: DataFrame, codes: DataFrame,
-                                    dims: Int, m: Int, ksub: Int,
-                                    cents: Array[Array[Double]],
-                                    pqCb: (Int, Int) => Array[Double],
-                                    npMax: Int,
-                                    queryPred: Column): DataFrame = {
-    require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
-    val sp = cells.sparkSession
-    import sp.implicits._
-    val dsub = dims / m
-    // probe list: per query, the npMax best cells by centroid cosine
-    // (the coarse ranking is unchanged from the raw-PQ path); prank is
-    // carried so sweep points can slice the shared candidate frame
-    val q = cells.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        posexplode(col("ccos")).as(Seq("pcell", "pcos")))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("pcell"))
-    val probes = q.withColumn("prank", row_number().over(wProbe))
-      .filter(col("prank") <= npMax)
-      .select(col("query_id"), col("pcell").as("cell"), col("prank"))
-    // per-(query, probed cell) residual distance tables
-    val cbDf = cents.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
-      .toDF("cell", "ccv")
-    val qv = cells.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val qcells = probes.join(qv, Seq("query_id"))
-      .join(broadcast(cbDf), Seq("cell"))
-    val entries = (0 until m).flatMap { s =>
-      val rq = zip_with(slice(col("qv"), s * dsub + 1, dsub),
-        slice(col("ccv"), s * dsub + 1, dsub), (a, b) => a - b)
-      val aa = dot(sp, rq, rq)
-      (0 until ksub).map { c =>
-        val cv = pqCb(s, c)
-        require(cv.length == dsub,
-          s"PQ codebook entry ($s,$c) carries ${cv.length} dims, expected $dsub")
-        val t = (aa - lit(2.0) * dot(sp, rq, typedLit(cv.toSeq))) +
-          lit(seqSelfDot(cv))
-        struct(lit(s).as("subspace"), lit(c).as("code"),
-          floor(t * lit(1e6) + lit(0.5)).cast("long").as("t_micro"))
-      }
-    }
-    val table = qcells.select(col("query_id"), col("cell"), col("prank"),
-        explode(array(entries: _*)).as("e"))
-      .select(col("query_id"), col("cell"), col("prank"),
-        col("e.subspace").as("subspace"),
-        col("e.code").as("code"), col("e.t_micro").as("t_micro"))
-    // ONE broadcast join does cell pruning AND table lookup: the table
-    // only carries (query, probed-cell) rows, so matching on cell
-    // restricts candidates to probed cells with no separate probes join.
-    // min(prank) is exact, not a choice: a vec_id lives in one cell, so
-    // every joined row of a (query, vec) group carries the same prank.
-    codes.join(broadcast(table), Seq("cell", "subspace", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("t_micro")).as("adc_micro"), min(col("prank")).as("prank"))
-  }
+                        nprobe: Int, k: Int, queryPred: Column): DataFrame =
+    adcTopK(adcCandidates(vectors, idCol, vecCol, dims, m, ksub, cents,
+      pqCb, residual = true, nprobe, queryPred), k)
 
   /** Probe an ALREADY-BUILT residual IVF-PQ index with external
-    * raw-vector queries — the serve half for a RETRAINED artifact
-    * ([[graft.tools.IvfPqBuild]] `retrain` writes encoding=residual;
-    * its probe/serve/tick paths dispatch here). Same driver-bounded
-    * design as [[ivfPqProbe]]: ONE guarded collect (the serve-sized
-    * cap), driver probe ranking (java.lang.Double.compare — Spark's
-    * physical double order), LocalRelation re-entry, probe-cell scan
-    * pushdown, ONE exchange for agg + rank. The residual difference is
-    * the distance table: per (query, PROBED CELL), t(s,c) =
-    * ‖(q − c_cell)_s − cv_sc‖², computed DRIVER-side
-    * (N_q·nprobe·m·ksub values — trivially bounded by the same cap)
-    * with the exact kernel arithmetic (sequential index-order dot
-    * folds, the (aa − 2ab) + cc association, micro snap), so results
-    * are bit-identical to the distributed [[ivfPqResidualTopK]] when
-    * the queries are corpus rows (spec pins it), and the compiled
-    * answer plan is batch-invariant (table rows are DATA, not plan).
+    * raw-vector queries — [[ivfPqProbe]]'s residual sibling, through the
+    * same [[ivfPqServe]]; results are bit-identical to the distributed
+    * [[ivfPqResidualTopK]] when the queries are corpus rows (spec pins
+    * it).
     */
   def ivfPqResidualProbe(index: DataFrame, queries: DataFrame, idCol: String,
                          vecCol: String, dims: Int, m: Int, ksub: Int,
@@ -1980,85 +1587,229 @@ object Similarity {
                          coarseCodebook: Array[Array[Double]],
                          pqCodebook: (Int, Int) => Array[Double],
                          collectBudgetBytes: Long = ProbeCollectBudgetBytes): DataFrame = {
+    require(coarseCodebook.length == centroids,
+      s"coarse codebook carries ${coarseCodebook.length} centroids, expected $centroids")
+    ivfPqServe(index, queries, idCol, vecCol, dims, m, ksub, nprobe, k,
+      coarseCodebook, pqCodebook, residual = true, collectBudgetBytes)
+  }
+
+  // ------------------------------------------------------------------
+  // THE IVFADC CORE. Raw and residual PQ, one-shot and serve, share one
+  // encoder, one distance table and one scorer; they differ only in the
+  // base subtracted before quantizing (zero or the cell centroid) and
+  // in the front end that yields each query's probed cells.
+  // ------------------------------------------------------------------
+
+  /** `df` (carrying `cell`) plus `ccv`, the base the residual encoding
+    * subtracts: the cell's coarse centroid (a broadcast (cell, ccv)
+    * join), or for raw PQ a zeros literal — IEEE x − 0.0 ≡ x bitwise, so
+    * raw codes and distances equal the plain-subvector forms. */
+  private def withBase(df: DataFrame, cents: Array[Array[Double]],
+                       residual: Boolean): DataFrame =
+    if (residual) df.join(broadcast(centroidDf(df.sparkSession, cents)), Seq("cell"))
+    else df.withColumn("ccv", typedLit(Seq.fill(cents.head.length)(0.0)))
+
+  /** Encode vectors into IVF-PQ code rows (vec_id, cell, subspace, code)
+    * through explicit codebooks — the index build, the artifact tools'
+    * `build`/`retrain` and the streaming index-maintenance tick
+    * ([[graft.tools.IvfPqBuild]] `ingesttick`, which passes the
+    * artifact's encoding and LOADED codebooks). With the formula
+    * codebooks and `residual = false` this is exactly [[ivfPqIndex]], so
+    * a tick-grown index is bit-identical to a one-shot build over the
+    * union (StreamingSpec pins it). Map-only after the one assignment
+    * pass. */
+  private[graft] def ivfPqEncode(vectors: DataFrame, idCol: String,
+                                 vecCol: String, dims: Int, m: Int,
+                                 ksub: Int, cents: Array[Array[Double]],
+                                 pqCb: (Int, Int) => Array[Double],
+                                 residual: Boolean): DataFrame =
+    encodeCells(assignCells(vectors, idCol, vecCol, cents), dims, m, ksub,
+      cents, pqCb, residual)
+
+  /** [[ivfPqEncode]] over rows already assigned: (vec_id, v, cell). */
+  private def encodeCells(cells: DataFrame, dims: Int, m: Int, ksub: Int,
+                          cents: Array[Array[Double]],
+                          pqCb: (Int, Int) => Array[Double],
+                          residual: Boolean): DataFrame = {
     require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
-    val sp = index.sparkSession
-    val dsub = dims / m
-    val cents = coarseCodebook
-    require(cents.length == centroids,
-      s"coarse codebook carries ${cents.length} centroids, expected $centroids")
+    withBase(cells.select(col("vec_id"), col("v"), col("cell")), cents,
+        residual)
+      .select(col("vec_id"), col("cell"),
+        explode(pqEncodeCol(cells.sparkSession, col("v"), col("ccv"), m,
+          ksub, dims / m, pqCb)).as("p"))
+      .select(col("vec_id"), col("cell"), col("p.subspace").as("subspace"),
+        col("p.code").as("code"))
+  }
+
+  /** The one-shot and sweep front end: ADC candidate scores at probe
+    * width `npMax` for the `queryPred` rows of `vectors`. One coarse
+    * assignment (checkpointed — the encode and the probe list both read
+    * it), its codes, and the DISTRIBUTED probe list: per query, the
+    * `npMax` best cells by centroid cosine (a window over `ccos`; the
+    * query side never visits the driver).
+    *
+    * Each candidate carries `prank`, the probe rank of ITS cell for that
+    * query (r19, guide §2.4 "remove shuffles outright"): a vector's cell
+    * has ONE fixed rank in a query's coarse ordering, so the candidate
+    * set at any nprobe ≤ npMax is EXACTLY the prank ≤ nprobe slice of
+    * this frame, and the ADC sum does not depend on nprobe at all. The
+    * recall sweeps exploit that: ONE codes scan + ONE broadcast-table
+    * join at npMax replaces one full probe per sweep point.
+    */
+  private def adcCandidates(vectors: DataFrame, idCol: String,
+                            vecCol: String, dims: Int, m: Int, ksub: Int,
+                            cents: Array[Array[Double]],
+                            pqCb: (Int, Int) => Array[Double],
+                            residual: Boolean, npMax: Int,
+                            queryPred: Column): DataFrame = {
+    val cells = assignCells(vectors, idCol, vecCol, cents)
+      .select(col("vec_id"), col("v"), col("ccos"), col("cell"))
+      .localCheckpoint(true)
+    val wProbe = Window.partitionBy(col("query_id"))
+      .orderBy(col("pcos").desc, col("cell"))
+    val probes = cells.filter(queryPred)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"),
+        posexplode(col("ccos")).as(Seq("cell", "pcos")))
+      .withColumn("prank", row_number().over(wProbe))
+      .filter(col("prank") <= npMax)
+    adcScore(encodeCells(cells, dims, m, ksub, cents, pqCb, residual),
+      adcTable(probes, dims, m, ksub, cents, pqCb, residual))
+  }
+
+  /** The serve front end: top-k from an ALREADY-BUILT index (vec_id,
+    * cell, subspace, code) for EXTERNAL raw-vector queries — per query
+    * one C-dot cell ranking and one nprobe·m·ksub distance table, then
+    * ADC over the probed cells' codes only. [[ivfPqProbe]],
+    * [[ivfPqResidualProbe]] and the artifact tool's probe, serve and
+    * ingest-tick modes (which pass the artifact's encoding) all run it.
+    *
+    * QUERY-SIDE WORK IS DRIVER-BOUNDED (r13 #2): ONE job collects the
+    * kernel-assigned query rows, the probe ranking is a driver sort,
+    * and the probe rows re-enter the plan as a LocalRelation. The
+    * serve-sized contract is ENFORCED, not assumed (VERDICT r14 #4):
+    * the collect runs under the [[probeQueryCap]] cap — which counts
+    * the distance table the probe rows become, not just the collected
+    * rows — and a batch past it fails with a named error instead of a
+    * silent driver OOM (the refuse-loudly rule of Calibrate's bounded
+    * histogram collect). limit(cap+1) bounds driver memory DURING the
+    * collect; below the cap it equals an unlimited collect. So the scan
+    * filter, the probe rows and the tables all derive from ONE
+    * evaluation of the upstream (ADVICE r13), a warm serve batch runs
+    * this collect and the answer with no checkpoint between, and the
+    * compiled answer plan is batch-invariant. The ranking mirrors the
+    * distributed window's (pcos DESC, cell ASC): java.lang.Double.compare
+    * (Ordering.Double.TotalOrdering) IS Spark's physical double
+    * ordering (NaN greatest, -0.0 < 0.0), and the stable sort keeps
+    * equal cosines in cell order.
+    *
+    * PROBE-CELL PUSHDOWN (r13): the union of probed cells is bounded by
+    * min(nprobe·N_q, centroids) ≤ the 4096 centroid cap, so the index
+    * SCAN is filtered by `cell IN (...)` before the join — the predicate
+    * reaches the parquet reader as row-group min/max skipping (the code
+    * table is sortBy(cell)) and, on a bucketed open, bucket pruning. The
+    * join alone can never prune the scan: probes are data. The filter
+    * keeps a superset of what the join keeps, so results are unchanged.
+    */
+  private[graft] def ivfPqServe(index: DataFrame, queries: DataFrame,
+                                idCol: String, vecCol: String, dims: Int,
+                                m: Int, ksub: Int, nprobe: Int, k: Int,
+                                cents: Array[Array[Double]],
+                                pqCb: (Int, Int) => Array[Double],
+                                residual: Boolean,
+                                collectBudgetBytes: Long = ProbeCollectBudgetBytes): DataFrame = {
+    require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val q = assignCells(queries, idCol, vecCol, cents)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("ccos"))
-    val qCap = probeQueryCap(dims, centroids, collectBudgetBytes)
+    val qCap = probeQueryCap(dims, cents.length, collectBudgetBytes, nprobe,
+      m * ksub)
     val qData = q.limit(qCap + 1).collect()
     require(qData.length <= qCap,
-      s"ivfPqResidualProbe: query batch exceeds the serve-sized cap of " +
-        s"$qCap rows (${collectBudgetBytes >> 20} MiB driver budget at " +
-        s"dims=$dims, C=$centroids) — split the batch or use " +
-        "ivfPqResidualTopK, whose query side stays distributed")
-    // ONE pass over the collected rows yields probe list AND residual
-    // distance tables (both re-enter as LocalRelations)
-    val probePairs = scala.collection.mutable.ArrayBuffer.empty[(Any, Int)]
-    val tableRows = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.Row]
-    qData.foreach { r =>
-      if (!r.isNullAt(2)) {
-        val qid = r.get(0)
-        val qv = r.getSeq[Double](1).toArray
-        val ccos = r.getSeq[Double](2)
-        val ranked = ccos.indices.map(i => (i, ccos(i)))
-          .sortWith { case ((ia, xa), (ib, xb)) =>
-            val c = java.lang.Double.compare(xb, xa)
-            if (c != 0) c < 0 else ia < ib
-          }
-          .take(nprobe).map(_._1)
-        ranked.foreach { cell =>
-          probePairs += ((qid, cell))
-          val cv = cents(cell)
-          var s = 0
-          while (s < m) {
-            val rq = Array.tabulate(dsub)(i => qv(s * dsub + i) - cv(s * dsub + i))
-            val aa = seqSelfDot(rq)
-            var c = 0
-            while (c < ksub) {
-              val e = pqCodebook(s, c)
-              require(e.length == dsub,
-                s"PQ codebook entry ($s,$c) carries ${e.length} dims, expected $dsub")
-              val t = (aa - 2.0 * seqDot(rq, e)) + seqSelfDot(e)
-              tableRows += org.apache.spark.sql.Row(qid, cell, s, c,
-                math.floor(t * 1e6 + 0.5).toLong)
-              c += 1
-            }
-            s += 1
-          }
-        }
-      }
+      s"IVF-PQ serve: query batch exceeds the serve-sized cap of $qCap " +
+        s"rows (${collectBudgetBytes >> 20} MiB driver budget at " +
+        s"dims=$dims, C=${cents.length}, ${nprobe * m * ksub} distance-" +
+        "table rows per query) — split the batch (the serve loop's " +
+        "request granularity) or use the TopK face, whose query side " +
+        "stays distributed")
+    val probeRows = qData.toSeq.filterNot(_.isNullAt(2)).flatMap { r =>
+      val ccos = r.getSeq[Double](2)
+      ccos.indices.sortBy(ccos)(Ordering.Double.TotalOrdering.reverse)
+        .take(nprobe).zipWithIndex
+        .map { case (cell, rk) => Row(r.get(0), r.get(1), cell, rk + 1) }
     }
-    val qidField = q.schema.head
-    import org.apache.spark.sql.types._
-    val tableL = sp.createDataFrame(
-      java.util.Arrays.asList(tableRows.toSeq: _*),
-      StructType(Seq(
-        StructField("query_id", qidField.dataType, qidField.nullable),
+    val probes = index.sparkSession.createDataFrame(
+      java.util.Arrays.asList(probeRows: _*),
+      StructType(q.schema.take(2) ++ Seq(
         StructField("cell", IntegerType, nullable = false),
-        StructField("subspace", IntegerType, nullable = false),
-        StructField("code", IntegerType, nullable = false),
-        StructField("t_micro", LongType, nullable = false))))
-    // probe-cell pushdown (the ivfPqProbe doctrine): filter the scan so
-    // `cell IN (...)` reaches the parquet reader / bucket pruning
-    val probeCells: Seq[Any] = probePairs.map(p => Int.box(p._2)).distinct.toSeq
-    val pruned = index.filter(col("cell").isin(probeCells.toIndexedSeq: _*))
-    // the broadcast table join prunes to probed cells AND looks up the
-    // per-(query, cell) entries in one equi-join; one exchange serves
-    // both the pair agg and the top-k window
-    val adc = pruned.join(broadcast(tableL), Seq("cell", "subspace", "code"))
+        StructField("prank", IntegerType, nullable = false))))
+    val probedCells = probeRows.map(_.get(2)).distinct
+    adcTopK(adcScore(index.filter(col("cell").isin(probedCells: _*)),
+      adcTable(probes, dims, m, ksub, cents, pqCb, residual)), k)
+  }
+
+  /** THE distance table: for every probe row (query_id, qv, cell,
+    * prank), the m·ksub rows (query_id, cell, prank, subspace, code,
+    * t_micro) with t = ‖(q − base)ₛ − cvₛ꜀‖², base per [[withBase]].
+    *
+    * Built on the executors from a broadcast (subspace, code, cv, |cv|²)
+    * codebook frame cross-joined to the probe rows (VERDICT r13 #2): an
+    * m·ksub-literal expression tree made the warm serve loop
+    * PLANNING-bound (~2.4 s of each batch re-analyzing a fresh plan,
+    * SCALE.md §10), while this plan has a fixed shape whatever the
+    * batch holds. The arithmetic is the exhaustive [[pqAdcTopK]]'s and
+    * the oracle's: residual q − base once per probe row, then the
+    * index-order dot folds, the (aa − 2·q·c) + |c|² association and the
+    * micro snap — so every `adc_micro` is bit-identical to theirs.
+    */
+  private def adcTable(probes: DataFrame, dims: Int, m: Int, ksub: Int,
+                       cents: Array[Array[Double]],
+                       pqCb: (Int, Int) => Array[Double],
+                       residual: Boolean): DataFrame = {
+    val sp = probes.sparkSession
+    import sp.implicits._
+    val dsub = dims / m
+    val cb = cbMatrix(m, ksub, dsub, pqCb)
+    val cbDf = (for (s <- 0 until m; c <- 0 until ksub)
+      yield (s, c, cb(s)(c).toSeq, seqSelfDot(cb(s)(c))))
+      .toDF("subspace", "code", "cv", "cdot")
+    val sub = slice(col("rq"), col("subspace") * lit(dsub) + lit(1),
+      lit(dsub))
+    val t = (dot(sp, sub, sub) - lit(2.0) * dot(sp, sub, col("cv"))) +
+      col("cdot")
+    withBase(probes, cents, residual)
+      .select(col("query_id"), col("cell"), col("prank"),
+        zip_with(col("qv"), col("ccv"), (a, b) => a - b).as("rq"))
+      .crossJoin(broadcast(cbDf))
+      .select(col("query_id"), col("cell"), col("prank"), col("subspace"),
+        col("code"), floor(t * lit(1e6) + lit(0.5)).cast("long").as("t_micro"))
+  }
+
+  /** THE ADC sum: codes join the broadcast [[adcTable]] on (cell,
+    * subspace, code) — one equi-join restricts candidates to probed
+    * cells AND picks each query's table for that cell — each query's
+    * own vector is excluded, and the m looked-up terms sum per (query,
+    * vec). ONE exchange serves the sum and every downstream rank: rows
+    * hash-distributed by query_id alone satisfy the (query_id, vec_id)
+    * grouping (a partitioning on a subset of the grouping keys colocates
+    * every group) and the query_id windows of [[adcTopK]] and the
+    * sweeps. min(prank) is exact, not a choice: a vec_id lives in one
+    * cell, so every joined row of a (query, vec) group carries the same
+    * prank.
+    */
+  private def adcScore(codes: DataFrame, table: DataFrame): DataFrame =
+    codes.join(broadcast(table), Seq("cell", "subspace", "code"))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("t_micro"))
+      .select(col("query_id"), col("vec_id"), col("t_micro"), col("prank"))
       .repartition(col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("t_micro")).as("adc_micro"))
+      .agg(sum(col("t_micro")).as("adc_micro"), min(col("prank")).as("prank"))
+
+  /** Per query, the k lowest ADC distances (ties to the lower vec_id). */
+  private def adcTopK(cand: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_micro"), col("vec_id"))
-    adc.withColumn("rank", row_number().over(w))
+    cand.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id"), col("adc_micro"), col("rank"))
   }
@@ -2106,30 +1857,15 @@ object Similarity {
       centroids, coarseIters)
     val pq = trainPqResidualMatrix(vectors, idCol, vecCol, dims, m, ksub,
       cents, pqIters)
-    // ONE assignment + ONE encode shared across the sweep (both
-    // checkpointed — they are the expensive terms; each point re-runs
-    // only the probe half, the ivfPqRecallCurve discipline)
-    val cells = assignCells(vectors, idCol, vecCol, cents)
-      .select(col("vec_id"), col("v"), col("ccos"), col("cell"))
-      .localCheckpoint(true)
-    val codes = ivfPqEncodeResidual(
-        cells.select(col("vec_id"), col("v")), "vec_id", "v",
-        dims, m, ksub, cents, (s, c) => pq(s)(c))
-      .localCheckpoint(true)
     val nq = queries.count()
     // r19 sweep-share: ONE candidate pass at max(nprobes) with prank
-    // attached; each sweep point is a prank-slice of the checkpointed
-    // frame (bit-identical to a per-point probe — residualAdcCandidates
-    // scaladoc), and all |nprobes| hit counts collect in ONE job.
-    val cand = residualAdcCandidates(cells, codes, dims, m, ksub, cents,
-      (s, c) => pq(s)(c), nprobes.max, queryPred)
-    val hitsByNp = sweepHits(cand, truth, nprobes, k)
-    import vectors.sparkSession.implicits._
-    nprobes.map { np =>
-      val hits = hitsByNp.getOrElse(np, 0L)
-      (np, nq, hits, nq * k,
-        math.floor(hits.toDouble * 1e6 / (nq * k).toDouble + 0.5).toLong)
-    }.toDF("nprobe", "n_queries", "hits", "possible", "recall_micro")
+    // attached; each sweep point is a prank-slice of it (bit-identical
+    // to a per-point probe — adcCandidates scaladoc), and all |nprobes|
+    // hit counts collect in ONE job.
+    val cand = adcCandidates(vectors, idCol, vecCol, dims, m, ksub, cents,
+      (s, c) => pq(s)(c), residual = true, nprobes.max, queryPred)
+    recallTable(vectors.sparkSession, nprobes, nq, k,
+      sweepHits(cand, truth, nprobes, k))
   }
 
   /** Top-k rows of EVERY sweep point in ONE window pass, tagged with
@@ -2260,8 +1996,8 @@ object Similarity {
     * makes every candidate a wider probe admits ORDERABLE, so the two
     * knobs compose — this curve is non-decreasing AND dominates q219's
     * pointwise. Cost discipline is the sibling's: ONE truth pass, ONE
-    * training, ONE encode shared across points (checkpointed); each
-    * point pays the probe half plus a |queries|×R-bounded re-rank.
+    * training, ONE [[adcCandidates]] pass shared across points; each
+    * point adds a |queries|×R-bounded re-rank.
     */
   def ivfPqResidualRerankRecallCurve(vectors: DataFrame, idCol: String,
                                      vecCol: String, dims: Int, m: Int,
@@ -2281,13 +2017,6 @@ object Similarity {
       centroids, coarseIters)
     val pq = trainPqResidualMatrix(vectors, idCol, vecCol, dims, m, ksub,
       cents, pqIters)
-    val cells = assignCells(vectors, idCol, vecCol, cents)
-      .select(col("vec_id"), col("v"), col("ccos"), col("cell"))
-      .localCheckpoint(true)
-    val codes = ivfPqEncodeResidual(
-        cells.select(col("vec_id"), col("v")), "vec_id", "v",
-        dims, m, ksub, cents, (s, c) => pq(s)(c))
-      .localCheckpoint(true)
     val nq = queries.count()
     // r19 sweep-share (the q219 discipline): ONE ADC candidate pass at
     // max(nprobes) with prank attached; each point's shortlist is the
@@ -2296,8 +2025,8 @@ object Similarity {
     // vectors (the shortlists union with an np tag and the re-rank
     // window partitions on (np, query) — previously the raw-vector
     // table was scanned once per sweep point, the 100 TB term).
-    val cand = residualAdcCandidates(cells, codes, dims, m, ksub, cents,
-      (s, c) => pq(s)(c), nprobes.max, queryPred)
+    val cand = adcCandidates(vectors, idCol, vecCol, dims, m, ksub, cents,
+      (s, c) => pq(s)(c), residual = true, nprobes.max, queryPred)
     val shortAll = sweepTopK(cand, "adc_micro", scoreAsc = true,
       nprobes, shortlist)
     val got = rerankExactTagged(vectors, queries, idCol, vecCol,
@@ -2305,12 +2034,7 @@ object Similarity {
     val hitsByNp = got.join(truth, Seq("query_id", "vec_id"), "left_semi")
       .groupBy(col("np")).agg(count(lit(1)).as("hits"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    import vectors.sparkSession.implicits._
-    nprobes.map { np =>
-      val hits = hitsByNp.getOrElse(np, 0L)
-      (np, nq, hits, nq * k,
-        math.floor(hits.toDouble * 1e6 / (nq * k).toDouble + 0.5).toLong)
-    }.toDF("nprobe", "n_queries", "hits", "possible", "recall_micro")
+    recallTable(vectors.sparkSession, nprobes, nq, k, hitsByNp)
   }
 
   /** [[rerankExactWith]] over an np-TAGGED shortlist — the sweep's

@@ -1,5 +1,7 @@
 package graft.storage
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -90,13 +92,20 @@ object ParquetCompact {
     * in, and refresh the session's cached listings of `dir` once.
     * `dir` stays canonical until `write` returns, so `write` may read
     * it (a fold of the standing rows needs no checkpoint); a `write`
-    * that throws leaves `dir` untouched. */
+    * that throws leaves `dir` untouched, and by the time its exception
+    * reaches the caller no task of its jobs is still running and
+    * `__compact` is gone (see [[settled]]), so an immediate retry
+    * starts clean. */
   def replace(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
     recover(spark, dir)
     val fs = Fs.get(spark, dir)
     val (p, tmp, old) = (new Path(dir), rewritePath(dir), asidePath(dir))
     sweepStrays(fs, tmp, old)
-    write(tmp.toString)
+    settled(spark) {
+      write(tmp.toString)
+    } {
+      fs.delete(tmp, true)
+    }
     if (fs.exists(p))
       require(fs.rename(p, old),
         s"replace swap failed: $p -> $old (nothing moved; the " +
@@ -108,6 +117,73 @@ object ParquetCompact {
         s"${old.getName}; the next read recovers it)")
     fs.delete(old, true)
     spark.catalog.refreshByPath(dir)
+  }
+
+  /** Run `body`; if it throws, stop the jobs it started, wait until none
+    * of their tasks is running, run `cleanup` and rethrow. Spark fails a
+    * job as soon as one task fails while the job's other tasks run on (a
+    * killed task stops at its next interrupt check or row check), and
+    * such a late write task recreates `__compact/_temporary` after the
+    * next writer's sweep, failing an immediate retry with
+    * PATH_ALREADY_EXISTS. The body's jobs carry a per-call job tag, so
+    * they can be cancelled and their tasks counted by a listener; a
+    * one-task fence job, started after the cancel, ends only after every
+    * task those jobs launched has posted its start, and the wait is for
+    * the fence's end plus the end of every started task. The success
+    * path adds the tag and the listener for the duration of `body`: no
+    * job and no wait. */
+  private def settled(spark: SparkSession)(body: => Unit)(
+      cleanup: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-replace-${java.util.UUID.randomUUID()}"
+    val census = new TaskCensus(tag)
+    sc.addSparkListener(census)
+    sc.addJobTag(tag)
+    try body
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        sc.removeJobTag(tag)
+        sc.cancelJobsWithTag(tag)
+        sc.addJobTag(census.fenceTag)
+        try sc.parallelize(Seq(0), 1).foreach(_ => ())
+        finally sc.removeJobTag(census.fenceTag)
+        census.awaitIdle()
+        cleanup
+        throw e
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(census)
+    }
+  }
+
+  /** The running tasks of the jobs tagged `tag`, and the end of the job
+    * tagged [[fenceTag]] ([[settled]]). */
+  private final class TaskCensus(tag: String) extends SparkListener {
+    val fenceTag = s"$tag-fence"
+    private val stages = scala.collection.mutable.Set.empty[Int]
+    private val running = scala.collection.mutable.Set.empty[Long]
+    private var fenceJob = -1
+    private var fenced = false
+    private def tags(e: SparkListenerJobStart): Set[String] =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .fold(Set.empty[String])(_.split(",").toSet)
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val t = tags(e)
+      if (t(tag)) stages ++= e.stageIds
+      if (t(fenceTag)) fenceJob = e.jobId
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      if (e.jobId == fenceJob) { fenced = true; notifyAll() }
+    }
+    override def onTaskStart(e: SparkListenerTaskStart): Unit = synchronized {
+      if (stages(e.stageId)) running += e.taskInfo.taskId
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      if (running.remove(e.taskInfo.taskId)) notifyAll()
+    }
+    def awaitIdle(): Unit = synchronized {
+      while (!fenced || running.nonEmpty) wait()
+    }
   }
 
   /** Rewrite `dir` into ~`targetFiles` files when its census exceeds

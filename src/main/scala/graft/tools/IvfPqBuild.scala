@@ -25,8 +25,9 @@ import graft.streaming.StreamingIngest
   *  - `probe`: a NEW session re-registers the bucketed DDL (the bucket
   *    spec lives in the catalog, not the files — [[Catalog.open]]),
   *    loads BOTH codebooks from the artifact, and serves external
-  *    raw-vector queries through [[Similarity.ivfPqProbe]] with zero
-  *    corpus-side assignment or encode work at query time.
+  *    raw-vector queries through [[Similarity.ivfPqServe]] (passing the
+  *    artifact's encoding) with zero corpus-side assignment or encode
+  *    work at query time.
   *
   * SimilaritySpec pins: reopened-probe parity against the one-shot
   * `ivfPqTopK` (same micro-snapped ADC sums, same tie-breaks), bucket
@@ -64,8 +65,10 @@ object IvfPqBuild {
   /** `encoding` is the quantization family the codes were written
     * under: "raw" (formula codebooks over raw subvectors — `build`) or
     * "residual" (trained codebooks over x − q1(x) — `retrain`, the
-    * published IVFADC). Every read path dispatches on it; artifacts
-    * from before the column read as "raw". */
+    * published IVFADC). Encode and probe both pass it to Similarity
+    * ([[Similarity.ivfPqEncode]], [[Similarity.ivfPqServe]]), so a tick
+    * can never append raw-encoded codes into a residual-encoded table;
+    * artifacts from before the column read as "raw". */
   case class Params(dims: Int, m: Int, ksub: Int, centroids: Int,
                     buckets: Int, encoding: String)
 
@@ -74,44 +77,10 @@ object IvfPqBuild {
     val r = df.head()
     val enc = if (df.columns.contains("encoding"))
       r.getAs[String]("encoding") else "raw"
+    require(enc == "raw" || enc == "residual", s"unknown index encoding '$enc'")
     Params(r.getAs[Int]("dims"), r.getAs[Int]("m"), r.getAs[Int]("ksub"),
       r.getAs[Int]("centroids"), r.getAs[Int]("buckets"), enc)
   }
-
-  /** Encode through the artifact's quantization family — the ONE
-    * dispatch `build`/`retrain`/`ingestTick` share, so a tick can never
-    * append raw-encoded codes into a residual-encoded table. */
-  private def encodeFor(encoding: String, vecs: DataFrame, dims: Int,
-                        m: Int, ksub: Int, cents: Array[Array[Double]],
-                        pqCb: (Int, Int) => Array[Double]): DataFrame =
-    encoding match {
-      case "raw" =>
-        Similarity.ivfPqEncode(vecs, "vec_id", "embedding", dims, m, ksub,
-          cents, pqCb)
-      case "residual" =>
-        Similarity.ivfPqEncodeResidual(vecs, "vec_id", "embedding", dims, m,
-          ksub, cents, pqCb)
-      case other => sys.error(s"unknown index encoding '$other'")
-    }
-
-  /** Probe through the artifact's quantization family (the serve-side
-    * twin of [[encodeFor]]). */
-  private def probeFor(encoding: String, index: DataFrame,
-                       queries: DataFrame, idCol: String, vecCol: String,
-                       p: Params, nprobe: Int, k: Int,
-                       cents: Array[Array[Double]],
-                       pqCb: (Int, Int) => Array[Double]): DataFrame =
-    encoding match {
-      case "raw" =>
-        Similarity.ivfPqProbe(index, queries, idCol, vecCol,
-          p.dims, p.m, p.ksub, p.centroids, nprobe, k,
-          coarseCodebook = Some(cents), pqCodebook = Some(pqCb))
-      case "residual" =>
-        Similarity.ivfPqResidualProbe(index, queries, idCol, vecCol,
-          p.dims, p.m, p.ksub, p.centroids, nprobe, k,
-          coarseCodebook = cents, pqCodebook = pqCb)
-      case other => sys.error(s"unknown index encoding '$other'")
-    }
 
   /** Encode + persist: bucketed code table, coarse centroids, PQ
     * codebooks, params — plus (VERDICT r13 #6) a FROZEN held-out eval
@@ -159,7 +128,7 @@ object IvfPqBuild {
     * all raws residually into a fresh bucketed table; both codebooks,
     * params (encoding=residual), a NEW training sample, the re-frozen
     * held-out eval set + truth + recall0 baseline, and a reset census
-    * all persist — after which ticks and probes dispatch on the
+    * all persist — after which ticks and probes run on the
     * residual encoding and the staleness guards measure against the
     * retrained baseline. Returns code rows written.
     */
@@ -201,7 +170,7 @@ object IvfPqBuild {
   }
 
   /** The shared persist tail of `build` and `retrain`: bucketed code
-    * table (encoded through [[encodeFor]]), both codebooks, params
+    * table (encoded through [[Similarity.ivfPqEncode]]), both codebooks, params
     * (with the encoding), the bounded md5-rank training sample, the
     * frozen held-out eval set + truth + recall0 baseline, and the
     * census. */
@@ -221,7 +190,8 @@ object IvfPqBuild {
     // this, every upstream task writes a sliver of every bucket and a
     // 512-partition encode shuffle fans out to task×bucket ≈ 11k tiny
     // files, taxing every later listing, scan, and append commit
-    Catalog.save(encodeFor(encoding, emb, dims, m, ksub, cents, pqCb)
+    Catalog.save(Similarity.ivfPqEncode(emb, "vec_id", "embedding", dims, m,
+        ksub, cents, pqCb, residual = encoding == "residual")
       .repartition(buckets, col("cell")), table, s"$outDir/index", buckets, "cell")
     Similarity.saveCentroids(spark, cents, s"$outDir/centroids.parquet")
     (for (s <- 0 until m; cc <- 0 until ksub)
@@ -291,8 +261,9 @@ object IvfPqBuild {
     val truth = spark.read.parquet(s"$outDir/heldout/truth")
       .filter(col("rank") <= k)
     val p = loadParams(spark, outDir)
-    val got = probeFor(p.encoding, index, queries, "vec_id", "embedding",
-      p, nprobe, k, cents, pqCb)
+    val got = Similarity.ivfPqServe(index, queries, "vec_id", "embedding",
+      p.dims, p.m, p.ksub, nprobe, k, cents, pqCb,
+      residual = p.encoding == "residual")
     val nq = queries.count()
     val hits = got.select(col("query_id"), col("vec_id"))
       .join(truth.select(col("query_id"), col("vec_id")),
@@ -354,8 +325,10 @@ object IvfPqBuild {
         val fresh = b.join(broadcast(indexed), Seq("vec_id"), "left_anti")
           .localCheckpoint(true)
         val appended = fresh.count()
-        Catalog.save(encodeFor(p.encoding, fresh, p.dims, p.m, p.ksub, cents,
-            (s, c) => pqCb((s, c))).repartition(p.buckets, col("cell")),
+        Catalog.save(Similarity.ivfPqEncode(fresh, "vec_id", "embedding",
+            p.dims, p.m, p.ksub, cents, (s, c) => pqCb((s, c)),
+            residual = p.encoding == "residual")
+            .repartition(p.buckets, col("cell")),
           table, s"$outDir/index", p.buckets, "cell", mode = "append")
         // staleness signal 1: the √N dial, against a MAINTAINED
         // vector census (`_meta`, the shared IndexMeta contract) —
@@ -538,7 +511,8 @@ object IvfPqBuild {
   }
 
   /** Serve top-k for `queries` from the persisted artifact: reopened
-    * bucketed codes + loaded codebooks, through [[Similarity.ivfPqProbe]].
+    * bucketed codes + loaded codebooks, through [[Similarity.ivfPqServe]]
+    * with the artifact's encoding.
     *
     * TWO-STAGE SERVING (VERDICT r16 #1): `rerank > 0` turns on the
     * standard exact second stage — ADC top-`rerank` shortlist through
@@ -557,8 +531,9 @@ object IvfPqBuild {
     val index = openIndex(spark, outDir)
     val cents = Similarity.loadCentroids(spark, s"$outDir/centroids.parquet")
     val pqCb = loadPqCodebook(spark, outDir)
-    val first = probeFor(p.encoding, index, queries, idCol, vecCol, p, nprobe,
-      if (rerank > 0) rerank else k, cents, (s, c) => pqCb((s, c)))
+    val first = Similarity.ivfPqServe(index, queries, idCol, vecCol, p.dims,
+      p.m, p.ksub, nprobe, if (rerank > 0) rerank else k, cents,
+      (s, c) => pqCb((s, c)), residual = p.encoding == "residual")
     if (rerank <= 0) first
     else {
       require(rerank >= k, s"rerank shortlist $rerank must be >= k=$k")
@@ -584,8 +559,8 @@ object IvfPqBuild {
     * The loop exits once `reqDir/stop` exists AND nothing is pending.
     * Returns the number of batches served.
     *
-    * Per batch the work is query-side only (cell ranking + m·ksub
-    * distance tables) plus the bucket-pruned ADC join — the artifact
+    * Per batch the work is query-side only (cell ranking + nprobe·m·ksub
+    * distance-table rows) plus the bucket-pruned ADC join — the artifact
     * is NOT re-opened per batch, which is exactly the §10 delta: the
     * 2.1–3.0 s steady-state there included a full re-open each rep.
     *
@@ -676,8 +651,9 @@ object IvfPqBuild {
       pending.foreach { d =>
         val t0 = System.nanoTime()
         val queries = spark.read.parquet(d.toString)
-        val first = probeFor(p.encoding, index, queries, idCol, vecCol, p,
-          nprobe, if (rerank > 0) rerank else k, cents, (s, c) => pqCb((s, c)))
+        val first = Similarity.ivfPqServe(index, queries, idCol, vecCol,
+          p.dims, p.m, p.ksub, nprobe, if (rerank > 0) rerank else k, cents,
+          (s, c) => pqCb((s, c)), residual = p.encoding == "residual")
         val answer =
           if (rerank <= 0) first
           else Similarity.rerankExactWith(raws, queries, idCol, vecCol,

@@ -44,6 +44,27 @@ class ParquetCompactSpec extends SparkSpec {
     assert(ids(fresh) === Set(0L, 1L, 2L))
   }
 
+  test("replace: a multi-task rewrite that throws while its other tasks " +
+      "still run returns with none of them running; an immediate retry " +
+      "writes the new rows and leaves no stray") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("replace-linger").toString + "/t"
+    spark.range(0, 100, 1, 4).write.parquet(dir)
+    ParquetCompactSpec.reset()
+    intercept[Exception](ParquetCompact.replace(spark, dir) { tmp =>
+      spark.range(0, 4, 1, 4).as[Long].map(ParquetCompactSpec.lingering)
+        .write.parquet(tmp)
+    })
+    assert(ParquetCompactSpec.started.get === 3,
+      "the three lingering tasks must have been running when task 0 raised")
+    assert(ParquetCompactSpec.running.get === 0,
+      "a failed replace must not return while tasks of its write still run")
+    ParquetCompact.replace(spark, dir)(spark.range(200, 210).write.parquet(_))
+    assert(ids(dir) === (200L until 210L).toSet)
+    assert(!Fs.exists(spark, s"${dir}__compact") &&
+      !Fs.exists(spark, s"${dir}__old"), "no stray may outlive the retry")
+  }
+
   test("replace: a fold that reads dir and replaces it gives the folded rows") {
     val dir = Files.createTempDirectory("replace-fold").toString + "/t"
     def fold(lo: Long): Unit = ParquetCompact.replace(spark, dir) { tmp =>
@@ -54,4 +75,33 @@ class ParquetCompactSpec extends SparkSpec {
     Seq(0L, 10L, 20L).foreach(fold)
     assert(ids(dir) === (0L until 30L).toSet)
   }
+}
+
+object ParquetCompactSpec {
+  val started = new java.util.concurrent.atomic.AtomicInteger
+  val running = new java.util.concurrent.atomic.AtomicInteger
+  @volatile private var othersStarted = new java.util.concurrent.CountDownLatch(3)
+
+  def reset(): Unit = {
+    started.set(0); running.set(0)
+    othersStarted = new java.util.concurrent.CountDownLatch(3)
+  }
+
+  /** The row of a 4-task write: task 0 raises once the other three are
+    * running, and they run on for two more seconds, deaf to the
+    * interrupt a cancelled SQL job sends (as a task blocked in I/O is). */
+  def lingering(id: Long): Long =
+    if (id == 0) {
+      othersStarted.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      throw new IllegalStateException("injected")
+    } else {
+      running.incrementAndGet(); started.incrementAndGet()
+      othersStarted.countDown()
+      val end = System.nanoTime() + 2000000000L
+      while (System.nanoTime() < end)
+        try Thread.sleep(math.max(1L, (end - System.nanoTime()) / 1000000L))
+        catch { case _: InterruptedException => }
+      running.decrementAndGet()
+      id
+    }
 }

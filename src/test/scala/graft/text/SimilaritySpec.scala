@@ -481,17 +481,6 @@ class SimilaritySpec extends SparkSpec {
       "embedding", dims = 64, m = 4, ksub = 8, centroids = 16, nprobe = 2,
       k = 10)
     assert(served.exceptAll(pruned).isEmpty && pruned.exceptAll(served).isEmpty)
-    // VERDICT r13 #2: the batch-invariant broadcast-table distance path
-    // (the default `served` above) and the literal expression-tree path
-    // are bit-identical — same slice, same index-order dot folds, same
-    // (aa − 2·q·c) + |c|² association, same micro snap; only the PLAN
-    // changes (a fixed-shape cross join vs an m·ksub-literal tree)
-    val servedLit = Similarity.ivfPqProbe(idx, emb.filter(qp), "vec_id",
-      "embedding", dims = 64, m = 4, ksub = 8, centroids = 16, nprobe = 2,
-      k = 10, literalDistanceTable = true)
-    assert(servedLit.exceptAll(served).isEmpty &&
-      served.exceptAll(servedLit).isEmpty,
-      "broadcast-table ADC must equal the literal distance-table ADC")
   }
 
   test("trained-residual IVFADC: recall curve is non-decreasing in nprobe and beats the raw-formula curve (VERDICT r14 #1)") {
@@ -595,6 +584,25 @@ class SimilaritySpec extends SparkSpec {
     }
     assert(e.getMessage.contains("serve-sized cap"),
       s"expected the named serve-sized-cap error, got: ${e.getMessage}")
+    // the cap counts the distance table too: at 2 MiB the collected rows
+    // alone admit 3276 queries, but 2000 queries × nprobe 2 × m·ksub 32
+    // table rows are past the budget — both encodings must refuse
+    val cents = (0 until 16).map(c => Similarity.centroidVec(c, 64)).toArray
+    val pqCb = (s: Int, c: Int) => Similarity.pqCentroidVec(s, c, 16)
+    assert(Similarity.probeQueryCap(64, 16, 2L << 20) > 2000)
+    Seq(
+      () => Similarity.ivfPqProbe(idx, big, "vec_id", "embedding",
+        dims = 64, m = 4, ksub = 8, centroids = 16, nprobe = 2, k = 3,
+        collectBudgetBytes = 2L << 20),
+      () => Similarity.ivfPqResidualProbe(idx, big, "vec_id", "embedding",
+        dims = 64, m = 4, ksub = 8, centroids = 16, nprobe = 2, k = 3,
+        coarseCodebook = cents, pqCodebook = pqCb,
+        collectBudgetBytes = 2L << 20)
+    ).foreach { probe =>
+      val t = intercept[IllegalArgumentException](probe().count())
+      assert(t.getMessage.contains("serve-sized cap"),
+        s"a past-budget distance table must fail with the named error, got: ${t.getMessage}")
+    }
     // the cap scales with the collected ROW WIDTH (dims + centroids
     // doubles): a √N-sized quantizer at a 2M corpus shrinks it ~18×
     // vs the floor-held shape — a fixed row cap would blow the budget
